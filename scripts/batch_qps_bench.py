@@ -109,7 +109,8 @@ res = {{
 # every query matches all docs (worst case) and block-max pruning
 # cannot fire; this is the sparse-match serving shape, incl. the
 # fused MaxScore driver path (zero cluster jobs when the retained
-# set fits driver_block_limit).
+# postings of each query's terms, summed over queries, fit
+# DRIVER_POSTING_LIMIT).
 n_single = {n_single}
 if n_single:
     import statistics

@@ -94,7 +94,8 @@ def main() -> None:
                     w = time.time() - t0
                     best = w if best is None else min(best, w)
                 cell[f"{strat}_s"] = round(best, 2)
-                cell["rows"] = cnt
+                cell[f"{strat}_rows"] = cnt
+            assert cell["term_rows"] == cell["doc_rows"], cell
             cell["winner"] = "doc" if cell["doc_s"] < cell["term_s"] else "term"
             rows.append(cell)
             print(json.dumps(cell), flush=True)

@@ -85,7 +85,8 @@ batch_wall = min(batch_walls)
 
 # single-query latency (reference runs batch_size=1, evaluate.py:140):
 # exhaustive fused AND the Block-Max-pruned fused path (whose driver
-# fast path answers sub-256-block retained sets with zero cluster jobs)
+# fast path answers with zero cluster jobs while the retained postings
+# of each query's terms, summed over queries, fit DRIVER_POSTING_LIMIT)
 from splade_spark.operators.maxscore import search_maxscore_fused
 
 lat = []

@@ -429,8 +429,9 @@ def main() -> None:
             "exhaustive (persisted block metadata, literal pruned scan) —",
             "the cluster path's at-scale shape. Small query relations",
             "still delegate to the fused planner (strategy='auto'), whose",
-            "driver fast path answers sub-256-block retained sets with",
-            "zero cluster jobs.",
+            "driver fast path answers with zero cluster jobs while the",
+            "retained postings of each query's terms, summed over",
+            "queries, fit DRIVER_POSTING_LIMIT.",
             "",
         ]
 
@@ -522,8 +523,9 @@ def main() -> None:
                 "sequential, driver-resident, result fetched to pandas;",
                 "the scaling table's replicated-corpus latency rows are the",
                 "dense worst case where every query matches all docs. The",
-                "fused MaxScore path answers sub-256-block retained sets",
-                "entirely driver-side — zero cluster jobs — and with the",
+                "fused MaxScore path answers entirely driver-side — zero",
+                "cluster jobs — while the retained postings of each query's",
+                "terms, summed over queries, fit DRIVER_POSTING_LIMIT; with the",
                 "bucket partition-dir pruned pyarrow fetches its p50 beats",
                 "the exhaustive fused plan; the residual ~0.4s of the",
                 "Spark-API rows is the createDataFrame -> collect round",

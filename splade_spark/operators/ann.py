@@ -99,7 +99,12 @@ def embedding_dup_pairs(
     self-join (broadcast anti-join) — an identical-embedding cluster
     of B vectors is B^2 join rows uncapped; same rationale as
     dedup.minhash_lsh_pairs(bucket_cap=...). Default None =
-    exhaustive (the oracle contract)."""
+    exhaustive (the oracle contract). Unlike the minhash path, no
+    exact-dedup stage runs first here, and identical vectors share ONE
+    signature bucket: a capped run drops that bucket with every pair
+    in it. Callers should collapse exactly identical vectors first
+    (hash ``groupBy`` on the embedding, keep one representative)
+    before a ``bucket_cap`` run."""
     base = lsh_signatures(embeddings, n_planes, dim=dim).withColumn(
         "nrm", _norm(F.col("embedding"))
     ).persist()  # both self-join branches read it; Catalyst won't reuse

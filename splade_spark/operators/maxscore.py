@@ -67,6 +67,27 @@ FUSED_DELEGATE_LIMIT = 4096
 # (operators/bmp.py).
 PRUNE_EPS = 1.5e-6
 
+# search_maxscore_fused answers on the driver while its driver work
+# (retained postings of each query's terms, summed over queries) is at
+# most this; past it one Spark job decodes and scores in parallel.
+#
+# Pinned by scripts/driver_crossover_bench.py (Zipf-like corpus,
+# head-term queries, k=1000, local[4], 4 cores / 15 GB; driver vs
+# forced-Spark route, best of 3, identical rows in every cell):
+#   30k docs,  1 query,    68k postings ->  40 ms vs  694 ms
+#   30k docs,  32 queries, 1.9M         -> 233 ms vs 1575 ms
+#   30k docs,  64 queries, 3.7M         -> 398 ms vs 2316 ms
+#   240k docs, 1 query,    542k         -> 151 ms vs  873 ms
+#   240k docs, 4 queries,  2.1M         -> 326 ms vs 1632 ms
+#   240k docs, 16 queries, 7.5M         -> 895 ms vs 4900 ms
+# On 4 cores the driver wins every cell (5-17x): both routes grow
+# linearly and the driver's ~0.1-0.23 us/posting undercuts Spark's
+# ~0.45-0.6. More cores shrink only Spark's per-posting share, never
+# its ~0.7 s single-query floor (3 jobs), so the route crosses where
+# the driver's whole answer reaches that floor: at the single-query
+# rate (~40 ms + 0.23 us/posting) ~2.9M postings, pinned below at 2M.
+DRIVER_POSTING_LIMIT = 2_000_000
+
 # Persisted working-set relations (query-term cache, block metadata,
 # per-query floors) from the LAST search_maxscore relation-path call.
 # They must outlive the call — the returned lazy plan references them —
@@ -96,7 +117,7 @@ def search_maxscore_fused(
     threshold: float = SCORE_THRESHOLD,
     debug_counts: dict | None = None,
     champion_block_limit: int = 50_000,
-    driver_block_limit: int = 256,
+    driver_posting_limit: int = DRIVER_POSTING_LIMIT,
     as_local: bool = False,
 ) -> DataFrame:
     """Minimal-plan Block-Max/MaxScore search for driver-resident
@@ -128,13 +149,18 @@ def search_maxscore_fused(
     guard caps the summed estimate across hit terms at 4x the
     per-term limit.
 
-    When pruning leaves at most ``driver_block_limit`` blocks, the
+    When the driver work left after pruning — the retained postings
+    of each query's terms, summed over queries (exact from the block
+    metadata's ``n``) — is at most ``driver_posting_limit``, the
     retained set is scored entirely on the driver (numpy over the
     already-open pyarrow dataset) and returned as a local relation —
     zero cluster jobs, the analog of PISA answering a query from one
     node once Block-Max has shrunk the work below cluster scale.
     Results are bit-identical to the distributed path (same kernel
-    arithmetic, same 6dp rounding, same tie rule).
+    arithmetic, same 6dp rounding, same tie rule). ``debug_counts``
+    records the ``route`` taken (``"driver"``, ``"spark"`` or
+    ``"fused_fallback"`` when the df guard trips) and the
+    ``driver_work`` estimate that chose it.
 
     ``as_local=True`` returns a pandas DataFrame instead of a Spark
     one: when the driver fast path answers, the rows ALREADY live on
@@ -228,6 +254,8 @@ def search_maxscore_fused(
         max(blocks_est.values()) > champion_block_limit
         or sum(blocks_est.values()) > 20 * champion_block_limit
     ):
+        if debug_counts is not None:
+            debug_counts["route"] = "fused_fallback"
         return _ret_df(search_fused(spark, index_dir, query_rows, k, threshold))
     # per query: [(term_id, q_tf, ub)], champion, total_ub
     q_plan: dict[int, list[tuple[int, float, float]]] = {}
@@ -240,6 +268,8 @@ def search_maxscore_fused(
         if rows:
             q_plan[qid] = sorted(rows)
     if not q_plan:
+        if debug_counts is not None:
+            debug_counts.update(route="driver", driver_work=0)
         return _ret_rows([])
     hit_terms = sorted({t for rows in q_plan.values() for t, _, _ in rows})
     buckets = buckets_for_terms([t for t in all_terms if t in tinfo], n_buckets)
@@ -256,26 +286,29 @@ def search_maxscore_fused(
         columns=["term_id", "block_id", "first_doc_id", "last_doc_id", "n", "block_max"],
         filter=bucket_flt & pads.field("term_id").isin(hit_terms),
     ).to_pandas()
+    # block sets travel as packed int64 (term_id << 32) | rank keys and
+    # membership is one np.isin, not a per-row tuple-set probe. The low
+    # half is the block_id's dense rank: block_id = salt * 2^24 + seq
+    # itself passes 32 bits once a term spans 256 salt groups.
+    uniq_bid, bid_rank = np.unique(meta["block_id"].to_numpy(), return_inverse=True)
+    meta["key"] = meta["term_id"].to_numpy(np.int64) << 32 | bid_rank
     by_term = dict(iter(meta.groupby("term_id")))
 
-    def fetch_decode(pairs: set[tuple[int, int]]):
-        """Decode the given (term_id, block_id) blocks driver-side."""
-        if not pairs:
+    def fetch_decode(keys: list[np.ndarray]):
+        """Decode the blocks with the given packed keys driver-side."""
+        if not keys:
             return {}
-        tids = sorted({t for t, _ in pairs})
-        bids = sorted({b for _, b in pairs})
+        want = np.unique(np.concatenate(keys))
         tbl = post_ds.to_table(
             columns=["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"],
             filter=bucket_flt
-            & pads.field("term_id").isin(tids)
-            & pads.field("block_id").isin(bids),
+            & pads.field("term_id").isin(np.unique(want >> 32).tolist())
+            & pads.field("block_id").isin(uniq_bid[np.unique(want & 0xFFFFFFFF)].tolist()),
         ).to_pandas()
-        tbl = tbl[
-            [
-                (t, b) in pairs
-                for t, b in zip(tbl["term_id"], tbl["block_id"])
-            ]
-        ]
+        # every fetched block_id is in uniq_bid (the filter above), so
+        # searchsorted recovers its exact rank
+        rank = np.searchsorted(uniq_bid, tbl["block_id"].to_numpy())
+        tbl = tbl[np.isin(tbl["term_id"].to_numpy(np.int64) << 32 | rank, want)]
         out: dict[int, list] = {}
         if len(tbl) == 0:
             return out
@@ -294,7 +327,7 @@ def search_maxscore_fused(
         return out
 
     # ---- pass 1 driver-side: champion floor -> theta per query ------
-    champ_pairs: set[tuple[int, int]] = set()
+    champ_keys: list[np.ndarray] = []
     for qid, rows in q_plan.items():
         champ = max(rows, key=lambda r: (r[2], -r[0]))
         cm = by_term.get(champ[0])
@@ -310,14 +343,11 @@ def search_maxscore_fused(
         )
         n_cum = np.cumsum(cm["n"].to_numpy()[order_b])
         nb = min(int(np.searchsorted(n_cum, k, side="left")) + 1, len(order_b))
-        champ_pairs.update(
-            (champ[0], int(b))
-            for b in cm["block_id"].to_numpy()[order_b[:nb]]
-        )
-    champ_dec = fetch_decode(champ_pairs)
+        champ_keys.append(cm["key"].to_numpy()[order_b[:nb]])
+    champ_dec = fetch_decode(champ_keys)
 
     theta: dict[int, float] = {}
-    cover_pairs: set[tuple[int, int]] = set()
+    cover_keys: list[np.ndarray] = []
     cand_of: dict[int, np.ndarray] = {}
     for qid, rows in q_plan.items():
         champ = max(rows, key=lambda r: (r[2], -r[0]))
@@ -332,7 +362,8 @@ def search_maxscore_fused(
         # champion-partial order; the covered-range check is
         # order-insensitive, so sorting is safe
         cand = np.sort(d[order])
-        q_cover: set[tuple[int, int]] = set()
+        q_cover: list[np.ndarray] = []
+        n_cover = 0
         # exact-floor cover budget: when candidates are spread across
         # ~every block (uniform corpora), the cover set degenerates to
         # the whole hit-term block set and the driver would decode the
@@ -345,26 +376,24 @@ def search_maxscore_fused(
             tm = by_term.get(tid)
             if tm is None:
                 continue
-            fd = tm["first_doc_id"].to_numpy()
-            ld = tm["last_doc_id"].to_numpy()
             # block [fd_i, ld_i] holds a candidate iff some cand falls
             # inside: searchsorted interval test, O(n_blocks log k) and
             # memory-free — the earlier (n_blocks x k) boolean matrix
             # was a ~50 MB transient per term at the guard ceiling
             # (50k blocks x k=1000)
-            lo = np.searchsorted(cand, fd, side="left")
-            hi = np.searchsorted(cand, ld, side="right")
-            for b in tm["block_id"].to_numpy()[lo < hi]:
-                q_cover.add((tid, int(b)))
-            if len(q_cover) > cover_budget:
+            lo = np.searchsorted(cand, tm["first_doc_id"].to_numpy(), side="left")
+            hi = np.searchsorted(cand, tm["last_doc_id"].to_numpy(), side="right")
+            q_cover.append(tm["key"].to_numpy()[lo < hi])
+            n_cover += len(q_cover[-1])
+            if n_cover > cover_budget:
                 break
-        if len(q_cover) > cover_budget:
+        if n_cover > cover_budget:
             if len(part) >= k:
                 theta[qid] = float(np.sort(part)[-k])
             continue
         cand_of[qid] = cand
-        cover_pairs.update(q_cover)
-    cover_dec = fetch_decode(cover_pairs)
+        cover_keys += q_cover
+    cover_dec = fetch_decode(cover_keys)
     for qid, rows in q_plan.items():
         cand = cand_of.get(qid)
         if cand is None:
@@ -382,8 +411,8 @@ def search_maxscore_fused(
         if len(scores) >= k:
             theta[qid] = float(np.sort(scores)[-k])
 
-    # ---- pass 2 driver-side: retained block set ---------------------
-    retained: dict[int, set[int]] = {}
+    # ---- pass 2 driver-side: retained block mask per term -----------
+    retained: dict[int, np.ndarray] = {}
     total_blocks = 0
     for qid, rows in q_plan.items():
         total_ub = sum(r[2] for r in rows)
@@ -394,39 +423,35 @@ def search_maxscore_fused(
                 continue
             total_blocks += len(tm)
             block_ub = total_ub - ub + q_tf * tm["block_max"].to_numpy()
-            keep = tm["block_id"].to_numpy()[block_ub >= th]
-            retained.setdefault(tid, set()).update(int(b) for b in keep)
+            retained[tid] = retained.get(tid, False) | (block_ub >= th)
+    n_retained = sum(int(m.sum()) for m in retained.values())
+    # driver work = each query's terms' whole retained postings (the
+    # driver path concatenates a term's retained set per query using it)
+    ret_n = {t: int(by_term[t]["n"].to_numpy()[m].sum()) for t, m in retained.items()}
+    driver_work = sum(ret_n.get(t, 0) for rows in q_plan.values() for t, _, _ in rows)
+    route = "driver" if driver_work <= driver_posting_limit else "spark"
     if debug_counts is not None:
-        debug_counts["blocks_total"] = total_blocks
-        debug_counts["blocks_kept"] = sum(len(v) for v in retained.values())
+        debug_counts.update(route=route, driver_work=driver_work)
+        debug_counts.update(blocks_total=total_blocks, blocks_kept=n_retained)
 
-    # ---- driver fast path: tiny retained set, zero cluster jobs -----
-    n_retained = sum(len(v) for v in retained.values())
-    if 0 < n_retained <= driver_block_limit:
-        ret_pairs = {(t, b) for t, bs in retained.items() for b in bs}
-        ret_dec = fetch_decode(ret_pairs)
+    # ---- driver path: retained work under the crossover, zero jobs --
+    if route == "driver":
+        ret_dec = fetch_decode(
+            [by_term[t]["key"].to_numpy()[m] for t, m in retained.items()]
+        )
         out_rows = []
         for qid, rows in q_plan.items():
-            ds, ws = [], []
-            for tid, q_tf, _ in rows:
-                dec = ret_dec.get(tid)
-                if dec is not None:
-                    ds.append(dec[0])
-                    ws.append(q_tf * dec[1])
-            if not ds:
+            dec = [(ret_dec[t][0], q_tf * ret_dec[t][1]) for t, q_tf, _ in rows if t in ret_dec]
+            if not dec:
                 continue
-            d = np.concatenate(ds)
-            w = np.concatenate(ws)
-            uniq, inv = np.unique(d, return_inverse=True)
-            totals = np.round(np.bincount(inv, weights=w), 6)
+            uniq, inv = np.unique(np.concatenate([d for d, _ in dec]), return_inverse=True)
+            totals = np.round(np.bincount(inv, weights=np.concatenate([w for _, w in dec])), 6)
             keep = totals > threshold
-            scored_q = sorted(
-                zip(uniq[keep].tolist(), totals[keep].tolist()),
-                key=lambda p: (-p[1], p[0]),
-            )[:k]
-            out_rows += [
-                (qid, doc, s, r + 1) for r, (doc, s) in enumerate(scored_q)
-            ]
+            doc, score = uniq[keep], totals[keep]
+            top = np.lexsort((doc, -score))[:k]
+            out_rows += zip(
+                [qid] * len(top), doc[top].tolist(), score[top].tolist(), range(1, len(top) + 1)
+            )
         return _ret_rows(out_rows)
 
     # ---- distributed: ONE pruned scan -> kernel -> agg -> top-k -----
@@ -437,16 +462,15 @@ def search_maxscore_fused(
         )
         for qid, rows in q_plan.items()
     }
-    if not retained:
-        return _ret_rows([])
-    n_distinct_blocks = sum(len(tm) for tm in by_term.values())
-    if n_retained >= n_distinct_blocks:
+    if n_retained >= sum(len(tm) for tm in by_term.values()):
         # theta fallback retained everything — a per-term IN-list the
         # size of the whole block set buys nothing and bloats the
         # filter expression; the term semi-restriction is equivalent
         keep_expr = in_literals("term_id", retained)
     else:
-        keep_expr = block_pairs_expr(retained)
+        keep_expr = block_pairs_expr(
+            {t: by_term[t]["block_id"].to_numpy()[m] for t, m in retained.items()}
+        )
     from splade_spark.operators.index_query import (
         _BLOCK_COLS,
         load_postings,

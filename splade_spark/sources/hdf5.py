@@ -540,31 +540,35 @@ def export_hdf5_index(spark, index_dir: str, out_dir: str) -> str:
 def import_hdf5_index(spark, in_dir: str):
     """Load a reference HDF5 index directory into a (term_id, doc_id,
     impact) DataFrame (+ returns the doc_ids list): row indices are
-    mapped back through doc_ids.pkl. The relation is the engine's
-    logical-postings shape — feed it to the logical scorer or re-index
-    (MIGRATION.md)."""
+    mapped back through doc_ids.pkl when its ids are integers (or
+    integer strings). Non-numeric ids (e.g. BeIR's string ids) cannot
+    be a ``long`` doc_id, so doc_id stays the row index and the
+    returned doc_ids list is the doc_id -> external id mapping. The
+    relation is the engine's logical-postings shape — feed it to the
+    logical scorer or re-index (MIGRATION.md)."""
     import pandas as pd
 
     dim, post = read_array_index(in_dir)
     pkl = os.path.join(in_dir, "doc_ids.pkl")
-    doc_ids = None
+    doc_ids = ext_of_row = None
     if os.path.exists(pkl):
         with open(pkl, "rb") as f:
             doc_ids = pickle.load(f)
+        try:
+            ext_of_row = np.asarray(doc_ids).astype(np.int64)
+        except (TypeError, ValueError):
+            pass  # string ids: keep row indices, doc_ids maps them
     frames = []
     for t, (rows, vals) in sorted(post.items()):
         if not len(rows):
             continue
-        ext = (
-            np.array([doc_ids[i] for i in rows])
-            if doc_ids is not None
-            else rows.astype(np.int64)
-        )
         frames.append(
             pd.DataFrame(
                 {
                     "term_id": np.full(len(rows), t, dtype=np.int32),
-                    "doc_id": ext.astype(np.int64),
+                    "doc_id": (
+                        ext_of_row[rows] if ext_of_row is not None else rows.astype(np.int64)
+                    ),
                     "impact": vals.astype(np.float64),
                 }
             )

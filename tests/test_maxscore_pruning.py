@@ -11,12 +11,17 @@ champion floor.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from splade_spark.operators.index_build import build_index
 from splade_spark.operators.index_query import search
-from splade_spark.operators.maxscore import search_maxscore
+from splade_spark.operators.maxscore import (
+    DRIVER_POSTING_LIMIT,
+    search_maxscore,
+    search_maxscore_fused,
+)
 
 N_DOCS = 20_000
 N_RARE = 40
@@ -73,8 +78,8 @@ def test_fused_maxscore_matches_and_prunes(spark, skewed_index):
     queries = spark.createDataFrame([(1, "rare common")], "qid long, text string")
     exhaustive = search(spark, skewed_index, queries, k=10).collect()
     # driver fast path (default) AND the distributed pruned-scan branch
-    # (forced with driver_block_limit=0) must both match exactly
-    for limit in (256, 0):
+    # (forced with driver_posting_limit=0) must both match exactly
+    for limit in (DRIVER_POSTING_LIMIT, 0):
         counts: dict = {}
         fused = search_maxscore_fused(
             spark,
@@ -82,7 +87,7 @@ def test_fused_maxscore_matches_and_prunes(spark, skewed_index):
             [(1, "rare common")],
             k=10,
             debug_counts=counts,
-            driver_block_limit=limit,
+            driver_posting_limit=limit,
         ).collect()
         assert counts["blocks_kept"] / counts["blocks_total"] < 0.5, counts
         assert {(r.doc_id, r.score, r.rank) for r in fused} == {
@@ -170,9 +175,11 @@ def test_fused_guard_falls_back_before_postings_metadata(
 
     monkeypatch.setattr(pads, "dataset", spy)
     queries = [(1, "rare common")]
+    counts: dict = {}
     got = maxscore.search_maxscore_fused(
-        spark, skewed_index, queries, k=10, champion_block_limit=0
+        spark, skewed_index, queries, k=10, champion_block_limit=0, debug_counts=counts
     ).collect()
+    assert counts["route"] == "fused_fallback", counts
     # fell back through the exhaustive fused path and still answered
     qdf = spark.createDataFrame(queries, "qid long, text string")
     exhaustive = search(spark, skewed_index, qdf, k=10).collect()
@@ -272,3 +279,86 @@ def test_prune_eps_covers_summation_order():
     assert theta > best_block_ub  # strict >= would retain NOTHING
     assert best_block_ub >= theta - PRUNE_EPS
     assert PRUNE_EPS >= 1e-6  # rounding-tie window at 6dp
+
+
+def _zipf_docs(spark, n=3_000, vocab=300, seed=11):
+    """Zipf-like corpus (P(id = i) ~ ln((i + 2) / (i + 1)), 6-30 tokens
+    per doc): the head terms sit in most docs, so a head-term query
+    retains most of its blocks — hundreds of them at block_size=16."""
+    rng = np.random.default_rng(seed)
+    lens = rng.integers(6, 31, n)
+    u = rng.uniform(0.0, np.log(vocab + 1), int(lens.sum()))
+    toks = np.minimum(np.floor(np.exp(u)) - 1, vocab - 1).astype(int).tolist()
+    off = np.concatenate([[0], np.cumsum(lens)]).tolist()
+    rows = [
+        (i, " ".join(f"w{t}" for t in toks[a:b]))
+        for i, (a, b) in enumerate(zip(off[:-1], off[1:]))
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.fixture(scope="module")
+def zipf_index(spark, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("zipf_idx"))
+    build_index(_zipf_docs(spark), idx, n_segments=2, block_size=16, salt_unit=512)
+    return idx
+
+
+HEAD_QUERIES = [(1, "w0 w1 w2 w3"), (2, "w0 w2 w4 w5"), (3, "w1 w3 w4 w5")]
+
+
+def _rows(got):
+    return sorted((r.qid, r.doc_id, r.score, r.rank) for r in got)
+
+
+@pytest.mark.parametrize("k", [10, 1000])
+def test_driver_and_spark_routes_identical_on_dense_queries(spark, zipf_index, k):
+    """A head-term query keeps far more than 256 blocks but little
+    driver work, so the default limit answers it on the driver. Driver
+    route, forced Spark route (driver_posting_limit=0) and exhaustive
+    search return identical (qid, doc_id, score, rank) on this shape,
+    for one query and a 3-query call."""
+    singles_work = 0
+    for qs in [HEAD_QUERIES[:1], HEAD_QUERIES[1:2], HEAD_QUERIES[2:], HEAD_QUERIES]:
+        qdf = spark.createDataFrame(qs, "qid long, text string")
+        want = _rows(search(spark, zipf_index, qdf, k=k).collect())
+        assert len(want) == len(qs) * k
+        by_route = {}
+        for limit in (DRIVER_POSTING_LIMIT, 0):
+            counts: dict = {}
+            got = search_maxscore_fused(
+                spark, zipf_index, qs, k=k, debug_counts=counts, driver_posting_limit=limit
+            ).collect()
+            assert counts["blocks_kept"] > 256, counts
+            by_route[counts["route"]] = _rows(got)
+        assert by_route == {"driver": want, "spark": want}
+        if len(qs) == 1:
+            singles_work += counts["driver_work"]
+    # the work counts each query's terms' retained postings: the
+    # 3-query call shares terms, so a per-term union would be smaller
+    assert counts["driver_work"] >= singles_work, (counts, singles_work)
+
+
+def test_fused_driver_path_block_ids_beyond_32_bits(spark, tmp_path_factory):
+    """block_id = salt * 2^24 + seq passes 2^32 once a term spans more
+    than 256 salt groups; the driver path's block sets must keep the
+    full id, on both routes, or blocks go missing from the scores."""
+    idx = str(tmp_path_factory.mktemp("wide_block_ids"))
+    docs = spark.range(5_000).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("hot w"),
+            (F.col("id") % 7).cast("string"),
+            F.repeat(F.lit(" pad"), (F.col("id") % 11).cast("int")),
+        ).alias("text"),
+    )
+    build_index(docs, idx, n_segments=2, n_buckets=4, block_size=16, salt_unit=16)
+    post = spark.read.parquet(f"{idx}/postings")
+    assert post.agg({"block_id": "max"}).collect()[0][0] > (1 << 32)
+    qs = [(1, "hot w3"), (2, "hot")]
+    want = _rows(
+        search(spark, idx, spark.createDataFrame(qs, "qid long, text string"), k=100).collect()
+    )
+    for limit in (DRIVER_POSTING_LIMIT, 0):
+        got = search_maxscore_fused(spark, idx, qs, k=100, driver_posting_limit=limit)
+        assert _rows(got.collect()) == want, limit
