@@ -5,58 +5,58 @@ driver work (retained postings of each query's terms, summed over
 queries) is at most ``driver_posting_limit``, and runs one Spark job
 otherwise. This sweep times BOTH routes on the same query batches —
 the driver route forced with an unbounded limit, the Spark route with
-``driver_posting_limit=0`` — over a Zipf-like corpus whose head-term
-queries match most docs (the shape where pruning keeps the most), and
-prints each cell's ``driver_work`` next to both walls. Batch size
-scales the work linearly, so the cells locate the knee the
-``DRIVER_POSTING_LIMIT`` constant should sit at. Every cell also
-asserts the two routes return identical rows.
+``driver_posting_limit=0`` — and prints each cell's ``driver_work``
+next to both walls. Every cell also asserts the two routes return
+identical rows.
 
-Usage: python scripts/driver_crossover_bench.py [--docs 30000]
-         [--batches 1,2,4,8,16,32,64] [--cores 4] [--reps 3]
+Corpus and queries come from the benchmark's seeded generators
+(``perfbench/gen.py``), at ``--docs`` documents:
+
+* ``dense``: Zipf-like corpus, head-term queries that match most docs
+  (the shape where pruning keeps the most); batch size scales the work
+  linearly, so the cells locate the knee in postings.
+* ``selective``: uniform corpus, 4-term queries touching under 1% of
+  docs; batches of 1024 and 4096 queries (what ``search_maxscore``'s
+  default strategy hands over) measure the driver loop's per-query
+  fixed cost.
+
+Each route is timed twice: ``local`` returns pandas (``as_local=True``,
+the serving return) and ``relation`` returns a Spark DataFrame and
+counts it (what ``search_maxscore`` callers get).
+
+Usage: python scripts/driver_crossover_bench.py --workload dense|selective
+         [--docs 30000] [--batches 1,4,16,64] [--cores 4]
 """
 
 from __future__ import annotations
 
 import argparse
-import itertools
 import json
 import os
-import resource
+import shutil
 import sys
 import tempfile
 import time
 
-import numpy as np
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def zipf_docs(n: int, vocab: int, seed: int):
-    """(doc_id, text) frame: 6-30 tokens per doc, P(id = i) ~
-    ln((i + 2) / (i + 1)), so a few head terms sit in most docs."""
-    import pandas as pd
-
-    rng = np.random.default_rng(seed)
-    lens = rng.integers(6, 31, n)
-    u = rng.uniform(0.0, np.log(vocab + 1), int(lens.sum()))
-    tokens = np.minimum(np.floor(np.exp(u)) - 1, vocab - 1).astype(np.int64)
-    words = np.array([f"w{i}" for i in range(vocab)], dtype=object)[tokens].tolist()
-    off = np.concatenate([[0], np.cumsum(lens)]).tolist()
-    texts = [" ".join(words[a:b]) for a, b in zip(off[:-1], off[1:])]
-    return pd.DataFrame({"doc_id": np.arange(n, dtype=np.int64), "text": texts})
+K = 1000
+REPS = 3  # best-of per route and return mode
+SEED = 7
+UNBOUNDED = 1 << 62
 
 
 def main() -> None:
+    from perfbench.gen import WORKLOADS, _corpus, _rng, query_pool
+
     ap = argparse.ArgumentParser()
+    ap.add_argument("--workload", choices=sorted(WORKLOADS), default="dense")
     ap.add_argument("--docs", type=int, default=30_000)
-    ap.add_argument("--vocab", type=int, default=2_000)
-    ap.add_argument("--batches", default="1,2,4,8,16,32,64")
-    ap.add_argument("--k", type=int, default=1000)
+    ap.add_argument("--batches", default="1,4,16,64")
     ap.add_argument("--cores", type=int, default=4)
-    ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
+    w = WORKLOADS[args.workload]
 
     from splade_spark.operators.index_build import build_index
     from splade_spark.operators.maxscore import search_maxscore_fused
@@ -65,40 +65,46 @@ def main() -> None:
     spark = get_spark(app="driver-crossover", cores=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
     idx = tempfile.mkdtemp(prefix="drvx_")
-    build_index(spark.createDataFrame(zipf_docs(args.docs, args.vocab, 7)), idx, salt_unit=4096)
-    # every 4-of-6 combination of the head terms, cycled
-    combos = [" ".join(f"w{t}" for t in c) for c in itertools.combinations(range(6), 4)]
+    docs = _corpus(w, _rng(w, SEED, "base"), 0, args.docs).frame()
+    salt = {} if w.salt_unit is None else {"salt_unit": w.salt_unit}
+    build_index(spark.createDataFrame(docs), idx, **salt)
+    pool = [row for batch in query_pool(w, SEED) for row in batch]
 
-    def best(qs, limit):
+    def best(qs, limit, as_local):
         walls, counts = [], {}
-        for _ in range(args.reps):
+        for _ in range(REPS):
             t0 = time.perf_counter()
             got = search_maxscore_fused(
-                spark, idx, qs, k=args.k, debug_counts=counts,
-                driver_posting_limit=limit, as_local=True,
+                spark, idx, qs, k=K, debug_counts=counts,
+                driver_posting_limit=limit, as_local=as_local,
             )
+            n = len(got) if as_local else got.count()
             walls.append(time.perf_counter() - t0)
-        return min(walls), counts, got.sort_values(["qid", "rank"]).reset_index(drop=True)
+        return round(min(walls) * 1e3, 1), counts, got, n
 
+    batches = [int(b) for b in args.batches.split(",")]
+    best(pool[: batches[0]], 0, True)  # warm the Spark route's first-use cost
     cells = []
-    for B in (int(b) for b in args.batches.split(",")):
-        qs = [(q, combos[q % len(combos)]) for q in range(B)]
-        best(qs, 0)  # warm the Spark route's first-use cost
-        drv_s, drv, drv_rows = best(qs, 1 << 62)
-        spk_s, spk, spk_rows = best(qs, 0)
-        assert (drv["route"], spk["route"]) == ("driver", "spark"), (drv, spk)
-        assert drv_rows.equals(spk_rows), B
-        cell = {
-            "batch": B, "driver_work": drv["driver_work"],
-            "blocks_kept": drv["blocks_kept"], "driver_ms": round(drv_s * 1e3, 1),
-            "spark_ms": round(spk_s * 1e3, 1),
-            "winner": "driver" if drv_s < spk_s else "spark",
-            "driver_peak_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024,
-        }
+    for B in batches:
+        qs = pool[:B]
+        assert len(qs) == B, f"the {w.name} query pool holds {len(pool)} queries"
+        cell = {"batch": B}
+        rows = {}
+        for route, limit in (("driver", UNBOUNDED), ("spark", 0)):
+            ms, counts, got, _ = best(qs, limit, True)
+            assert counts["route"] == route, counts
+            rows[route] = got.sort_values(["qid", "rank"]).reset_index(drop=True)
+            cell.update(driver_work=counts["driver_work"], blocks_kept=counts["blocks_kept"])
+            cell[f"{route}_local_ms"] = ms
+            cell[f"{route}_relation_ms"], _, _, n = best(qs, limit, False)
+            assert n == len(got), (route, n, len(got))
+        assert rows["driver"].equals(rows["spark"]), B
+        cell["rows"] = len(rows["driver"])
         cells.append(cell)
         print(json.dumps(cell), flush=True)
-    print(json.dumps({"docs": args.docs, "cores": args.cores, "sweep": cells}))
+    print(json.dumps({"workload": w.name, "docs": args.docs, "cores": args.cores, "sweep": cells}))
     spark.stop()
+    shutil.rmtree(idx, ignore_errors=True)
 
 
 if __name__ == "__main__":

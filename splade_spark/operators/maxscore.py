@@ -71,22 +71,28 @@ PRUNE_EPS = 1.5e-6
 # (retained postings of each query's terms, summed over queries) is at
 # most this; past it one Spark job decodes and scores in parallel.
 #
-# Pinned by scripts/driver_crossover_bench.py (Zipf-like corpus,
-# head-term queries, k=1000, local[4], 4 cores / 15 GB; driver vs
-# forced-Spark route, best of 3, identical rows in every cell):
-#   30k docs,  1 query,    68k postings ->  40 ms vs  694 ms
-#   30k docs,  32 queries, 1.9M         -> 233 ms vs 1575 ms
-#   30k docs,  64 queries, 3.7M         -> 398 ms vs 2316 ms
-#   240k docs, 1 query,    542k         -> 151 ms vs  873 ms
-#   240k docs, 4 queries,  2.1M         -> 326 ms vs 1632 ms
-#   240k docs, 16 queries, 7.5M         -> 895 ms vs 4900 ms
-# On 4 cores the driver wins every cell (5-17x): both routes grow
-# linearly and the driver's ~0.1-0.23 us/posting undercuts Spark's
-# ~0.45-0.6. More cores shrink only Spark's per-posting share, never
-# its ~0.7 s single-query floor (3 jobs), so the route crosses where
-# the driver's whole answer reaches that floor: at the single-query
-# rate (~40 ms + 0.23 us/posting) ~2.9M postings, pinned below at 2M.
-DRIVER_POSTING_LIMIT = 2_000_000
+# Pinned by scripts/driver_crossover_bench.py (perfbench's seeded
+# generators, k=1000, local[4], 4 cores / 15 GB; driver vs forced-Spark
+# route, best of 3, identical rows in every cell; ms for the pandas
+# return, then for a counted Spark relation):
+#   dense, 240k docs,  1 query,     394k postings  141 vs 1226 /  318 vs 1314
+#   dense, 240k docs,  4 queries,   1.8M           440 vs 2587 /  543 vs 2909
+#   dense, 240k docs,  16 queries,  7.3M          1177 vs 6029 / 1370 vs 6184
+#   dense, 240k docs,  32 queries,  14.8M         2239 vs 12223 / 2375 vs 11958
+#   selective, 30k docs, 1024 queries, 245k       1878 vs 4321 / 2874 vs 4087
+#   selective, 30k docs, 4096 queries, 981k       3644 vs 7907 / 6891 vs 8083
+# The driver wins every cell, so there is no crossover on this box up
+# to 14.8M: both routes grow linearly in postings and the driver's
+# ~0.15 us/posting undercuts Spark's ~0.8. The selective cells bound
+# the per-query fixed cost (4096 small queries, the most
+# search_maxscore's default strategy hands over, still win), so the
+# estimate needs no per-query term. The limit is the largest measured
+# cell, rounded down. Driver memory follows the UNIQUE retained
+# postings, not this sum (~80 B each at peak for one query: ~30 MB at
+# 394k; 16 queries over the same terms, 55 MB), so one query at the
+# limit peaks near 1.1 GB. More cores shrink only Spark's per-posting
+# share; re-measure before raising this on a cluster.
+DRIVER_POSTING_LIMIT = 14_000_000
 
 # Persisted working-set relations (query-term cache, block metadata,
 # per-query floors) from the LAST search_maxscore relation-path call.
@@ -184,18 +190,20 @@ def search_maxscore_fused(
 
     import pandas as pd
 
-    _OUT_COLS = ["qid", "doc_id", "score", "rank"]
+    _OUT_TYPES = {"qid": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"}
 
-    def _ret_rows(rows):
-        """Local tuples -> requested relation type."""
+    def _ret_tops(tops):
+        """Per-query (qid, doc_ids, scores) in rank order -> requested
+        relation type, built from numpy columns (a Spark relation then
+        travels as Arrow batches, not as per-row tuples)."""
+        cols = [(np.full(len(d), q), d, s, np.arange(1, len(d) + 1)) for q, d, s in tops]
+        pdf = pd.DataFrame({
+            c: np.concatenate([col[i] for col in cols] + [[]]).astype(t)
+            for i, (c, t) in enumerate(_OUT_TYPES.items())
+        })
         if as_local:
-            df = pd.DataFrame(rows, columns=_OUT_COLS)
-            return df.astype(
-                {"qid": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"}
-            )
-        return spark.createDataFrame(
-            rows, "qid long, doc_id long, score double, rank int"
-        )
+            return pdf
+        return spark.createDataFrame(pdf, "qid long, doc_id long, score double, rank int")
 
     def _ret_df(df):
         """Spark relation -> requested relation type."""
@@ -270,7 +278,7 @@ def search_maxscore_fused(
     if not q_plan:
         if debug_counts is not None:
             debug_counts.update(route="driver", driver_work=0)
-        return _ret_rows([])
+        return _ret_tops([])
     hit_terms = sorted({t for rows in q_plan.values() for t, _, _ in rows})
     buckets = buckets_for_terms([t for t in all_terms if t in tinfo], n_buckets)
 
@@ -439,7 +447,7 @@ def search_maxscore_fused(
         ret_dec = fetch_decode(
             [by_term[t]["key"].to_numpy()[m] for t, m in retained.items()]
         )
-        out_rows = []
+        tops = []
         for qid, rows in q_plan.items():
             dec = [(ret_dec[t][0], q_tf * ret_dec[t][1]) for t, q_tf, _ in rows if t in ret_dec]
             if not dec:
@@ -449,10 +457,8 @@ def search_maxscore_fused(
             keep = totals > threshold
             doc, score = uniq[keep], totals[keep]
             top = np.lexsort((doc, -score))[:k]
-            out_rows += zip(
-                [qid] * len(top), doc[top].tolist(), score[top].tolist(), range(1, len(top) + 1)
-            )
-        return _ret_rows(out_rows)
+            tops.append((qid, doc[top], score[top]))
+        return _ret_tops(tops)
 
     # ---- distributed: ONE pruned scan -> kernel -> agg -> top-k -----
     q_arrs = {

@@ -540,11 +540,11 @@ def export_hdf5_index(spark, index_dir: str, out_dir: str) -> str:
 def import_hdf5_index(spark, in_dir: str):
     """Load a reference HDF5 index directory into a (term_id, doc_id,
     impact) DataFrame (+ returns the doc_ids list): row indices are
-    mapped back through doc_ids.pkl when its ids are integers (or
-    integer strings). Non-numeric ids (e.g. BeIR's string ids) cannot
-    be a ``long`` doc_id, so doc_id stays the row index and the
-    returned doc_ids list is the doc_id -> external id mapping. The
-    relation is the engine's logical-postings shape — feed it to the
+    mapped back through doc_ids.pkl when it holds integers. Any other
+    ids — strings such as BeIR's, numeric-looking or not ("007" and
+    "7" are different ids) — stay external: doc_id is the row index
+    and the returned doc_ids list is the doc_id -> external id
+    mapping. The relation is the engine's logical-postings shape — feed it to the
     logical scorer or re-index (MIGRATION.md)."""
     import pandas as pd
 
@@ -554,10 +554,9 @@ def import_hdf5_index(spark, in_dir: str):
     if os.path.exists(pkl):
         with open(pkl, "rb") as f:
             doc_ids = pickle.load(f)
-        try:
-            ext_of_row = np.asarray(doc_ids).astype(np.int64)
-        except (TypeError, ValueError):
-            pass  # string ids: keep row indices, doc_ids maps them
+        ids = np.asarray(doc_ids)
+        if ids.dtype.kind in "iu":
+            ext_of_row = ids.astype(np.int64)
     frames = []
     for t, (rows, vals) in sorted(post.items()):
         if not len(rows):

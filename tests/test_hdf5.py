@@ -121,9 +121,10 @@ def test_empty_posting_and_scalar(tmp_path):
 
 
 def test_import_string_doc_ids(spark, tmp_path):
-    """A doc_ids.pkl of non-numeric ids (BeIR-style strings) imports:
-    doc_id stays the row index and the returned list maps it back;
-    integer-string ids still become integer doc_ids."""
+    """A doc_ids.pkl of string ids (BeIR-style) imports: doc_id stays
+    the row index and the returned list maps it back, also for
+    numeric-looking strings, where "007" and "7" must stay distinct;
+    integer ids become the doc_ids themselves."""
     post = [
         (0, np.array([0, 2], dtype=np.int32), np.array([0.5, 1.5], dtype=np.float32)),
         (3, np.array([1], dtype=np.int32), np.array([2.0], dtype=np.float32)),
@@ -136,8 +137,14 @@ def test_import_string_doc_ids(spark, tmp_path):
     got = {(r.term_id, back_ids[r.doc_id], r.impact) for r in rel.collect()}
     assert got == {(0, "doc-a", 0.5), (0, "b7f3", 1.5), (3, "MED-10", 2.0)}
 
+    d = str(tmp_path / "h5z")
+    H.write_array_index(d, post, dim=4, doc_ids=["007", "7", "70"])
+    rel, back_ids = H.import_hdf5_index(spark, d)
+    got = {(r.term_id, back_ids[r.doc_id]) for r in rel.collect()}
+    assert got == {(0, "007"), (0, "70"), (3, "7")}
+
     d = str(tmp_path / "h5n")
-    H.write_array_index(d, post, dim=4, doc_ids=["70", "80", "90"])
+    H.write_array_index(d, post, dim=4, doc_ids=[70, 80, 90])
     rel, _ = H.import_hdf5_index(spark, d)
     assert {(r.term_id, r.doc_id) for r in rel.collect()} == {(0, 70), (0, 90), (3, 80)}
 
