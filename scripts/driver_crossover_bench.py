@@ -24,8 +24,16 @@ Each route is timed twice: ``local`` returns pandas (``as_local=True``,
 the serving return) and ``relation`` returns a Spark DataFrame and
 counts it (what ``search_maxscore`` callers get).
 
+``--api fused`` times ``search_fused`` batches instead: the driver route
+(forced with an unbounded ``DRIVER_POSTING_LIMIT``) against the pinned
+``term`` and ``doc`` Spark routes, each as pandas (``as_local=True``)
+and as a relation collected with ``toPandas()`` (what ``search_fused``
+callers get). ``roundtrip_ms`` is the ``createDataFrame -> toPandas``
+round trip of the driver's result alone, the largest layer of the
+driver relation. ``driver_work`` is the batch's ``candidate_pairs``.
+
 Usage: python scripts/driver_crossover_bench.py --workload dense|selective
-         [--docs 30000] [--batches 1,4,16,64] [--cores 4]
+         [--api maxscore|fused] [--docs 30000] [--batches 1,4,16,64] [--cores 4]
 """
 
 from __future__ import annotations
@@ -52,13 +60,16 @@ def main() -> None:
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", choices=sorted(WORKLOADS), default="dense")
+    ap.add_argument("--api", choices=("maxscore", "fused"), default="maxscore")
     ap.add_argument("--docs", type=int, default=30_000)
     ap.add_argument("--batches", default="1,4,16,64")
     ap.add_argument("--cores", type=int, default=4)
     args = ap.parse_args()
     w = WORKLOADS[args.workload]
 
+    from splade_spark.operators import index_query
     from splade_spark.operators.index_build import build_index
+    from splade_spark.operators.index_query import search_fused
     from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.session import get_spark
 
@@ -70,39 +81,76 @@ def main() -> None:
     build_index(spark.createDataFrame(docs), idx, **salt)
     pool = [row for batch in query_pool(w, SEED) for row in batch]
 
-    def best(qs, limit, as_local):
-        walls, counts = [], {}
+    def best(fn):
+        """(best wall ms over REPS calls, last result)."""
+        walls = []
         for _ in range(REPS):
             t0 = time.perf_counter()
-            got = search_maxscore_fused(
-                spark, idx, qs, k=K, debug_counts=counts,
-                driver_posting_limit=limit, as_local=as_local,
-            )
-            n = len(got) if as_local else got.count()
+            got = fn()
             walls.append(time.perf_counter() - t0)
-        return round(min(walls) * 1e3, 1), counts, got, n
+        return round(min(walls) * 1e3, 1), got
 
+    def ranked(pdf):
+        return pdf.sort_values(["qid", "rank"]).reset_index(drop=True)
+
+    def maxscore_cell(qs):
+        """search_maxscore_fused: driver route vs forced Spark route."""
+        cell, rows = {}, {}
+        for route, limit in (("driver", UNBOUNDED), ("spark", 0)):
+            counts = {}
+
+            def run(as_local):
+                return search_maxscore_fused(
+                    spark, idx, qs, k=K, debug_counts=counts,
+                    driver_posting_limit=limit, as_local=as_local,
+                )
+
+            cell[f"{route}_local_ms"], got = best(lambda: run(True))
+            assert counts["route"] == route, counts
+            rows[route] = ranked(got)
+            cell.update(driver_work=counts["driver_work"], blocks_kept=counts["blocks_kept"])
+            cell[f"{route}_relation_ms"], n = best(lambda: run(False).count())
+            assert n == len(got), (route, n, len(got))
+        return cell, rows
+
+    def fused_cell(qs):
+        """search_fused: driver route (unbounded limit) vs pinned
+        term/doc routes, plus the driver relation's round trip."""
+        cell, rows = {}, {}
+        index_query.DRIVER_POSTING_LIMIT = UNBOUNDED
+        for route in ("driver", "term", "doc"):
+            counts = {}
+
+            def run(as_local):
+                return search_fused(
+                    spark, idx, qs, k=K, strategy="auto" if route == "driver" else route,
+                    debug_counts=counts, as_local=as_local,
+                )
+
+            cell[f"{route}_local_ms"], got = best(lambda: run(True))
+            assert counts["route"] == route, counts
+            rows[route] = ranked(got)
+            cell["driver_work"] = counts["driver_work"]
+            cell[f"{route}_relation_ms"], rel = best(lambda: run(False).toPandas())
+            assert ranked(rel).equals(rows[route]), route
+        cell["roundtrip_ms"], _ = best(lambda: spark.createDataFrame(
+            rows["driver"], index_query.TOPS_SCHEMA).toPandas())
+        return cell, rows
+
+    cell_of = fused_cell if args.api == "fused" else maxscore_cell
     batches = [int(b) for b in args.batches.split(",")]
-    best(pool[: batches[0]], 0, True)  # warm the Spark route's first-use cost
+    cell_of(pool[: batches[0]])  # warm the Spark routes' first-use cost
     cells = []
     for B in batches:
         qs = pool[:B]
         assert len(qs) == B, f"the {w.name} query pool holds {len(pool)} queries"
-        cell = {"batch": B}
-        rows = {}
-        for route, limit in (("driver", UNBOUNDED), ("spark", 0)):
-            ms, counts, got, _ = best(qs, limit, True)
-            assert counts["route"] == route, counts
-            rows[route] = got.sort_values(["qid", "rank"]).reset_index(drop=True)
-            cell.update(driver_work=counts["driver_work"], blocks_kept=counts["blocks_kept"])
-            cell[f"{route}_local_ms"] = ms
-            cell[f"{route}_relation_ms"], _, _, n = best(qs, limit, False)
-            assert n == len(got), (route, n, len(got))
-        assert rows["driver"].equals(rows["spark"]), B
-        cell["rows"] = len(rows["driver"])
-        cells.append(cell)
-        print(json.dumps(cell), flush=True)
-    print(json.dumps({"workload": w.name, "docs": args.docs, "cores": args.cores, "sweep": cells}))
+        cell, rows = cell_of(qs)
+        first = next(iter(rows.values()))
+        assert all(r.equals(first) for r in rows.values()), B
+        cells.append({"batch": B, **cell, "rows": len(first)})
+        print(json.dumps(cells[-1]), flush=True)
+    print(json.dumps({"workload": w.name, "api": args.api, "docs": args.docs,
+                      "cores": args.cores, "sweep": cells}))
     spark.stop()
     shutil.rmtree(idx, ignore_errors=True)
 

@@ -231,6 +231,7 @@ def search_bmp(
         load_stats,
         require_impacts,
         search_fused,
+        term_filter,
     )
 
     stats = load_stats(index_dir)
@@ -263,7 +264,7 @@ def search_bmp(
     all_terms = sorted({t for c in qtf.values() for t in c})
     dict_tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
         columns=["term", "term_id", "df"],
-        filter=pads.field("term").isin(all_terms),
+        filter=term_filter(all_terms),
     )
     tid_of = dict(
         zip(dict_tbl.column("term").to_pylist(), dict_tbl.column("term_id").to_pylist())

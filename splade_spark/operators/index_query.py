@@ -1,19 +1,34 @@
 """Query execution against the materialized compressed index.
 
-Reference lifecycle (task/evaluator.py:186-243): load HDF5 index into
-dicts, per query traverse posting lists with the numba kernel, top-k.
-Spark plan here:
+Reference lifecycle (task/evaluator.py:161-243): load the index, walk
+each query term's posting list into a dense per-doc accumulator, then
+a partial top-k.
 
-1. query terms -> term_ids via broadcast join with term_dict
-   (vocabulary filter, queries2pisa.py:34-49, falls out of the join);
-2. postings scan pruned two ways: a literal ``bucket IN (...)``
-   filter (parquet partition-directory pruning — the Iceberg
-   bucket() analog; content-addressed md5(term) buckets) +
-   broadcast semi-join on term_id;
-3. Arrow-batched block decode (mapInPandas) producing the partial
-   products q_tf * impact — the decode stays columnar numpy;
-4. hash-aggregate sum per (qid, doc_id), threshold filter, window
-   top-k with the pinned (-score, doc_id) tie rule.
+``search_fused`` (driver-resident queries) answers a batch by one of
+three routes. One rule picks them, from dictionary metadata alone:
+``candidate_pairs`` = Σ over queries of the df of each query term, the
+postings the batch's scoring visits.
+
+1. ``driver`` — ``candidate_pairs <= DRIVER_POSTING_LIMIT``: pyarrow
+   reads the bucket + term_id pruned blocks once, decodes them with
+   ``decode_blocks_vectorized``, and ``score_batch`` scores every query
+   in one vectorized pass (the reference's accumulator, batched over
+   queries). The result relation is built from numpy columns
+   (``tops_relation``); no Spark job runs before the caller collects.
+2. ``doc`` — past the limit, when candidate_pairs also exceeds
+   doc-major's emission bound (n_parts x queries x k) and
+   DOC_MAJOR_MIN_ROWS, and the memory-guarded shard width stays at or
+   above DOC_MAJOR_MIN_WIDTH: one exchange of the decoded postings by
+   doc range, every shard scores all queries locally.
+3. ``term`` — otherwise: pruned scan -> Arrow score kernel -> one
+   shuffle of per-(qid, doc) partials -> top-k.
+
+``strategy="term"|"doc"`` pins a Spark route. Every route rounds to
+6 dp, applies the threshold, then ranks by (-score, doc_id), and all
+three return identical rows. ``search`` and ``search_quantized`` take
+a query RELATION: term_ids by join with term_dict, a bucket + term_id
+pruned postings scan, an Arrow-batched block decode, a hash-aggregate
+per (qid, doc_id), then the window top-k.
 """
 
 from __future__ import annotations
@@ -108,6 +123,16 @@ def load_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(index_dir, "term_dict"))
 
 
+def term_filter(terms: list[str]):
+    """pyarrow filter selecting the term_dict rows of ``terms``. The
+    value set is typed, so an empty batch filters to no rows instead
+    of failing on an untyped (null) set."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    return pads.field("term").isin(pa.array(terms, type=pa.string()))
+
+
 def load_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(index_dir, "postings"))
 
@@ -157,6 +182,23 @@ def decode_blocks_vectorized(
     return doc_ids, impacts
 
 
+def decode_block_frame(
+    pdf: pd.DataFrame, gap_codec: str = "vbyte"
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(term_ids, doc_ids, impacts), one entry per posting, of a pandas
+    frame of posting blocks (term_id, first_doc_id, n, doc_gap_bytes,
+    impact_bytes)."""
+    ns = pdf["n"].to_numpy(dtype=np.int64)
+    doc_ids, impacts = decode_blocks_vectorized(
+        pdf["first_doc_id"].to_numpy(dtype=np.int64),
+        ns,
+        list(pdf["doc_gap_bytes"]),
+        list(pdf["impact_bytes"]),
+        gap_codec,
+    )
+    return np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns), doc_ids, impacts
+
+
 DECODED_SCHEMA = "term_id int, block_id long, doc_id long, impact double"
 _BLOCK_COLS = ["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"]
 
@@ -172,18 +214,14 @@ def _make_decode_postings(gap_codec: str):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            doc_ids, impacts = decode_blocks_vectorized(
-                pdf["first_doc_id"].to_numpy(dtype=np.int64),
-                ns,
-                list(pdf["doc_gap_bytes"]),
-                list(pdf["impact_bytes"]),
-                gap_codec,
-            )
+            tids, doc_ids, impacts = decode_block_frame(pdf, gap_codec)
             yield pd.DataFrame(
                 {
-                    "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int32), ns),
-                    "block_id": np.repeat(pdf["block_id"].to_numpy(dtype=np.int64), ns),
+                    "term_id": tids.astype(np.int32),
+                    "block_id": np.repeat(
+                        pdf["block_id"].to_numpy(dtype=np.int64),
+                        pdf["n"].to_numpy(dtype=np.int64),
+                    ),
                     "doc_id": doc_ids,
                     "impact": impacts,
                 }
@@ -292,15 +330,7 @@ def make_score_kernel(q_arrs: dict, gap_codec: str = "vbyte"):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            doc_ids, impacts = decode_blocks_vectorized(
-                pdf["first_doc_id"].to_numpy(dtype=np.int64),
-                ns,
-                list(pdf["doc_gap_bytes"]),
-                list(pdf["impact_bytes"]),
-                gap_codec,
-            )
-            tid_arr = np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns)
+            tid_arr, doc_ids, impacts = decode_block_frame(pdf, gap_codec)
             order = np.argsort(tid_arr, kind="stable")
             sorted_tids = tid_arr[order]
             uniq_t, starts = np.unique(sorted_tids, return_index=True)
@@ -590,6 +620,207 @@ def _search_fused_docmajor(
     return topk_window(shard_top, k)
 
 
+def term_major_top(
+    spark: SparkSession,
+    index_dir: str,
+    keep: "F.Column",
+    q_arrs: dict,
+    gap_codec: str,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """Term-major Spark plan over the postings blocks ``keep`` selects
+    (literal pushdowns): Arrow kernel (decode, q_tf multiply, per-doc
+    partial bincount — output rows ~= candidate docs, not postings) ->
+    one shuffle -> final agg -> top-k."""
+    partials = load_postings(spark, index_dir).filter(keep).select(*_BLOCK_COLS).mapInPandas(
+        make_score_kernel(q_arrs, gap_codec),
+        schema="qid long, doc_id long, partial double",
+    )
+    scored = (
+        partials.groupBy("qid", "doc_id")
+        .agg(F.round(F.sum("partial"), 6).alias("score"))
+        .filter(F.col("score") > F.lit(threshold))
+    )
+    if len(q_arrs) == 1:
+        # one query: a global orderBy + limit (per-partition partial
+        # top-k + driver merge) instead of a one-partition window
+        scored = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return topk_window(scored, k)
+
+
+# Driver work limit shared by search_fused (candidate_pairs) and
+# search_maxscore_fused (retained postings of each query's terms,
+# summed over queries): at or under it the driver scores the batch
+# with score_batch; past it Spark decodes and scores in parallel.
+#
+# Pinned by scripts/driver_crossover_bench.py (perfbench's seeded
+# generators, k=1000, local[4], 4 cores / 15 GB; best of 3, identical
+# rows on every route in every cell; ms as pandas, then as a relation
+# collected with toPandas).
+# search_fused --api fused, driver vs pinned doc-major vs term-major:
+#   dense, 30k docs,   64 queries,   3.7M   117 / 336   1231 / 1210   2800 / 2666
+#   selective, 30k,  1024 queries,   245k   154 / 811   1871 / 1945   1918 / 1689
+#   dense, 120k docs,  64 queries,  14.8M   312 / 566   1527 / 1674  11856 / 11200
+# The driver relation's createDataFrame -> toPandas round trip alone
+# is 201, 728 and 236 ms of those: its largest layer.
+# search_maxscore_fused, driver vs Spark (one job), measured on the
+# per-query driver loop that score_batch replaced:
+#   dense, 240k docs,  1 query,     394k postings  141 vs 1226 /  318 vs 1314
+#   dense, 240k docs,  4 queries,   1.8M           440 vs 2587 /  543 vs 2909
+#   dense, 240k docs,  16 queries,  7.3M          1177 vs 6029 / 1370 vs 6184
+#   dense, 240k docs,  32 queries,  14.8M         2239 vs 12223 / 2375 vs 11958
+#   selective, 30k docs, 1024 queries, 245k       1878 vs 4321 / 2874 vs 4087
+#   selective, 30k docs, 4096 queries, 981k       3644 vs 7907 / 6891 vs 8083
+# The driver wins every cell, so there is no crossover on this box up
+# to 14.8M: the driver batch scorer adds ~18 ns per candidate posting
+# (dense 3.7M -> 14.8M) and doc-major ~27 ns on 4 cores. The selective
+# cells bound the per-query fixed cost, so the measure needs no
+# per-query term. The limit is the largest measured cell, rounded
+# down. Driver memory follows the UNIQUE postings read plus
+# DRIVER_ACC_BUDGET_BYTES of scoring transients. More cores shrink only
+# Spark's per-posting share; re-measure before raising this on a
+# cluster.
+DRIVER_POSTING_LIMIT = 14_000_000
+
+# Transient bytes score_batch may hold per chunk of queries: the
+# chunk's dense accumulator (8 B per query x unique doc) plus, for the
+# sparse sum, its gathered cells, weights and sort (~48 B per
+# candidate posting at peak).
+DRIVER_ACC_BUDGET_BYTES = 64 << 20
+
+# The dense accumulator costs ~15 ns per cell (allocate, round, scan)
+# plus ~6 ns per candidate posting (scatter-add); the sparse sum ~100
+# ns per candidate posting (sort). Dense wins while cells are at most
+# this many times the chunk's candidate postings (numpy 1.26, one
+# core: 3.8M postings at 0.5 cells each, dense 22 ms vs sparse 375
+# ms; 246k postings at 125 cells each, dense 441 ms vs sparse 12 ms).
+_DENSE_CELLS_PER_POSTING = 4
+
+TOPS_SCHEMA = "qid long, doc_id long, score double, rank int"
+_TOPS_TYPES = {"qid": np.int64, "doc_id": np.int64, "score": np.float64, "rank": np.int32}
+
+
+def tops_relation(spark: SparkSession, cols=(), as_local: bool = False):
+    """(qid, doc_id, score, rank) numpy columns (empty by default) ->
+    pandas when ``as_local``, else a Spark relation built from the
+    columns, so it travels as Arrow batches, not per-row tuples."""
+    pdf = pd.DataFrame({
+        name: np.asarray(cols[i] if cols else [], dtype=t)
+        for i, (name, t) in enumerate(_TOPS_TYPES.items())
+    })
+    return pdf if as_local else spark.createDataFrame(pdf, TOPS_SCHEMA)
+
+
+def _query_chunks(cost: np.ndarray, budget: int) -> list[int]:
+    """Greedy chunk bounds over queries: each chunk's summed cost stays
+    within ``budget`` unless one query alone exceeds it."""
+    bounds, used = [0], 0
+    for i, c in enumerate(cost.tolist()):
+        if used and used + c > budget:
+            bounds.append(i)
+            used = 0
+        used += c
+    return bounds + [len(cost)]
+
+
+def score_batch(
+    q_arrs: dict,
+    tids: np.ndarray,
+    doc_ids: np.ndarray,
+    impacts: np.ndarray,
+    k: int,
+    threshold: float = SCORE_THRESHOLD,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Exhaustive top-k of every query in ``q_arrs`` ({qid: (term_ids,
+    weights)}, term_ids ascending) over decoded postings (one entry
+    per posting in ``tids``/``doc_ids``/``impacts``) -> (qid, doc_id,
+    score, rank) columns in (qid, rank) order.
+
+    One batch-at-a-time numpy kernel. Doc ids are replaced by their
+    dense rank (doc ids are arbitrary int64), so (query, doc) is the
+    cell ``q * n_docs + rank``. Each chunk of queries sums its
+    (query, term) pairs' q_tf x impact products in term order: into a
+    dense accumulator while it has at most _DENSE_CELLS_PER_POSTING
+    cells per candidate posting, else by a ``bincount`` over the
+    sorted unique cells. Chunks keep the transient bytes under
+    DRIVER_ACC_BUDGET_BYTES. Scores round to 6 dp and pass the
+    threshold before ranking; each query is pre-cut at its k-th score
+    (ties kept), then one ``lexsort((doc, -score, q))`` ranks them."""
+    qids = np.array(sorted(q_arrs), dtype=np.int64)
+    uniq_doc, drank = np.unique(doc_ids, return_inverse=True)
+    n_u = len(uniq_doc)
+    order = np.argsort(tids, kind="stable")
+    drank, imp = drank[order], impacts[order]
+    uniq_t, t_start = np.unique(tids[order], return_index=True)
+    t_end = np.append(t_start[1:], len(order))
+    # one (query, term, weight) pair per query term that has postings
+    n_terms = [len(q_arrs[q][0]) for q in qids.tolist()]
+    p_q = np.repeat(np.arange(len(qids)), n_terms)
+    p_t = np.concatenate([q_arrs[q][0] for q in qids.tolist()] + [[]]).astype(np.int64)
+    p_w = np.concatenate([q_arrs[q][1] for q in qids.tolist()] + [[]])
+    pos = np.minimum(np.searchsorted(uniq_t, p_t), max(len(uniq_t) - 1, 0))
+    hit = uniq_t[pos] == p_t if len(uniq_t) else np.zeros(len(p_t), dtype=bool)
+    p_q, p_w, pos = p_q[hit], p_w[hit], pos[hit]
+    p_s, p_n = t_start[pos], t_end[pos] - t_start[pos]
+    cost = 8 * n_u + 48 * np.bincount(p_q, weights=p_n, minlength=len(qids))
+    out = []
+    bounds = _query_chunks(cost.astype(np.int64), DRIVER_ACC_BUDGET_BYTES)
+    for qa, qb in zip(bounds[:-1], bounds[1:]):
+        pa, pb = np.searchsorted(p_q, [qa, qb])
+        ns = p_n[pa:pb]
+        total = int(ns.sum())
+        if not total:
+            continue
+        cells = (qb - qa) * n_u
+        if threshold >= 0 and cells <= _DENSE_CELLS_PER_POSTING * total:
+            # dense accumulator, one row per query. A term holds one
+            # posting per doc, so each pair's scatter-add hits distinct
+            # cells; pairs add in term order, as the Spark kernels do.
+            # Untouched cells stay 0.0 and fail `> threshold` anyway.
+            acc = np.zeros(cells)
+            for row, s, n, w in zip(
+                ((p_q[pa:pb] - qa) * n_u).tolist(), p_s[pa:pb].tolist(),
+                ns.tolist(), p_w[pa:pb].tolist(),
+            ):
+                acc[row:row + n_u][drank[s:s + n]] += w * imp[s:s + n]
+            np.round(acc, 6, out=acc)
+            key = np.flatnonzero(acc > threshold)
+            score = acc[key]
+        else:
+            # sparse: gather every pair's postings (idx runs s..s+n per
+            # pair) and bincount over the sorted unique (query, doc) keys
+            idx = np.repeat(p_s[pa:pb] - (np.cumsum(ns) - ns), ns) + np.arange(total)
+            keys = np.repeat((p_q[pa:pb] - qa) * n_u, ns) + drank[idx]
+            ws = np.repeat(p_w[pa:pb], ns) * imp[idx]
+            del idx
+            key, inv = np.unique(keys, return_inverse=True)
+            score = np.round(np.bincount(inv, weights=ws), 6)
+            keep = score > threshold
+            key, score = key[keep], score[keep]
+        # pre-cut: keep each query's candidates scoring >= its k-th
+        # score (all ties at the cut survive to the lexsort). Cells are
+        # sorted, so query j's candidates are one run of them.
+        seg = np.searchsorted(key, np.arange(qb - qa + 1) * n_u)
+        keep = np.ones(len(score), dtype=bool)
+        for j in np.flatnonzero(np.diff(seg) > k).tolist():
+            a, b = seg[j], seg[j + 1]
+            cut = np.partition(score[a:b], b - a - k)[b - a - k]
+            keep[a:b] = score[a:b] >= cut
+        q_loc, d_loc = np.divmod(key[keep], n_u)
+        score = score[keep]
+        o = np.lexsort((d_loc, -score, q_loc))
+        q_loc, d_loc, score = q_loc[o], d_loc[o], score[o]
+        rank = np.arange(1, len(q_loc) + 1) - np.searchsorted(q_loc, q_loc)
+        top = rank <= k
+        out.append(
+            (qids[qa + q_loc[top]], uniq_doc[d_loc[top]], score[top], rank[top].astype(np.int32))
+        )
+    if not out:
+        return tuple(np.zeros(0, dtype=t) for t in _TOPS_TYPES.values())
+    return tuple(np.concatenate(c) for c in zip(*out))
+
+
 def search_fused(
     spark: SparkSession,
     index_dir: str,
@@ -597,31 +828,38 @@ def search_fused(
     k: int = TOPK_DEFAULT,
     threshold: float = SCORE_THRESHOLD,
     strategy: str = "auto",
-) -> DataFrame:
-    """Minimal-plan search for driver-resident queries (the reference's
-    own query-loading shape, evaluate.py:80-86): the numba scoring
-    kernel's Spark analog (SURVEY.md §2.9 — gap-decode + score
-    accumulate per posting block inside one Arrow kernel).
+    debug_counts: dict | None = None,
+    as_local: bool = False,
+):
+    """Exhaustive top-k for driver-resident queries (the reference's
+    own query-loading shape, evaluate.py:80-86) -> (qid, doc_id, score,
+    rank).
 
-    Plan: bucket+term_id-pruned postings scan (both predicates are
-    literal pushdowns — partition-dir pruning + row-group min/max
-    skipping; no semi-join, no term_dict broadcast stage) ->
-    mapInPandas kernel (vbyte decode, q_tf multiply, per-doc partial
-    bincount — output rows ~= candidate docs, not postings) -> one
-    shuffle -> final agg -> top-k. Two stages total.
+    One rule picks the route from the term dictionary alone (no
+    postings access): ``candidate_pairs``, the df of every query term
+    summed over queries, is exactly the driver's scoring work.
 
-    ``strategy``: "term" pins the plan above; "doc" pins the
-    doc-partitioned shard plan (``_search_fused_docmajor``); "auto"
-    (default) picks doc-major when the dictionary-estimated candidate
-    pairs exceed DOC_MAJOR_FACTOR x pruned postings — the high-match
-    batch regime where term-major's score shuffle scales with batch
-    size but doc-major's stays O(pruned postings).
+    * ``"driver"``: candidate_pairs <= DRIVER_POSTING_LIMIT. pyarrow
+      reads the bucket + term_id pruned blocks once, decodes them, and
+      ``score_batch`` scores the whole batch; the relation is built
+      from its numpy columns. Zero Spark jobs before collection.
+    * ``"doc"``: past the limit, when candidate_pairs also exceeds
+      DOC_MAJOR_FACTOR x doc-major's emission bound (n_parts x queries
+      x k) and DOC_MAJOR_MIN_ROWS, and the memory-guarded shard width
+      is at least DOC_MAJOR_MIN_WIDTH (``_search_fused_docmajor``).
+    * ``"term"``: otherwise. A bucket + term_id pruned scan ->
+      ``term_major_top``.
+
+    ``strategy="term"|"doc"`` pins that Spark route; ``"auto"`` (the
+    default) applies the rule. ``debug_counts`` records the ``route``
+    and ``driver_work`` (= candidate_pairs). ``as_local=True`` returns
+    pandas: the driver route skips the relation round trip, Spark
+    routes collect with ``toPandas()``.
     """
     from collections import Counter
 
     import pyarrow.dataset as pads
 
-    from splade_spark.functions.hashing import py_md5_int
     from splade_spark.functions.tokenize import py_tokenize
 
     stats = load_stats(index_dir)
@@ -634,7 +872,7 @@ def search_fused(
     all_terms = sorted({t for c in qtf.values() for t in c})
     dset = pads.dataset(os.path.join(index_dir, "term_dict"))
     tbl = dset.to_table(
-        columns=["term", "term_id", "df"], filter=pads.field("term").isin(all_terms)
+        columns=["term", "term_id", "df"], filter=term_filter(all_terms)
     )
     tid_of = dict(zip(tbl.column("term").to_pylist(), tbl.column("term_id").to_pylist()))
     df_of = dict(zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()))
@@ -647,60 +885,60 @@ def search_fused(
                 np.array([p[0] for p in pairs], dtype=np.int32),
                 np.array([p[1] for p in pairs], dtype=np.float64),
             )
-    if not q_arrs:
-        return spark.createDataFrame(
-            [], "qid long, doc_id long, score double, rank int"
-        )
     hit_terms = sorted({int(t) for tids, _ in q_arrs.values() for t in tids})
     buckets = buckets_for_terms(
         [t for t in all_terms if t in tid_of], n_buckets
     )
-
-    # strategy pick from dictionary metadata only (no postings access):
-    # term-major's score shuffle carries ~candidate_pairs rows (grows
-    # with batch size and match depth); doc-major's output is bounded
-    # by n_parts x n_queries x k regardless. Go doc-major when the
-    # collapse is worth its extra exchange (see module comment).
     candidate_pairs = sum(
         df_of.get(int(t), 0) for tids, _ in q_arrs.values() for t in tids
     )
+    # doc-major's output is bounded by n_parts x n_queries x k while
+    # term-major's score shuffle carries ~candidate_pairs rows; go
+    # doc-major when the collapse is worth its extra exchange (see the
+    # DOC_MAJOR_* comments), unless the guarded geometry would fragment
+    # shards below DOC_MAJOR_MIN_WIDTH docs
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
     emit_bound = n_parts * max(len(q_arrs), 1) * k
-    # memory-guarded geometry preview: if honoring the accumulator
-    # budget would fragment shards below DOC_MAJOR_MIN_WIDTH docs,
-    # auto stays term-major (pack-kernel row multiplication would eat
-    # the win); an explicit strategy="doc" still runs, guarded
     guarded_width, _ = _guarded_shard_geometry(
         int(stats["n_docs"]), n_parts, len(hit_terms)
     )
-    if strategy == "doc" or (
+    if not q_arrs or (strategy == "auto" and candidate_pairs <= DRIVER_POSTING_LIMIT):
+        route = "driver"
+    elif strategy == "doc" or (
         strategy == "auto"
         and candidate_pairs > DOC_MAJOR_FACTOR * emit_bound
         and candidate_pairs > DOC_MAJOR_MIN_ROWS
         and guarded_width >= DOC_MAJOR_MIN_WIDTH
     ):
-        return _search_fused_docmajor(
+        route = "doc"
+    else:
+        route = "term"
+    if debug_counts is not None:
+        debug_counts.update(route=route, driver_work=candidate_pairs)
+
+    if route == "driver":
+        tops = ()
+        if q_arrs:
+            blocks = pads.dataset(
+                os.path.join(index_dir, "postings"), partitioning="hive"
+            ).to_table(
+                columns=["term_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"],
+                filter=pads.field("bucket").isin(buckets)
+                & pads.field("term_id").isin(hit_terms),
+            ).to_pandas()
+            tops = score_batch(q_arrs, *decode_block_frame(blocks, gap_codec), k, threshold)
+        return tops_relation(spark, tops, as_local)
+    if route == "doc":
+        top = _search_fused_docmajor(
             spark, index_dir, q_arrs, buckets, hit_terms, k, threshold,
             gap_codec, int(stats["n_docs"]),
         )
-
-    postings = load_postings(spark, index_dir)
-    pruned = postings.filter(
-        in_literals("bucket", buckets) & in_literals("term_id", hit_terms)
-    )
-    partials = pruned.select(*_BLOCK_COLS).mapInPandas(
-        make_score_kernel(q_arrs, gap_codec),
-        schema="qid long, doc_id long, partial double",
-    )
-    scored = (
-        partials.groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-        .filter(F.col("score") > F.lit(threshold))
-    )
-    if len(q_arrs) == 1:
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return topk_window(top, k)
-    return topk_window(scored, k)
+    else:
+        top = term_major_top(
+            spark, index_dir, in_literals("bucket", buckets) & in_literals("term_id", hit_terms),
+            q_arrs, gap_codec, k, threshold,
+        )
+    return top.toPandas() if as_local else top
 
 
 def search(

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from splade_spark import SCORE_THRESHOLD, TOPK_DEFAULT
 from splade_spark.operators.index_query import (
+    DRIVER_POSTING_LIMIT,
     block_pairs_expr,
     buckets_for_queries,
     decode_blocks_df,
@@ -66,33 +67,6 @@ FUSED_DELEGATE_LIMIT = 4096
 # round-to-even boundary. BMP's certificate carries the same slop
 # (operators/bmp.py).
 PRUNE_EPS = 1.5e-6
-
-# search_maxscore_fused answers on the driver while its driver work
-# (retained postings of each query's terms, summed over queries) is at
-# most this; past it one Spark job decodes and scores in parallel.
-#
-# Pinned by scripts/driver_crossover_bench.py (perfbench's seeded
-# generators, k=1000, local[4], 4 cores / 15 GB; driver vs forced-Spark
-# route, best of 3, identical rows in every cell; ms for the pandas
-# return, then for a counted Spark relation):
-#   dense, 240k docs,  1 query,     394k postings  141 vs 1226 /  318 vs 1314
-#   dense, 240k docs,  4 queries,   1.8M           440 vs 2587 /  543 vs 2909
-#   dense, 240k docs,  16 queries,  7.3M          1177 vs 6029 / 1370 vs 6184
-#   dense, 240k docs,  32 queries,  14.8M         2239 vs 12223 / 2375 vs 11958
-#   selective, 30k docs, 1024 queries, 245k       1878 vs 4321 / 2874 vs 4087
-#   selective, 30k docs, 4096 queries, 981k       3644 vs 7907 / 6891 vs 8083
-# The driver wins every cell, so there is no crossover on this box up
-# to 14.8M: both routes grow linearly in postings and the driver's
-# ~0.15 us/posting undercuts Spark's ~0.8. The selective cells bound
-# the per-query fixed cost (4096 small queries, the most
-# search_maxscore's default strategy hands over, still win), so the
-# estimate needs no per-query term. The limit is the largest measured
-# cell, rounded down. Driver memory follows the UNIQUE retained
-# postings, not this sum (~80 B each at peak for one query: ~30 MB at
-# 394k; 16 queries over the same terms, 55 MB), so one query at the
-# limit peaks near 1.1 GB. More cores shrink only Spark's per-posting
-# share; re-measure before raising this on a cluster.
-DRIVER_POSTING_LIMIT = 14_000_000
 
 # Persisted working-set relations (query-term cache, block metadata,
 # per-query floors) from the LAST search_maxscore relation-path call.
@@ -183,31 +157,13 @@ def search_maxscore_fused(
 
     from splade_spark.operators.index_query import (
         buckets_for_terms,
-        decode_blocks_vectorized,
-        load_stats,
+        decode_block_frame,
+        score_batch,
         search_fused,
+        term_filter,
+        term_major_top,
+        tops_relation,
     )
-
-    import pandas as pd
-
-    _OUT_TYPES = {"qid": "int64", "doc_id": "int64", "score": "float64", "rank": "int32"}
-
-    def _ret_tops(tops):
-        """Per-query (qid, doc_ids, scores) in rank order -> requested
-        relation type, built from numpy columns (a Spark relation then
-        travels as Arrow batches, not as per-row tuples)."""
-        cols = [(np.full(len(d), q), d, s, np.arange(1, len(d) + 1)) for q, d, s in tops]
-        pdf = pd.DataFrame({
-            c: np.concatenate([col[i] for col in cols] + [[]]).astype(t)
-            for i, (c, t) in enumerate(_OUT_TYPES.items())
-        })
-        if as_local:
-            return pdf
-        return spark.createDataFrame(pdf, "qid long, doc_id long, score double, rank int")
-
-    def _ret_df(df):
-        """Spark relation -> requested relation type."""
-        return df.toPandas() if as_local else df
 
     stats = load_stats(index_dir)
     n_buckets = stats["n_buckets"]
@@ -223,7 +179,7 @@ def search_maxscore_fused(
     all_terms = sorted({t for c in qtf.values() for t in c})
     dict_tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
         columns=["term", "term_id", "max_impact", "df"],
-        filter=pads.field("term").isin(all_terms),
+        filter=term_filter(all_terms),
     )
     tinfo = {
         t: (int(tid), float(mi))
@@ -264,7 +220,7 @@ def search_maxscore_fused(
     ):
         if debug_counts is not None:
             debug_counts["route"] = "fused_fallback"
-        return _ret_df(search_fused(spark, index_dir, query_rows, k, threshold))
+        return search_fused(spark, index_dir, query_rows, k, threshold, as_local=as_local)
     # per query: [(term_id, q_tf, ub)], champion, total_ub
     q_plan: dict[int, list[tuple[int, float, float]]] = {}
     for qid, c in qtf.items():
@@ -278,7 +234,7 @@ def search_maxscore_fused(
     if not q_plan:
         if debug_counts is not None:
             debug_counts.update(route="driver", driver_work=0)
-        return _ret_tops([])
+        return tops_relation(spark, as_local=as_local)
     hit_terms = sorted({t for rows in q_plan.values() for t, _, _ in rows})
     buckets = buckets_for_terms([t for t in all_terms if t in tinfo], n_buckets)
 
@@ -303,9 +259,10 @@ def search_maxscore_fused(
     by_term = dict(iter(meta.groupby("term_id")))
 
     def fetch_decode(keys: list[np.ndarray]):
-        """Decode the blocks with the given packed keys driver-side."""
+        """(term_ids, doc_ids, impacts) of the blocks with the given
+        packed keys, decoded driver-side."""
         if not keys:
-            return {}
+            return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64), np.zeros(0)
         want = np.unique(np.concatenate(keys))
         tbl = post_ds.to_table(
             columns=["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"],
@@ -317,22 +274,18 @@ def search_maxscore_fused(
         # searchsorted recovers its exact rank
         rank = np.searchsorted(uniq_bid, tbl["block_id"].to_numpy())
         tbl = tbl[np.isin(tbl["term_id"].to_numpy(np.int64) << 32 | rank, want)]
-        out: dict[int, list] = {}
-        if len(tbl) == 0:
-            return out
-        ns = tbl["n"].to_numpy(dtype=np.int64)
-        doc_ids, impacts = decode_blocks_vectorized(
-            tbl["first_doc_id"].to_numpy(dtype=np.int64),
-            ns,
-            list(tbl["doc_gap_bytes"]),
-            list(tbl["impact_bytes"]),
-            gap_codec,
-        )
-        tid_rep = np.repeat(tbl["term_id"].to_numpy(dtype=np.int64), ns)
-        for t in {int(x) for x in tbl["term_id"]}:
-            m = tid_rep == t
-            out[t] = (doc_ids[m], impacts[m])
-        return out
+        return decode_block_frame(tbl, gap_codec)
+
+    def by_term_postings(keys: list[np.ndarray]) -> dict[int, tuple]:
+        """fetch_decode split per term: {term_id: (doc_ids, impacts)}."""
+        tids, doc_ids, impacts = fetch_decode(keys)
+        order = np.argsort(tids, kind="stable")
+        uniq_t, starts = np.unique(tids[order], return_index=True)
+        ends = np.append(starts[1:], len(order))
+        return {
+            int(t): (doc_ids[order[a:b]], impacts[order[a:b]])
+            for t, a, b in zip(uniq_t.tolist(), starts.tolist(), ends.tolist())
+        }
 
     # ---- pass 1 driver-side: champion floor -> theta per query ------
     champ_keys: list[np.ndarray] = []
@@ -352,7 +305,7 @@ def search_maxscore_fused(
         n_cum = np.cumsum(cm["n"].to_numpy()[order_b])
         nb = min(int(np.searchsorted(n_cum, k, side="left")) + 1, len(order_b))
         champ_keys.append(cm["key"].to_numpy()[order_b[:nb]])
-    champ_dec = fetch_decode(champ_keys)
+    champ_dec = by_term_postings(champ_keys)
 
     theta: dict[int, float] = {}
     cover_keys: list[np.ndarray] = []
@@ -401,7 +354,7 @@ def search_maxscore_fused(
             continue
         cand_of[qid] = cand
         cover_keys += q_cover
-    cover_dec = fetch_decode(cover_keys)
+    cover_dec = by_term_postings(cover_keys)
     for qid, rows in q_plan.items():
         cand = cand_of.get(qid)
         if cand is None:
@@ -442,25 +395,6 @@ def search_maxscore_fused(
         debug_counts.update(route=route, driver_work=driver_work)
         debug_counts.update(blocks_total=total_blocks, blocks_kept=n_retained)
 
-    # ---- driver path: retained work under the crossover, zero jobs --
-    if route == "driver":
-        ret_dec = fetch_decode(
-            [by_term[t]["key"].to_numpy()[m] for t, m in retained.items()]
-        )
-        tops = []
-        for qid, rows in q_plan.items():
-            dec = [(ret_dec[t][0], q_tf * ret_dec[t][1]) for t, q_tf, _ in rows if t in ret_dec]
-            if not dec:
-                continue
-            uniq, inv = np.unique(np.concatenate([d for d, _ in dec]), return_inverse=True)
-            totals = np.round(np.bincount(inv, weights=np.concatenate([w for _, w in dec])), 6)
-            keep = totals > threshold
-            doc, score = uniq[keep], totals[keep]
-            top = np.lexsort((doc, -score))[:k]
-            tops.append((qid, doc[top], score[top]))
-        return _ret_tops(tops)
-
-    # ---- distributed: ONE pruned scan -> kernel -> agg -> top-k -----
     q_arrs = {
         qid: (
             np.array([t for t, _, _ in rows], dtype=np.int32),
@@ -468,6 +402,12 @@ def search_maxscore_fused(
         )
         for qid, rows in q_plan.items()
     }
+    # ---- driver path: retained work under the limit, zero jobs -----
+    if route == "driver":
+        ret = fetch_decode([by_term[t]["key"].to_numpy()[m] for t, m in retained.items()])
+        return tops_relation(spark, score_batch(q_arrs, *ret, k, threshold), as_local)
+
+    # ---- distributed: ONE pruned scan -> kernel -> agg -> top-k -----
     if n_retained >= sum(len(tm) for tm in by_term.values()):
         # theta fallback retained everything — a per-term IN-list the
         # size of the whole block set buys nothing and bloats the
@@ -477,28 +417,11 @@ def search_maxscore_fused(
         keep_expr = block_pairs_expr(
             {t: by_term[t]["block_id"].to_numpy()[m] for t, m in retained.items()}
         )
-    from splade_spark.operators.index_query import (
-        _BLOCK_COLS,
-        load_postings,
-        make_score_kernel,
+    top = term_major_top(
+        spark, index_dir, in_literals("bucket", buckets) & keep_expr,
+        q_arrs, gap_codec, k, threshold,
     )
-
-    postings = load_postings(spark, index_dir)
-    pruned = postings.filter(in_literals("bucket", buckets) & keep_expr)
-    partials = pruned.select(*_BLOCK_COLS).mapInPandas(
-        make_score_kernel(q_arrs, gap_codec),
-        schema="qid long, doc_id long, partial double",
-    )
-    scored = (
-        partials.groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-        .filter(F.col("score") > F.lit(threshold))
-    )
-    if len(q_arrs) == 1:
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return _ret_df(topk_window(top, k))
-    return _ret_df(topk_window(scored, k))
-
+    return top.toPandas() if as_local else top
 
 def _literal_block_src(
     postings: DataFrame,

@@ -65,8 +65,9 @@ def test_auto_delegates_high_match_batches_to_docmajor(
 ):
     """strategy='auto' must route to the doc-major plan when the
     dictionary-estimated candidate pairs exceed the pruned-postings
-    threshold (forced here by zeroing both knobs), and the routed plan
-    must produce the term-major results."""
+    threshold (forced here by zeroing both knobs, and the driver limit
+    so the batch leaves the driver), and the routed plan must produce
+    the term-major results."""
     calls = []
     real = index_query._search_fused_docmajor
 
@@ -78,25 +79,57 @@ def test_auto_delegates_high_match_batches_to_docmajor(
     monkeypatch.setattr(index_query, "DOC_MAJOR_FACTOR", 0)
     monkeypatch.setattr(index_query, "DOC_MAJOR_MIN_ROWS", 0)
     monkeypatch.setattr(index_query, "DOC_MAJOR_MIN_WIDTH", 0)
+    monkeypatch.setattr(index_query, "DRIVER_POSTING_LIMIT", 0)
     qs = [(r.qid, r.text) for r in qrows[:4]]
-    got = search_fused(spark, built, qs, k=10, strategy="auto").collect()
+    counts: dict = {}
+    got = search_fused(
+        spark, built, qs, k=10, strategy="auto", debug_counts=counts
+    ).collect()
     assert calls, "auto did not take the doc-major path"
+    assert counts["route"] == "doc", counts
     want = search_fused(spark, built, qs, k=10, strategy="term").collect()
     assert sorted(map(_key, got)) == sorted(map(_key, want))
 
 
 def test_auto_keeps_term_major_for_small_batches(spark, built, qrows, monkeypatch):
-    """Default knobs: a smoke-sized batch is far under DOC_MAJOR_MIN_ROWS,
-    so auto must NOT pay the doc-shard exchange."""
+    """Default doc-major knobs: a smoke-sized batch is far under
+    DOC_MAJOR_MIN_ROWS, so once past the (zeroed) driver limit auto
+    must NOT pay the doc-shard exchange."""
     calls = []
     monkeypatch.setattr(
         index_query,
         "_search_fused_docmajor",
         lambda *a, **kw: calls.append(1),
     )
+    monkeypatch.setattr(index_query, "DRIVER_POSTING_LIMIT", 0)
     qs = [(r.qid, r.text) for r in qrows[:4]]
-    search_fused(spark, built, qs, k=10, strategy="auto").collect()
+    counts: dict = {}
+    search_fused(
+        spark, built, qs, k=10, strategy="auto", debug_counts=counts
+    ).collect()
     assert not calls
+    assert counts["route"] == "term", counts
+
+
+def test_auto_answers_small_batches_on_the_driver(spark, built, qrows):
+    """Default knobs: a smoke-sized batch's candidate pairs are far
+    under DRIVER_POSTING_LIMIT, so auto scores it on the driver and
+    runs no Spark job; collecting the result equals the term-major
+    rows."""
+    qs = [(r.qid, r.text) for r in qrows[:4]]
+    counts: dict = {}
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-route-probe", "search_fused auto")
+    try:
+        got = search_fused(spark, built, qs, k=10, debug_counts=counts)
+        jobs = sc.statusTracker().getJobIdsForGroup("driver-route-probe")
+    finally:
+        sc.setJobGroup("", "")
+    assert counts["route"] == "driver", counts
+    assert 0 < counts["driver_work"] <= index_query.DRIVER_POSTING_LIMIT
+    assert jobs == [], jobs
+    want = search_fused(spark, built, qs, k=10, strategy="term").collect()
+    assert sorted(map(_key, got.collect())) == sorted(map(_key, want))
 
 
 def test_guarded_shard_geometry_bounds_accumulator():

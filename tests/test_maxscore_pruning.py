@@ -159,7 +159,7 @@ def test_fused_guard_falls_back_before_postings_metadata(
     10^12-doc scale."""
     import pyarrow.dataset as pads
 
-    from splade_spark.operators import maxscore
+    from splade_spark.operators import index_query, maxscore
 
     real_dataset = pads.dataset
     opened: list[str] = []
@@ -174,6 +174,11 @@ def test_fused_guard_falls_back_before_postings_metadata(
         return real_dataset(path, *a, **kw)
 
     monkeypatch.setattr(pads, "dataset", spy)
+    # the fallback target answers batches under DRIVER_POSTING_LIMIT by
+    # reading postings with pyarrow itself (bounded by that limit); zero
+    # it so the fallback runs on Spark and any postings open is the
+    # guard's own
+    monkeypatch.setattr(index_query, "DRIVER_POSTING_LIMIT", 0)
     queries = [(1, "rare common")]
     counts: dict = {}
     got = maxscore.search_maxscore_fused(
