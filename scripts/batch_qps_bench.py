@@ -76,7 +76,15 @@ for q in range({n_queries}):
     terms = [f"w{{(q * 15485863 + i * 32452843) % V}}" for i in range({q_terms})]
     qrows.append((q, " ".join(terms)))
 
+from splade_spark.operators import index_query
 from splade_spark.operators.index_query import search_fused
+from splade_spark.operators.maxscore import search_maxscore_fused
+
+# time the Spark routes: under the default limit search_fused answers
+# batches whose candidate pairs fit DRIVER_POSTING_LIMIT on the driver,
+# and every local[N] level would time the same single-threaded code.
+# search_maxscore_fused (imported above) keeps its default limit.
+index_query.DRIVER_POSTING_LIMIT = 0
 # warmup: one tiny discarded batch so the timed run measures
 # steady-state throughput, not first-job JVM/codegen cost. Matters
 # when the index is reused (build_wall == 0): without it the query
@@ -87,9 +95,11 @@ search_fused(spark, idx, qrows[:64], k=1000).write.format("noop").mode("overwrit
 # shuffle-service spin-up the 64-query warmup doesn't reach (measured
 # l32: 2.7s run 1 vs 1.5s run 2); a serving session pays it once
 walls = []
+batch_counts = {{}}
 for _ in range(2):
     t0 = time.time()
-    search_fused(spark, idx, qrows, k=1000).write.format("noop").mode("overwrite").save()
+    search_fused(spark, idx, qrows, k=1000, debug_counts=batch_counts).write.format(
+        "noop").mode("overwrite").save()
     walls.append(time.time() - t0)
 batch_wall = min(walls)
 
@@ -102,6 +112,7 @@ res = {{
     "batch_query_wall_sec": round(batch_wall, 3),
     "batch_walls_all": [round(w, 3) for w in walls],
     "queries_per_sec": round(len(qrows) / batch_wall, 2),
+    "batch_route": batch_counts["route"],
 }}
 
 # single-query serving latency on the SAME selective corpus: the
@@ -114,21 +125,25 @@ res = {{
 n_single = {n_single}
 if n_single:
     import statistics
-    from splade_spark.operators.maxscore import search_maxscore_fused
     runs = [
-        ("fused", lambda q: search_fused(spark, idx, q, k=1000).toPandas()),
-        ("maxscore_fused", lambda q: search_maxscore_fused(spark, idx, q, k=1000).toPandas()),
+        ("fused", lambda q, c: search_fused(spark, idx, q, k=1000, debug_counts=c).toPandas()),
+        ("maxscore_fused", lambda q, c: search_maxscore_fused(
+            spark, idx, q, k=1000, debug_counts=c).toPandas()),
         # serving shape: driver fast path returns pandas directly,
         # skipping the createDataFrame -> collect round trip
-        ("maxscore_local", lambda q: search_maxscore_fused(spark, idx, q, k=1000, as_local=True)),
+        ("maxscore_local", lambda q, c: search_maxscore_fused(
+            spark, idx, q, k=1000, as_local=True, debug_counts=c)),
     ]
     for name, fn in runs:
-        fn([qrows[0]])  # warm this path
-        lats = []
+        fn([qrows[0]], {{}})  # warm this path
+        lats, routes = [], set()
         for i in range(1, n_single + 1):
+            counts = {{}}
             t0 = time.time()
-            fn([qrows[i]])
+            fn([qrows[i]], counts)
             lats.append(time.time() - t0)
+            routes.add(counts["route"])
+        res[f"single_{{name}}_routes"] = sorted(routes)
         lats.sort()
         res[f"single_{{name}}_p50_sec"] = round(statistics.median(lats), 3)
         res[f"single_{{name}}_p99_sec"] = round(lats[max(0, int(len(lats) * 0.99) - 1)], 3)

@@ -20,6 +20,13 @@ Corpus and queries come from the benchmark's seeded generators
   default strategy hands over) measure the driver loop's per-query
   fixed cost.
 
+* ``wide``: uniform 64-term vocabulary, 20-30 tokens per doc, so every
+  term's posting list holds about a third of the docs. A batch of B
+  queries splits the vocabulary between them, so the batch reads every
+  posting of the index once: its distinct postings equal its
+  ``driver_work``, the shape where the driver decodes the most per
+  candidate posting.
+
 Each route is timed twice: ``local`` returns pandas (``as_local=True``,
 the serving return) and ``relation`` returns a Spark DataFrame and
 counts it (what ``search_maxscore`` callers get).
@@ -30,9 +37,13 @@ counts it (what ``search_maxscore`` callers get).
 and as a relation collected with ``toPandas()`` (what ``search_fused``
 callers get). ``roundtrip_ms`` is the ``createDataFrame -> toPandas``
 round trip of the driver's result alone, the largest layer of the
-driver relation. ``driver_work`` is the batch's ``candidate_pairs``.
+driver relation. ``driver_work`` is the batch's ``candidate_pairs`` and
+``postings_read`` the distinct postings the driver decodes.
+``driver_peak_mb`` is the tracemalloc peak of one more driver call
+(as pandas): Python and numpy allocations, not the Arrow pool, whose
+process-lifetime peak is ``arrow_pool_peak_mb``.
 
-Usage: python scripts/driver_crossover_bench.py --workload dense|selective
+Usage: python scripts/driver_crossover_bench.py --workload dense|selective|wide
          [--api maxscore|fused] [--docs 30000] [--batches 1,4,16,64] [--cores 4]
 """
 
@@ -45,6 +56,7 @@ import shutil
 import sys
 import tempfile
 import time
+import tracemalloc
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -56,16 +68,24 @@ UNBOUNDED = 1 << 62
 
 
 def main() -> None:
-    from perfbench.gen import WORKLOADS, _corpus, _rng, query_pool
+    from perfbench.gen import WORKLOADS, Workload, _corpus, _rng, query_pool
 
+    wide = Workload(
+        name="wide", why="every posting read once per batch", vocab=64,
+        len_lo=20, len_hi=30, log_uniform=False, head_terms=0, batch_size=1,
+        n_batches=1, batch_share=1.0, salt_unit=None,
+    )
+    shapes = {**WORKLOADS, "wide": wide}
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", choices=sorted(WORKLOADS), default="dense")
+    ap.add_argument("--workload", choices=sorted(shapes), default="dense")
     ap.add_argument("--api", choices=("maxscore", "fused"), default="maxscore")
     ap.add_argument("--docs", type=int, default=30_000)
     ap.add_argument("--batches", default="1,4,16,64")
     ap.add_argument("--cores", type=int, default=4)
     args = ap.parse_args()
-    w = WORKLOADS[args.workload]
+    w = shapes[args.workload]
+
+    import pyarrow as pa
 
     from splade_spark.operators import index_query
     from splade_spark.operators.index_build import build_index
@@ -79,7 +99,20 @@ def main() -> None:
     docs = _corpus(w, _rng(w, SEED, "base"), 0, args.docs).frame()
     salt = {} if w.salt_unit is None else {"salt_unit": w.salt_unit}
     build_index(spark.createDataFrame(docs), idx, **salt)
-    pool = [row for batch in query_pool(w, SEED) for row in batch]
+    if w is wide:
+        def batch_of(B):
+            # query j holds terms j, j + B, ...: the batch covers the vocabulary
+            return [(j, " ".join(f"w{t}" for t in range(j, w.vocab, B))) for j in range(B)]
+
+        warm = [(0, "w0")]
+    else:
+        pool = [row for batch in query_pool(w, SEED) for row in batch]
+
+        def batch_of(B):
+            assert B <= len(pool), f"the {w.name} query pool holds {len(pool)} queries"
+            return pool[:B]
+
+        warm = None
 
     def best(fn):
         """(best wall ms over REPS calls, last result)."""
@@ -130,21 +163,25 @@ def main() -> None:
             cell[f"{route}_local_ms"], got = best(lambda: run(True))
             assert counts["route"] == route, counts
             rows[route] = ranked(got)
-            cell["driver_work"] = counts["driver_work"]
+            cell.update(driver_work=counts["driver_work"], postings_read=counts["postings_read"])
             cell[f"{route}_relation_ms"], rel = best(lambda: run(False).toPandas())
             assert ranked(rel).equals(rows[route]), route
+            if route == "driver":
+                tracemalloc.start()
+                run(True)
+                cell["driver_peak_mb"] = round(tracemalloc.get_traced_memory()[1] / 2**20, 1)
+                tracemalloc.stop()
         cell["roundtrip_ms"], _ = best(lambda: spark.createDataFrame(
             rows["driver"], index_query.TOPS_SCHEMA).toPandas())
+        cell["arrow_pool_peak_mb"] = round(pa.default_memory_pool().max_memory() / 2**20, 1)
         return cell, rows
 
     cell_of = fused_cell if args.api == "fused" else maxscore_cell
     batches = [int(b) for b in args.batches.split(",")]
-    cell_of(pool[: batches[0]])  # warm the Spark routes' first-use cost
+    cell_of(warm or batch_of(batches[0]))  # warm the Spark routes' first-use cost
     cells = []
     for B in batches:
-        qs = pool[:B]
-        assert len(qs) == B, f"the {w.name} query pool holds {len(pool)} queries"
-        cell, rows = cell_of(qs)
+        cell, rows = cell_of(batch_of(B))
         first = next(iter(rows.values()))
         assert all(r.equals(first) for r in rows.values()), B
         cells.append({"batch": B, **cell, "rows": len(first)})

@@ -56,16 +56,23 @@ qrows = [
     (q, " ".join(f"w{{(q * 15485863 + i * 32452843) % V}}" for i in range(4)))
     for q in range({n_queries})
 ]
+from splade_spark.operators import index_query
 from splade_spark.operators.index_query import search_fused
+# profile the Spark routes: under the default limit search_fused
+# answers batches whose candidate pairs fit DRIVER_POSTING_LIMIT on the
+# driver, with no executor side to scale
+index_query.DRIVER_POSTING_LIMIT = 0
 out = {{"cores": cores, "runs": []}}
 for rep in range(2):
+    counts = {{}}
     t0 = time.time()
-    df = search_fused(spark, idx, qrows, k=1000)
+    df = search_fused(spark, idx, qrows, k=1000, debug_counts=counts)
     prep = time.time() - t0
     t0 = time.time()
     df.write.format("noop").mode("overwrite").save()
     ex = time.time() - t0
-    out["runs"].append({{"prep_s": round(prep, 3), "exec_s": round(ex, 3)}})
+    out["runs"].append({{"prep_s": round(prep, 3), "exec_s": round(ex, 3),
+                        "route": counts["route"]}})
 print("RESULT " + json.dumps(out))
 """
 

@@ -68,7 +68,11 @@ def probe_build16m(spark):
 
 
 def probe_queryside8m(spark):
-    """4x the qps fixture: batch wall must grow sublinearly."""
+    """4x the qps fixture: batch wall must grow sublinearly. Times the
+    default route (the driver while candidate pairs fit
+    DRIVER_POSTING_LIMIT) and the Spark route (limit zeroed); both must
+    return the same rows."""
+    from splade_spark.operators import index_query
     from splade_spark.operators.index_query import search_fused
 
     idx, dt = _build(spark, 8_000_000, block_size=128)
@@ -76,11 +80,24 @@ def probe_queryside8m(spark):
         (q, " ".join(f"w{(q * 15485863 + i * 32452843) % 50000}" for i in range(4)))
         for q in range(1024)
     ]
-    search_fused(spark, idx, qrows[:64], k=1000).count()  # warm
-    t0 = time.time()
-    n = search_fused(spark, idx, qrows, k=1000).count()
-    assert n > 0
-    return {"build_s": round(dt, 1), "batch1024_s": round(time.time() - t0, 2)}
+    out = {"build_s": round(dt, 1)}
+    rows = {}
+    default_limit = index_query.DRIVER_POSTING_LIMIT
+    try:
+        for name, limit in (("default", default_limit), ("spark", 0)):
+            index_query.DRIVER_POSTING_LIMIT = limit
+            search_fused(spark, idx, qrows[:64], k=1000).count()  # warm
+            counts = {}
+            t0 = time.time()
+            rows[name] = search_fused(spark, idx, qrows, k=1000, debug_counts=counts).toPandas()
+            out[f"{name}_batch1024_s"] = round(time.time() - t0, 2)
+            out[f"{name}_route"] = counts["route"]
+    finally:
+        index_query.DRIVER_POSTING_LIMIT = default_limit
+    a, b = (r.sort_values(["qid", "rank"]).reset_index(drop=True) for r in rows.values())
+    assert len(a) > 0 and a.equals(b)
+    out["driver_work"] = counts["driver_work"]
+    return out
 
 
 def probe_bmp4m(spark):

@@ -40,8 +40,16 @@ spark = get_spark(app=f"scaling-{{cores}}", cores=cores)
 
 from splade_spark.sources.pages import load_documents
 from splade_spark.operators.index_build import build_index
+from splade_spark.operators import index_query
 from splade_spark.operators.index_query import search, search_fused
+from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.synth import derive_queries
+
+# time the Spark routes: under the default limit search_fused answers
+# batches whose candidate pairs fit DRIVER_POSTING_LIMIT on the driver,
+# and every local[N] level would time the same single-threaded code.
+# search_maxscore_fused (imported above) keeps its default limit.
+index_query.DRIVER_POSTING_LIMIT = 0
 
 docs = load_documents(spark, {sf_dir!r})
 rep = {rep}
@@ -76,10 +84,11 @@ n_q = len(qrows)
 # python-worker spawn, which varies with how warm the build left the
 # JVM (shorter builds at higher core counts warm it less)
 batch_walls = []
+batch_counts = {{}}
 for _ in range(2):
     t0 = time.time()
-    search_fused(spark, index_dir, [(r.qid, r.text) for r in qrows],
-                 k=1000).write.format("noop").mode("overwrite").save()
+    search_fused(spark, index_dir, [(r.qid, r.text) for r in qrows], k=1000,
+                 debug_counts=batch_counts).write.format("noop").mode("overwrite").save()
     batch_walls.append(time.time() - t0)
 batch_wall = min(batch_walls)
 
@@ -87,23 +96,26 @@ batch_wall = min(batch_walls)
 # exhaustive fused AND the Block-Max-pruned fused path (whose driver
 # fast path answers with zero cluster jobs while the retained postings
 # of each query's terms, summed over queries, fit DRIVER_POSTING_LIMIT)
-from splade_spark.operators.maxscore import search_maxscore_fused
-
 lat = []
 lat_ms = []
+routes, routes_ms = set(), set()
 single = queries.limit(12).collect()
 for row in single:
+    counts = {{}}
     t0 = time.time()
-    search_fused(spark, index_dir, [(row.qid, row.text)], k=1000).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    search_fused(spark, index_dir, [(row.qid, row.text)], k=1000,
+                 debug_counts=counts).write.format("noop").mode("overwrite").save()
     lat.append(time.time() - t0)
+    routes.add(counts["route"])
 for row in single:
+    counts = {{}}
     t0 = time.time()
-    search_maxscore_fused(spark, index_dir, [(row.qid, row.text)], k=1000).write.format(
+    search_maxscore_fused(spark, index_dir, [(row.qid, row.text)], k=1000,
+                          debug_counts=counts).write.format(
         "noop"
     ).mode("overwrite").save()
     lat_ms.append(time.time() - t0)
+    routes_ms.add(counts["route"])
 
 print("RESULT " + json.dumps({{
     "cores": cores,
@@ -114,8 +126,11 @@ print("RESULT " + json.dumps({{
     "n_queries": n_q,
     "batch_query_wall_sec": round(batch_wall, 3),
     "queries_per_sec": round(n_q / batch_wall, 2),
+    "batch_route": batch_counts["route"],
     "single_query_lat_sec": [round(x, 3) for x in lat],
+    "single_query_routes": sorted(routes),
     "single_query_maxscore_lat_sec": [round(x, 3) for x in lat_ms],
+    "single_query_maxscore_routes": sorted(routes_ms),
 }}))
 """
 

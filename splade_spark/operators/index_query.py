@@ -16,10 +16,10 @@ postings the batch's scoring visits.
    queries). The result relation is built from numpy columns
    (``tops_relation``); no Spark job runs before the caller collects.
 2. ``doc`` — past the limit, when candidate_pairs also exceeds
-   doc-major's emission bound (n_parts x queries x k) and
-   DOC_MAJOR_MIN_ROWS, and the memory-guarded shard width stays at or
-   above DOC_MAJOR_MIN_WIDTH: one exchange of the decoded postings by
-   doc range, every shard scores all queries locally.
+   doc-major's emission bound (n_parts x queries x k) and the
+   memory-guarded shard width stays at or above DOC_MAJOR_MIN_WIDTH:
+   one exchange of the decoded postings by doc range, every shard
+   scores all queries locally.
 3. ``term`` — otherwise: pruned scan -> Arrow score kernel -> one
    shuffle of per-(qid, doc) partials -> top-k.
 
@@ -162,11 +162,12 @@ def decode_doc_ids_vectorized(
     """Gap-decode MANY blocks' doc ids in one vectorized pass; ids
     come from a segmented cumsum of the gaps."""
     gaps = decode_gaps_many(ns, gap_bytes, gap_codec).astype(np.int64)
-    ends = np.cumsum(ns)
-    starts = ends - ns
-    g = np.cumsum(gaps)
-    seg_base = np.repeat(g[starts] - gaps[starts], ns)
-    return np.repeat(first_ids, ns) + (g - seg_base)
+    starts = np.cumsum(ns) - ns
+    first_gaps = gaps[starts]
+    # in place: one per-posting array besides the gaps
+    g = np.cumsum(gaps, out=gaps)
+    g -= np.repeat(g[starts] - first_gaps - first_ids, ns)
+    return g
 
 
 def decode_blocks_vectorized(
@@ -382,10 +383,6 @@ def make_score_kernel(q_arrs: dict, gap_codec: str = "vbyte"):
 # replicated-corpus point (164M pairs vs 192k bound, ratio ~850:
 # doc 6.3s vs term 50s at local[8]) sits deep on the doc side.
 DOC_MAJOR_FACTOR = 1
-# absolute floor: below ~2M candidate pairs term-major's single
-# shuffle is cheap in absolute terms and doc-major's extra exchange
-# + per-shard kernel overhead is pure loss regardless of the ratio
-DOC_MAJOR_MIN_ROWS = 2_000_000
 # Per-task dense-accumulator budget for the doc-major score kernel: a
 # live shard holds one float64 row of shard_width entries per distinct
 # hit term (bound = hit_terms x shard_width x 8 bytes — the kernel
@@ -654,16 +651,27 @@ def term_major_top(
 # summed over queries): at or under it the driver scores the batch
 # with score_batch; past it Spark decodes and scores in parallel.
 #
-# Pinned by scripts/driver_crossover_bench.py (perfbench's seeded
-# generators, k=1000, local[4], 4 cores / 15 GB; best of 3, identical
-# rows on every route in every cell; ms as pandas, then as a relation
-# collected with toPandas).
-# search_fused --api fused, driver vs pinned doc-major vs term-major:
-#   dense, 30k docs,   64 queries,   3.7M   117 / 336   1231 / 1210   2800 / 2666
-#   selective, 30k,  1024 queries,   245k   154 / 811   1871 / 1945   1918 / 1689
-#   dense, 120k docs,  64 queries,  14.8M   312 / 566   1527 / 1674  11856 / 11200
-# The driver relation's createDataFrame -> toPandas round trip alone
-# is 201, 728 and 236 ms of those: its largest layer.
+# Pinned by scripts/driver_crossover_bench.py (k=1000, local[4], 4
+# cores / 15 GB, 4 GB driver heap; best of 3, identical rows on every
+# route in every cell; ms as pandas / as a relation collected with
+# toPandas).
+# search_fused --api fused, driver vs pinned doc-major vs term-major.
+# "read" is the distinct postings the driver decodes; the wide shape
+# (64-term uniform vocabulary, every posting read once per batch) has
+# read = pairs, the driver's worst case per candidate posting:
+#   shape, docs, queries      pairs   read   driver       doc          term
+#   dense, 30k, 64            3.7M    87k     94 / 359   1315 / 1374   3125 / 2672
+#   selective, 30k, 1024      245k   122k    169 / 944   1712 / 2347   2208 / 1450
+#   dense, 120k, 64          14.8M   348k    294 / 482   1414 / 1571   9499 / 8995
+#   wide, 240k, 1             5.0M   5.0M    756 / 745   1868 / 2092   1949 / 1667
+#   wide, 240k, 4             5.0M   5.0M    661 / 672   1808 / 2009   2811 / 2446
+#   wide, 700k, 1            14.5M  14.5M   2452 / 2280  3104 / 3325   3833 / 3442
+#   wide, 700k, 4            14.5M  14.5M   2312 / 2418  3502 / 3062   7462 / 7125
+# The driver relation's createDataFrame -> toPandas round trip is 238,
+# 755 and 235 ms of the first three relation walls. Driver memory
+# follows the postings read: tracemalloc peak 24-31 MB on the first
+# three cells, 319 MB at 5.0M and 930 MB at 14.5M (67 B per posting,
+# reached in the vbyte gap decode), plus an Arrow pool of 49 / 149 MB.
 # search_maxscore_fused, driver vs Spark (one job), measured on the
 # per-query driver loop that score_batch replaced:
 #   dense, 240k docs,  1 query,     394k postings  141 vs 1226 /  318 vs 1314
@@ -673,14 +681,14 @@ def term_major_top(
 #   selective, 30k docs, 1024 queries, 245k       1878 vs 4321 / 2874 vs 4087
 #   selective, 30k docs, 4096 queries, 981k       3644 vs 7907 / 6891 vs 8083
 # The driver wins every cell, so there is no crossover on this box up
-# to 14.8M: the driver batch scorer adds ~18 ns per candidate posting
-# (dense 3.7M -> 14.8M) and doc-major ~27 ns on 4 cores. The selective
-# cells bound the per-query fixed cost, so the measure needs no
-# per-query term. The limit is the largest measured cell, rounded
-# down. Driver memory follows the UNIQUE postings read plus
-# DRIVER_ACC_BUDGET_BYTES of scoring transients. More cores shrink only
-# Spark's per-posting share; re-measure before raising this on a
-# cluster.
+# to 14.8M candidate pairs or 14.5M distinct postings; the margin is
+# narrowest (1.3x) where every candidate posting is distinct. The
+# selective cells bound the per-query fixed cost, so the measure
+# needs no per-query term. The limit is the largest measured cell,
+# rounded down; it also bounds the distinct postings read (read <=
+# pairs), which the wide cells cover, so the driver peaks near 1 GB.
+# More cores shrink only Spark's per-posting share; re-measure before
+# raising this on a cluster.
 DRIVER_POSTING_LIMIT = 14_000_000
 
 # Transient bytes score_batch may hold per chunk of queries: the
@@ -695,6 +703,9 @@ DRIVER_ACC_BUDGET_BYTES = 64 << 20
 # this many times the chunk's candidate postings (numpy 1.26, one
 # core: 3.8M postings at 0.5 cells each, dense 22 ms vs sparse 375
 # ms; 246k postings at 125 cells each, dense 441 ms vs sparse 12 ms).
+# End to end, perfbench dense batch_qps (10 s runs, seeds 2101-2108,
+# alternating): 162.6 queries/s with both sums vs 96.3 with the sparse
+# sum alone (this constant at 0), 8/8 pairs, sparse-only IQR 14.5.
 _DENSE_CELLS_PER_POSTING = 4
 
 TOPS_SCHEMA = "qid long, doc_id long, score double, rank int"
@@ -724,6 +735,35 @@ def _query_chunks(cost: np.ndarray, budget: int) -> list[int]:
     return bounds + [len(cost)]
 
 
+def _sum_dense(pairs, drank, imp, n_u, cells, threshold):
+    """(sorted cells, 6-dp scores > threshold) of a chunk's (row, start,
+    n, weight) pairs, summed in a dense accumulator with one row per
+    query. A term holds one posting per doc, so each pair's scatter-add
+    hits distinct cells; pairs add in term order, as the Spark kernels
+    do. Untouched cells stay 0.0 and fail ``> threshold`` (>= 0)."""
+    acc = np.zeros(cells)
+    for row, s, n, w in zip(*(a.tolist() for a in pairs)):
+        acc[row:row + n_u][drank[s:s + n]] += w * imp[s:s + n]
+    np.round(acc, 6, out=acc)
+    key = np.flatnonzero(acc > threshold)
+    return key, acc[key]
+
+
+def _sum_sparse(pairs, drank, imp, total, threshold):
+    """Same result as ``_sum_dense``: gather every pair's postings (idx
+    runs start..start+n per pair) and bincount over the sorted unique
+    cells."""
+    rows, starts, ns, ws = pairs
+    idx = np.repeat(starts - (np.cumsum(ns) - ns), ns) + np.arange(total)
+    keys = np.repeat(rows, ns) + drank[idx]
+    vals = np.repeat(ws, ns) * imp[idx]
+    del idx
+    key, inv = np.unique(keys, return_inverse=True)
+    score = np.round(np.bincount(inv, weights=vals), 6)
+    keep = score > threshold
+    return key[keep], score[keep]
+
+
 def score_batch(
     q_arrs: dict,
     tids: np.ndarray,
@@ -734,8 +774,9 @@ def score_batch(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Exhaustive top-k of every query in ``q_arrs`` ({qid: (term_ids,
     weights)}, term_ids ascending) over decoded postings (one entry
-    per posting in ``tids``/``doc_ids``/``impacts``) -> (qid, doc_id,
-    score, rank) columns in (qid, rank) order.
+    per posting in ``tids``/``doc_ids``/``impacts``, cheapest when
+    grouped by ascending term id) -> (qid, doc_id, score, rank) columns
+    in (qid, rank) order.
 
     One batch-at-a-time numpy kernel. Doc ids are replaced by their
     dense rank (doc ids are arbitrary int64), so (query, doc) is the
@@ -748,12 +789,18 @@ def score_batch(
     threshold before ranking; each query is pre-cut at its k-th score
     (ties kept), then one ``lexsort((doc, -score, q))`` ranks them."""
     qids = np.array(sorted(q_arrs), dtype=np.int64)
-    uniq_doc, drank = np.unique(doc_ids, return_inverse=True)
+    if (tids[1:] < tids[:-1]).any():
+        # group postings by term; callers that decode blocks sorted by
+        # term_id skip this sort and its three per-posting copies
+        order = np.argsort(tids, kind="stable")
+        tids, doc_ids, impacts = tids[order], doc_ids[order], impacts[order]
+        del order
+    # hash factorize + a sort of the unique ids only: the ranks of
+    # np.unique(return_inverse=True) without sorting every posting
+    drank, uniq_doc = pd.factorize(doc_ids, sort=True)
     n_u = len(uniq_doc)
-    order = np.argsort(tids, kind="stable")
-    drank, imp = drank[order], impacts[order]
-    uniq_t, t_start = np.unique(tids[order], return_index=True)
-    t_end = np.append(t_start[1:], len(order))
+    t_start = np.flatnonzero(np.diff(tids, prepend=-1))  # term ids are >= 0
+    uniq_t, t_end = tids[t_start], np.append(t_start[1:], len(tids))
     # one (query, term, weight) pair per query term that has postings
     n_terms = [len(q_arrs[q][0]) for q in qids.tolist()]
     p_q = np.repeat(np.arange(len(qids)), n_terms)
@@ -772,32 +819,12 @@ def score_batch(
         total = int(ns.sum())
         if not total:
             continue
+        pairs = ((p_q[pa:pb] - qa) * n_u, p_s[pa:pb], ns, p_w[pa:pb])
         cells = (qb - qa) * n_u
         if threshold >= 0 and cells <= _DENSE_CELLS_PER_POSTING * total:
-            # dense accumulator, one row per query. A term holds one
-            # posting per doc, so each pair's scatter-add hits distinct
-            # cells; pairs add in term order, as the Spark kernels do.
-            # Untouched cells stay 0.0 and fail `> threshold` anyway.
-            acc = np.zeros(cells)
-            for row, s, n, w in zip(
-                ((p_q[pa:pb] - qa) * n_u).tolist(), p_s[pa:pb].tolist(),
-                ns.tolist(), p_w[pa:pb].tolist(),
-            ):
-                acc[row:row + n_u][drank[s:s + n]] += w * imp[s:s + n]
-            np.round(acc, 6, out=acc)
-            key = np.flatnonzero(acc > threshold)
-            score = acc[key]
+            key, score = _sum_dense(pairs, drank, impacts, n_u, cells, threshold)
         else:
-            # sparse: gather every pair's postings (idx runs s..s+n per
-            # pair) and bincount over the sorted unique (query, doc) keys
-            idx = np.repeat(p_s[pa:pb] - (np.cumsum(ns) - ns), ns) + np.arange(total)
-            keys = np.repeat((p_q[pa:pb] - qa) * n_u, ns) + drank[idx]
-            ws = np.repeat(p_w[pa:pb], ns) * imp[idx]
-            del idx
-            key, inv = np.unique(keys, return_inverse=True)
-            score = np.round(np.bincount(inv, weights=ws), 6)
-            keep = score > threshold
-            key, score = key[keep], score[keep]
+            key, score = _sum_sparse(pairs, drank, impacts, total, threshold)
         # pre-cut: keep each query's candidates scoring >= its k-th
         # score (all ties at the cut survive to the lexsort). Cells are
         # sorted, so query j's candidates are one run of them.
@@ -845,14 +872,15 @@ def search_fused(
       from its numpy columns. Zero Spark jobs before collection.
     * ``"doc"``: past the limit, when candidate_pairs also exceeds
       DOC_MAJOR_FACTOR x doc-major's emission bound (n_parts x queries
-      x k) and DOC_MAJOR_MIN_ROWS, and the memory-guarded shard width
-      is at least DOC_MAJOR_MIN_WIDTH (``_search_fused_docmajor``).
+      x k) and the memory-guarded shard width is at least
+      DOC_MAJOR_MIN_WIDTH (``_search_fused_docmajor``).
     * ``"term"``: otherwise. A bucket + term_id pruned scan ->
       ``term_major_top``.
 
     ``strategy="term"|"doc"`` pins that Spark route; ``"auto"`` (the
-    default) applies the rule. ``debug_counts`` records the ``route``
-    and ``driver_work`` (= candidate_pairs). ``as_local=True`` returns
+    default) applies the rule. ``debug_counts`` records the ``route``,
+    ``driver_work`` (= candidate_pairs) and ``postings_read`` (the
+    distinct postings the driver decodes). ``as_local=True`` returns
     pandas: the driver route skips the relation round trip, Spark
     routes collect with ``toPandas()``.
     """
@@ -907,14 +935,16 @@ def search_fused(
     elif strategy == "doc" or (
         strategy == "auto"
         and candidate_pairs > DOC_MAJOR_FACTOR * emit_bound
-        and candidate_pairs > DOC_MAJOR_MIN_ROWS
         and guarded_width >= DOC_MAJOR_MIN_WIDTH
     ):
         route = "doc"
     else:
         route = "term"
     if debug_counts is not None:
-        debug_counts.update(route=route, driver_work=candidate_pairs)
+        debug_counts.update(
+            route=route, driver_work=candidate_pairs,
+            postings_read=sum(df_of.get(t, 0) for t in hit_terms),
+        )
 
     if route == "driver":
         tops = ()
@@ -925,8 +955,10 @@ def search_fused(
                 columns=["term_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"],
                 filter=pads.field("bucket").isin(buckets)
                 & pads.field("term_id").isin(hit_terms),
-            ).to_pandas()
-            tops = score_batch(q_arrs, *decode_block_frame(blocks, gap_codec), k, threshold)
+            ).to_pandas().sort_values("term_id", kind="stable")
+            decoded = decode_block_frame(blocks, gap_codec)
+            del blocks  # the encoded bytes are dead once decoded
+            tops = score_batch(q_arrs, *decoded, k, threshold)
         return tops_relation(spark, tops, as_local)
     if route == "doc":
         top = _search_fused_docmajor(

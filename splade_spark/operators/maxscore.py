@@ -274,7 +274,7 @@ def search_maxscore_fused(
         # searchsorted recovers its exact rank
         rank = np.searchsorted(uniq_bid, tbl["block_id"].to_numpy())
         tbl = tbl[np.isin(tbl["term_id"].to_numpy(np.int64) << 32 | rank, want)]
-        return decode_block_frame(tbl, gap_codec)
+        return decode_block_frame(tbl.sort_values("term_id", kind="stable"), gap_codec)
 
     def by_term_postings(keys: list[np.ndarray]) -> dict[int, tuple]:
         """fetch_decode split per term: {term_id: (doc_ids, impacts)}."""

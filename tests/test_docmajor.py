@@ -65,9 +65,9 @@ def test_auto_delegates_high_match_batches_to_docmajor(
 ):
     """strategy='auto' must route to the doc-major plan when the
     dictionary-estimated candidate pairs exceed the pruned-postings
-    threshold (forced here by zeroing both knobs, and the driver limit
-    so the batch leaves the driver), and the routed plan must produce
-    the term-major results."""
+    threshold (forced here by zeroing the doc-major knobs, and the
+    driver limit so the batch leaves the driver), and the routed plan
+    must produce the term-major results."""
     calls = []
     real = index_query._search_fused_docmajor
 
@@ -77,7 +77,6 @@ def test_auto_delegates_high_match_batches_to_docmajor(
 
     monkeypatch.setattr(index_query, "_search_fused_docmajor", spy)
     monkeypatch.setattr(index_query, "DOC_MAJOR_FACTOR", 0)
-    monkeypatch.setattr(index_query, "DOC_MAJOR_MIN_ROWS", 0)
     monkeypatch.setattr(index_query, "DOC_MAJOR_MIN_WIDTH", 0)
     monkeypatch.setattr(index_query, "DRIVER_POSTING_LIMIT", 0)
     qs = [(r.qid, r.text) for r in qrows[:4]]
@@ -92,15 +91,16 @@ def test_auto_delegates_high_match_batches_to_docmajor(
 
 
 def test_auto_keeps_term_major_for_small_batches(spark, built, qrows, monkeypatch):
-    """Default doc-major knobs: a smoke-sized batch is far under
-    DOC_MAJOR_MIN_ROWS, so once past the (zeroed) driver limit auto
-    must NOT pay the doc-shard exchange."""
+    """Once past the (zeroed) driver limit, a batch whose candidate
+    pairs stay within doc-major's emission bound (forced here by a
+    huge DOC_MAJOR_FACTOR) must NOT pay the doc-shard exchange."""
     calls = []
     monkeypatch.setattr(
         index_query,
         "_search_fused_docmajor",
         lambda *a, **kw: calls.append(1),
     )
+    monkeypatch.setattr(index_query, "DOC_MAJOR_FACTOR", 1 << 40)
     monkeypatch.setattr(index_query, "DRIVER_POSTING_LIMIT", 0)
     qs = [(r.qid, r.text) for r in qrows[:4]]
     counts: dict = {}

@@ -121,7 +121,7 @@ def test_empty_and_oov_batches(spark, corpus):
     for qrows in ([], [(7, "zzzz"), (8, "qqqq qqqq")]):
         counts: dict = {}
         assert _rows(search_fused(spark, path, qrows, k=10, debug_counts=counts)) == []
-        assert counts == {"route": "driver", "driver_work": 0}
+        assert counts == {"route": "driver", "driver_work": 0, "postings_read": 0}
         for strategy in ("term", "doc"):
             assert _rows(search_fused(spark, path, qrows, k=10, strategy=strategy)) == []
         assert _rows(search_maxscore_fused(spark, path, qrows, k=10, as_local=True)) == []
@@ -145,3 +145,24 @@ def test_squeezed_budget_scores_in_chunks(spark, corpus, monkeypatch):
         got = search_fused(spark, path, qrows, k=k, as_local=True)
         assert _rows(got) == _oracle_rows(oracle, qrows, k), k
     assert min(chunks) > 1, chunks
+
+
+@pytest.mark.parametrize(
+    "cells_per_posting, path", [(0, "_sum_sparse"), (1 << 40, "_sum_dense")]
+)
+def test_each_summation_path_matches_oracle(spark, corpus, monkeypatch, cells_per_posting, path):
+    """_DENSE_CELLS_PER_POSTING = 0 sends every chunk to the sparse sum,
+    a huge value every chunk to the dense accumulator; either path alone
+    returns the oracle's rows."""
+    path_dir, oracle, qrows = corpus
+    ran = []
+    for name in ("_sum_dense", "_sum_sparse"):
+        real = getattr(index_query, name)
+        monkeypatch.setattr(
+            index_query, name, lambda *a, _n=name, _f=real: ran.append(_n) or _f(*a)
+        )
+    monkeypatch.setattr(index_query, "_DENSE_CELLS_PER_POSTING", cells_per_posting)
+    for k in KS:
+        got = search_fused(spark, path_dir, qrows, k=k, as_local=True)
+        assert _rows(got) == _oracle_rows(oracle, qrows, k), k
+    assert ran and set(ran) == {path}, ran
