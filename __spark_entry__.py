@@ -113,20 +113,17 @@ def q_index_search_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_index_search_maxscore_k1000(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-Max/MaxScore-pruned search at k=1000; pruning is lossless
-    (operators/maxscore.py proof), so it shares the BM25 SQL twin.
-    strategy="relation" pins the all-DataFrame plan so this row
-    exercises it (auto would delegate a batch this small to the fused
-    planner, which index_search_maxscore_fused_k1000 already covers)."""
-    from splade_spark.operators.maxscore import search_maxscore
+    """Block-Max/MaxScore-pruned search at k=1000 on its Spark route:
+    driver_posting_limit=0 sends the retained blocks to the one pruned
+    Spark scan (term_major_top over the block_pairs_expr literal),
+    which index_search_maxscore_fused_k1000 answers on the driver.
+    Pruning is lossless (operators/maxscore.py proof), so it shares
+    the BM25 SQL twin."""
+    from splade_spark.operators.maxscore import search_maxscore_fused
 
     idx = _materialized_index(spark, sf_dir)
-    return search_maxscore(
-        spark,
-        idx,
-        derive_queries(load_documents(spark, sf_dir)),
-        k=1000,
-        strategy="relation",
+    return search_maxscore_fused(
+        spark, idx, _driver_query_rows(spark, sf_dir), k=1000, driver_posting_limit=0
     )
 
 

@@ -16,9 +16,8 @@ Corpus and queries come from the benchmark's seeded generators
   (the shape where pruning keeps the most); batch size scales the work
   linearly, so the cells locate the knee in postings.
 * ``selective``: uniform corpus, 4-term queries touching under 1% of
-  docs; batches of 1024 and 4096 queries (what ``search_maxscore``'s
-  default strategy hands over) measure the driver loop's per-query
-  fixed cost.
+  docs; batches of thousands of queries (a collected query relation)
+  measure the driver loop's per-query fixed cost.
 
 * ``wide``: uniform 64-term vocabulary, 20-30 tokens per doc, so every
   term's posting list holds about a third of the docs. A batch of B
@@ -29,7 +28,7 @@ Corpus and queries come from the benchmark's seeded generators
 
 Each route is timed twice: ``local`` returns pandas (``as_local=True``,
 the serving return) and ``relation`` returns a Spark DataFrame and
-counts it (what ``search_maxscore`` callers get).
+counts it (what callers without ``as_local`` get).
 
 ``--api fused`` times ``search_fused`` batches instead: the driver route
 (forced with an unbounded ``DRIVER_POSTING_LIMIT``) against the pinned
@@ -109,7 +108,12 @@ def main() -> None:
         pool = [row for batch in query_pool(w, SEED) for row in batch]
 
         def batch_of(B):
-            assert B <= len(pool), f"the {w.name} query pool holds {len(pool)} queries"
+            # past one pool, the next seeds' pools extend it, qids continuing
+            seed = SEED
+            while len(pool) < B:
+                seed += 1
+                more = [text for batch in query_pool(w, seed) for _, text in batch]
+                pool.extend([(len(pool) + i, text) for i, text in enumerate(more)])
             return pool[:B]
 
         warm = None

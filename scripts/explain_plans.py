@@ -81,15 +81,18 @@ def main() -> None:
 
     qr = [(int(r.qid), r.text) for r in qs.limit(2).collect()]
     sections.append((
-        "search_fused (driver-resident queries: doubly-pruned scan → one Arrow kernel → one shuffle → top-k)",
-        formatted(search_fused(spark, idx_dir, qr)),
+        "search_fused strategy='term' (driver-resident queries: doubly-pruned scan → one Arrow kernel → one shuffle → top-k)",
+        formatted(search_fused(spark, idx_dir, qr, strategy="term")),
         "What to check: the postings scan carries BOTH prune predicates as "
         "literals (bucket partition-dir pruning AND term_id row-group "
         "min/max skipping — no semi-join, no term_dict stage; term_ids were "
         "resolved driver-side via a pyarrow predicate read); decode + q_tf "
         "multiply + per-doc partial aggregation all happen inside ONE "
         "mapInPandas kernel, so the only exchange is candidate partials; "
-        "single-query top-k is TakeOrderedAndProject, not a window.",
+        "single-query top-k is TakeOrderedAndProject, not a window. "
+        "strategy='term' pins this Spark route: by default a batch this "
+        "small is scored on the driver and the result is a local relation "
+        "with no scan.",
     ))
 
     qr_batch = [(int(r.qid), r.text) for r in qs.collect()]
@@ -127,15 +130,16 @@ def main() -> None:
     ))
 
     sections.append((
-        "search_maxscore_fused (driver-side pruning passes → ONE pruned scan)",
-        formatted(search_maxscore_fused(spark, idx_dir, qr)),
+        "search_maxscore_fused driver_posting_limit=0 (driver-side pruning passes → ONE pruned scan)",
+        formatted(search_maxscore_fused(spark, idx_dir, qr, driver_posting_limit=0)),
         "What to check: the champion-floor and block-UB passes ran on the "
         "DRIVER (pyarrow metadata reads — they are invisible here); the "
         "distributed plan is just the retained-block scan (bucket partition "
-        "filter AND per-term block_id IN-lists pushed to parquet), one "
-        "mapInPandas kernel, one exchange, top-k. Compare with the ~12-stage "
-        "all-DataFrame search_maxscore plan this replaces for driver-resident "
-        "queries.",
+        "filter AND per-term block_id IN-lists pushed to parquet, so byte "
+        "reads scale with blocks KEPT), one mapInPandas kernel, one "
+        "exchange, top-k. driver_posting_limit=0 forces this Spark route: "
+        "by default a retained set this small is scored on the driver and "
+        "the result is a local relation with no scan.",
     ))
 
     sections.append((
@@ -192,27 +196,6 @@ def main() -> None:
         "(operators/bmp.py), exactly like `search_maxscore_fused`'s "
         "passes; its result is a driver-local relation. Over-limit terms "
         "fall back to `search_fused`, whose plan is documented above.",
-    ))
-
-    from splade_spark.operators.maxscore import search_maxscore
-
-    sections.append((
-        "search_maxscore strategy='relation' (final pruned-scan job)",
-        formatted(search_maxscore(spark, idx_dir, qs, strategy="relation")),
-        "What to check: this is the LAST job of the ~4-job relation plan "
-        "(the block-metadata persist, champion selection, and "
-        "retained-pair collect ran eagerly as their own jobs while the "
-        "relation was being planned — they are invisible here). The "
-        "postings scan carries the bucket partition filter plus the "
-        "retained set as a pushed per-term `block_id IN (...)` literal "
-        "filter (PushedFilters), so byte reads scale with blocks KEPT "
-        "(measured: BENCH/BASELINE.md pruning table); after the Arrow "
-        "decode it is a broadcast q_tf join → hash agg → window top-k. "
-        "The champion floor decodes only the top-block_max blocks "
-        "covering >= k postings per query (metadata window → driver-safe "
-        "collect → the same literal filter shape). Relations <= 4096 rows "
-        "never run it: strategy='auto' collects the texts and delegates "
-        "to the fused planner (zero-to-one cluster jobs).",
     ))
 
     out = [

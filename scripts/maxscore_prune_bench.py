@@ -7,10 +7,12 @@ row-group layer.
 Byte accounting is computed from the REAL parquet footers with
 pyarrow, by replaying parquet-mr's row-group statistics filter
 (keep a row group iff some disjunct `term_id = t AND block_id IN bs`
-intersects its min/max ranges) against the literal pair sets the
-live search actually fetched (`search_maxscore(debug_pairs=...)`),
-and summing the surviving row groups' compressed column-chunk sizes
-for exactly the columns each scan projects. Spark's own stage-level
+intersects its min/max ranges) against the retained pair set the
+live search actually kept
+(`search_maxscore_fused(debug_counts=...)["retained_pairs"]`, the
+literal its Spark route pushes to parquet), and summing the
+surviving row groups' compressed column-chunk sizes for exactly the
+columns each scan projects. Spark's own stage-level
 `inputBytes` metric is NOT used: on local[*] it attributes only
 footer reads (a probe with an impossible pushed filter and a
 full-table scan both reported byte-identical totals on a 5.7 MB
@@ -25,8 +27,9 @@ stopword term spans thousands of 8 MB groups; at 6M docs it would
 fit in one, and no within-term skipping would be measurable at any
 granularity). All TIMED searches run on the production-layout build
 (tiny row groups would inflate the driver metadata passes that the
-fused planner pays). The pair sets are logical (term_id, block_id),
-identical across the two physical layouts.
+fused planner pays). The pair set is logical (term_id, block_id),
+identical across the two physical layouts. Every pruned result is
+asserted equal to exhaustive DataFrame `search`.
 
 Two docID layouts:
   default (clustered): doc length ramps monotonically with doc_id —
@@ -56,7 +59,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # columns each scan projects (keep in sync with index_query._BLOCK_COLS
-# and the metadata projection in maxscore.search_maxscore)
+# and the block-metadata read in maxscore.search_maxscore_fused)
 PAYLOAD_COLS = ["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"]
 META_COLS = ["term_id", "block_id", "n", "first_doc_id", "last_doc_id", "block_max"]
 
@@ -125,14 +128,16 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from splade_spark.functions.tokenize import py_tokenize
     from splade_spark.operators import index_build
     from splade_spark.operators.index_build import build_index
     from splade_spark.operators.index_query import (
-        buckets_for_queries,
+        buckets_for_terms,
         load_stats,
         search,
+        search_fused,
     )
-    from splade_spark.operators.maxscore import search_maxscore
+    from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.session import get_spark
 
     spark = get_spark(app="maxscore-prune-bench", cores=args.cores)
@@ -190,10 +195,10 @@ def main() -> None:
     # row groups and serves every TIMED search (driver metadata passes
     # cost what they cost in production); `idx_acct` is written with
     # --rowgroup-kb groups purely for the byte ACCOUNTING, emulating
-    # the at-scale rgs-per-term ratio. Retained/cover/champion pair
-    # sets are logical (term_id, block_id) — identical across the two
-    # physical layouts — so pairs collected on `idx` replay exactly
-    # against `idx_acct`'s footers.
+    # the at-scale rgs-per-term ratio. The retained pair set is
+    # logical (term_id, block_id) — identical across the two physical
+    # layouts — so pairs collected on `idx` replay exactly against
+    # `idx_acct`'s footers.
     idx = tempfile.mkdtemp(prefix="prune_bench_")
     t0 = time.time()
     build_index(docs, idx, n_segments=4)
@@ -205,7 +210,9 @@ def main() -> None:
     index_build.POSTINGS_ROWGROUP_BYTES = saved_rg
 
     qtext = "rare " + " ".join(f"t{j}" for j in range(n_terms))
-    queries = spark.createDataFrame([(1, qtext)], "qid long, text string")
+    qrows = [(1, qtext)]
+    queries = spark.createDataFrame(qrows, "qid long, text string")
+    n_buckets = load_stats(idx)["n_buckets"]
 
     def timed(fn):
         best = float("inf")
@@ -215,20 +222,23 @@ def main() -> None:
             best = min(best, time.time() - t)
         return best, rows
 
-    # block-count + literal-pair evidence gathered ONCE, untimed
-    # (debug_counts adds two extra count jobs that must not pollute
-    # the timing; debug_pairs adds none)
+    def pairs(rows) -> set:
+        return {(r.doc_id, r.score) for r in rows}
+
+    def accounted(rows, counts: dict) -> dict:
+        """Replay the retained pass's literal pair set over the
+        accounting build's footers."""
+        terms = [t for _, text in rows for t in py_tokenize(text)]
+        return rowgroup_accounting(
+            os.path.join(idx_acct, "postings"),
+            buckets_for_terms(terms, n_buckets),
+            {"retained": counts["retained_pairs"]},
+        )
+
+    # block counts + the retained pair set gathered ONCE, untimed
     counts: dict = {}
-    pairs: dict = {}
-    search_maxscore(
-        spark, idx, queries, k=10, debug_counts=counts, debug_pairs=pairs,
-        strategy="relation",
-    ).collect()
-    acct = rowgroup_accounting(
-        os.path.join(idx_acct, "postings"),
-        buckets_for_queries(queries, load_stats(idx)["n_buckets"]),
-        pairs,
-    )
+    search_maxscore_fused(spark, idx, qrows, k=10, debug_counts=counts).collect()
+    acct = accounted(qrows, counts)
     # SECOND accounting query over the u-family (absent from the
     # candidate docs): theta comes from ordinary top docs and the
     # retained set is driven by BLOCK MAXIMA (the Block-Max mechanism
@@ -238,39 +248,22 @@ def main() -> None:
     # the high-max blocks are contiguous and row groups skip; under
     # --scattered every row group holds a high-max block and no stats
     # granularity can skip it.
-    q2 = spark.createDataFrame(
-        [(2, " ".join(f"u{j}" for j in range(n_terms)))], "qid long, text string"
-    )
+    q2rows = [(2, " ".join(f"u{j}" for j in range(n_terms)))]
     counts2: dict = {}
-    pairs2: dict = {}
-    r2_pruned = search_maxscore(
-        spark, idx, q2, k=10, debug_counts=counts2, debug_pairs=pairs2,
-        strategy="relation",
+    r2_pruned = search_maxscore_fused(
+        spark, idx, q2rows, k=10, debug_counts=counts2
     ).collect()
     # losslessness asserted for BOTH queries (this one caught the
     # uniform-candidate knife edge: retained=0 at 6M docs before the
     # PRUNE_EPS slack)
+    q2 = spark.createDataFrame(q2rows, "qid long, text string")
     r2_ex = search(spark, idx, q2, k=10).collect()
-    assert {(r.doc_id, r.score) for r in r2_pruned} == {
-        (r.doc_id, r.score) for r in r2_ex
-    }, "blockmax query pruned result diverged from exhaustive"
-    acct2 = rowgroup_accounting(
-        os.path.join(idx_acct, "postings"),
-        buckets_for_queries(q2, load_stats(idx)["n_buckets"]),
-        pairs2,
+    assert pairs(r2_pruned) == pairs(r2_ex), (
+        "blockmax query pruned result diverged from exhaustive"
     )
-    t_ms2, _ = timed(
-        lambda: search_maxscore(spark, idx, q2, k=10, strategy="relation").collect()
-    )
-    t_ms, r_ms = timed(
-        lambda: search_maxscore(spark, idx, queries, k=10, strategy="relation").collect()
-    )
+    acct2 = accounted(q2rows, counts2)
+
     t_ex, r_ex = timed(lambda: search(spark, idx, queries, k=10).collect())
-
-    from splade_spark.operators.index_query import search_fused
-    from splade_spark.operators.maxscore import search_maxscore_fused
-
-    qrows = [(1, qtext)]
     t_msf, r_msf = timed(
         lambda: search_maxscore_fused(spark, idx, qrows, k=10).collect()
     )
@@ -280,13 +273,11 @@ def main() -> None:
     t_serve, r_serve = timed(
         lambda: search_maxscore_fused(spark, idx, qrows, k=10, as_local=True)
     )
-    assert {(r.doc_id, r.score) for r in r_ms} == set(
+    assert pairs(r_ex) == set(
         zip(r_serve.doc_id.tolist(), r_serve.score.tolist())
     ), "as_local serving result diverged"
-    for other, name in [(r_ex, "exhaustive"), (r_msf, "fused-maxscore"), (r_exf, "fused")]:
-        assert {(r.doc_id, r.score) for r in r_ms} == {
-            (r.doc_id, r.score) for r in other
-        }, f"pruned result diverged from {name}"
+    for other, name in [(r_msf, "fused-maxscore"), (r_exf, "fused")]:
+        assert pairs(other) == pairs(r_ex), f"{name} result diverged from exhaustive"
     print(
         json.dumps(
             {
@@ -297,7 +288,6 @@ def main() -> None:
                 "blocks_total": counts["blocks_total"],
                 "blocks_kept": counts["blocks_kept"],
                 "kept_frac": round(counts["blocks_kept"] / counts["blocks_total"], 4),
-                "maxscore_best_s": round(t_ms, 3),
                 "exhaustive_best_s": round(t_ex, 3),
                 "maxscore_fused_best_s": round(t_msf, 3),
                 "maxscore_serve_best_s": round(t_serve, 3),
@@ -319,7 +309,6 @@ def main() -> None:
                     "kept_frac": round(
                         counts2["blocks_kept"] / counts2["blocks_total"], 4
                     ),
-                    "maxscore_best_s": round(t_ms2, 3),
                     **acct2,
                     "pruned_bytes_frac": round(
                         acct2["pruned_total_rg_bytes"]

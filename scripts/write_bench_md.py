@@ -278,10 +278,7 @@ def main() -> None:
             "retained set is driven by BLOCK MAXIMA — the layout-sensitive",
             "mechanism. Both are asserted lossless vs exhaustive on every",
             "run (the block-max query caught a knife-edge retain bug:",
-            "PRUNE_EPS in operators/maxscore.py). `search_maxscore`",
-            "is forced onto the all-DataFrame plan (strategy='relation');",
-            "with strategy='auto' a 1-query relation would delegate to the",
-            "fused row.",
+            "PRUNE_EPS in operators/maxscore.py).",
             "",
         ]
         prs = []
@@ -323,17 +320,11 @@ def main() -> None:
                 bold=True,
             )
         prow("`search` (exhaustive DataFrame) best wall (s)", "{}", "exhaustive_best_s")
-        prow("`search_maxscore` (all-DataFrame two-pass) best wall (s)", "{}", "maxscore_best_s", bold=True)
         if all("pruned_bytes_frac" in pr for pr in prs):
             prow("parquet row groups (query-term buckets)", "{:,}", "rg_count")
             lines.append(
-                "| row groups surviving the pruned payload fetches | "
-                + " | ".join(
-                    f"{pr['rg_survived']['retained']:,} retained-pass"
-                    f" / {pr['rg_survived'].get('cover', 0):,} cover"
-                    f" / {pr['rg_survived'].get('champion', 0):,} champion"
-                    for pr in prs
-                )
+                "| row groups surviving the retained-pass fetch | "
+                + " | ".join(f"{pr['rg_survived']['retained']:,}" for pr in prs)
                 + " |"
             )
             prow("exhaustive scan bytes (row-group accounted)", "{:,}", "exhaustive_rg_bytes")
@@ -388,8 +379,9 @@ def main() -> None:
             "",
             "Byte accounting replays parquet's row-group statistics filter",
             "over the REAL footers (pyarrow) against the literal",
-            "(term_id, block_id) pair sets the live search fetched",
-            "(`search_maxscore(debug_pairs=...)`), summing surviving row",
+            "(term_id, block_id) pair set the live search retained",
+            "(`search_maxscore_fused` `debug_counts[\"retained_pairs\"]`),",
+            "summing surviving row",
             "groups' compressed column-chunk sizes for the columns each scan",
             "projects. Spark's stage `inputBytes` is NOT usable for this on",
             "local[*]: a probe showed it attributes only footer reads (an",
@@ -410,9 +402,8 @@ def main() -> None:
             "can skip — the measured reason docID assignment (or BMP's",
             "doc-partitioned layout) matters at 100 TB. The block-metadata",
             "working set (the columns MaxScore prunes on) is read ONCE per",
-            "query batch into a persisted relation and amortizes across the",
-            "batch; production keeps it resident, like the fused planner's",
-            "driver-side dictionary pass.",
+            "query batch by the fused planner's driver-side pyarrow pass",
+            "and amortizes across the batch.",
             "",
             "Timed rows run on the production 8 MB-row-group build (the",
             "accounting build's tiny groups would inflate the fused",
@@ -422,16 +413,10 @@ def main() -> None:
             "admits up to ~1M block-metadata rows (~40 MB Arrow) before",
             "falling back, with the per-term cap as the true skew guard",
             "(a 10^12-doc stopword is ~10^8 blocks and never",
-            "materializes). The all-DataFrame RELATION plan pays a ~4-job",
-            "fixed floor (bucket literals, champion selection,",
-            "retained-pair collect, final pruned scan) that keeps it near",
-            "exhaustive parity at 1.5M; by 6M it pulls ahead of",
-            "exhaustive (persisted block metadata, literal pruned scan) —",
-            "the cluster path's at-scale shape. Small query relations",
-            "still delegate to the fused planner (strategy='auto'), whose",
-            "driver fast path answers with zero cluster jobs while the",
-            "retained postings of each query's terms, summed over",
-            "queries, fit DRIVER_POSTING_LIMIT.",
+            "materializes). Its driver fast path answers with zero",
+            "cluster jobs while the retained postings of each query's",
+            "terms, summed over queries, fit DRIVER_POSTING_LIMIT; past",
+            "it one pruned Spark scan reads only the retained blocks.",
             "",
         ]
 
@@ -754,9 +739,8 @@ def main() -> None:
             "`bm25_topk` retired; `index_search_appended` — build even",
             "half, append odd half, search — is new and the most expensive",
             "row by construction: two finalizes). `index_search_maxscore_",
-            "k1000` still PINS strategy='relation' (its ~4-job fixed floor",
-            "is expected at this SF; it wins at 6M docs, pruning table",
-            "above).",
+            "k1000` runs MaxScore's pruned Spark scan",
+            "(`driver_posting_limit=0`).",
             "",
             "### r3->r4 suite-drift attribution (BENCH/drift/*.json)",
             "",

@@ -140,10 +140,7 @@ def cmd_index(args) -> None:
 
 def cmd_query(args) -> None:
     from splade_spark.operators.index_query import search, search_quantized
-    from splade_spark.operators.maxscore import (
-        search_maxscore,
-        search_maxscore_fused,
-    )
+    from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.sources.pages import read_tsv_queries
     from splade_spark.sources.sinks import write_trec_run
 
@@ -163,16 +160,15 @@ def cmd_query(args) -> None:
         run = search_bmp(
             spark, args.index_dir, qrows, k=args.k, quantized=args.quantized
         )
-    elif args.fused:
-        # driver-resident pruned path: both MaxScore passes on the
-        # driver, one pruned scan on the cluster
-        qrows = [(r.qid, r.text) for r in queries.collect()]
-        run = search_maxscore_fused(spark, args.index_dir, qrows, k=args.k)
     elif args.quantized:
         run = search_quantized(spark, args.index_dir, queries, k=args.k)
+    elif args.prune:
+        # both MaxScore passes on the driver, then a driver answer or
+        # one pruned cluster scan
+        qrows = [(r.qid, r.text) for r in queries.collect()]
+        run = search_maxscore_fused(spark, args.index_dir, qrows, k=args.k)
     else:
-        fn = search_maxscore if args.prune else search
-        run = fn(spark, args.index_dir, queries, k=args.k)
+        run = search(spark, args.index_dir, queries, k=args.k)
     if args.remap:
         import os
 
@@ -342,11 +338,6 @@ def main(argv=None) -> None:
     pq.add_argument("--queries", required=True, help="tsv (qid\\ttext) or parquet")
     pq.add_argument("--k", type=int, default=1000)
     pq.add_argument("--prune", action="store_true", help="MaxScore pruning")
-    pq.add_argument(
-        "--fused",
-        action="store_true",
-        help="driver-side MaxScore passes, one pruned cluster scan",
-    )
     pq.add_argument(
         "--quantized",
         action="store_true",

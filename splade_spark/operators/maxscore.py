@@ -2,19 +2,21 @@
 
 The reference delegates this to the external PISA engine (binary
 format produced at pisa_inference/index2pisa.py:59-74; PISA runs
-Block-Max WAND / MaxScore on it, pisa_inference/README.md). Here the
-same pruning is expressed as ordinary DataFrame joins/filters — no
-Catalyst extension.
+Block-Max WAND / MaxScore on it, pisa_inference/README.md) on one
+node. ``search_maxscore_fused`` is the one implementation here: both
+pruning passes run on the driver over metadata-scale pyarrow reads,
+then the retained blocks are scored on the driver or by one pruned
+Spark scan. Callers holding a query relation collect its
+``(qid, text)`` rows first.
 
-Two-pass plan (SURVEY.md §4), per query but fully set-based:
+Two-pass plan (SURVEY.md §4), per query:
 
 Pass 1 (floor): for each query pick the champion term (highest
   ub_t = q_tf * max_impact_t); decode only its highest-block_max
   blocks covering >= k postings (O(k) floor work). The top-k
   decoded docs by single-term partial become floor CANDIDATES; their exact
   total scores are computed by decoding only the blocks whose
-  [first_doc_id, last_doc_id] range contains a candidate (a
-  broadcast range join — candidates are <= k per query). With >= k
+  [first_doc_id, last_doc_id] range contains a candidate. With >= k
   candidates exactly scored, theta_q = their k-th largest exact
   score is a valid lower bound of the true k-th score.
 
@@ -30,28 +32,30 @@ Pass 2 (prune + exact): a block b of term t upper-bounds every
 from __future__ import annotations
 
 import os
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow.dataset as pads
+from pyspark.sql import DataFrame, SparkSession
 
 from splade_spark import SCORE_THRESHOLD, TOPK_DEFAULT
+from splade_spark.functions.codec import BLOCK_SIZE
+from splade_spark.functions.tokenize import py_tokenize
+from splade_spark.operators.index_build import DEFAULT_SALT_UNIT
 from splade_spark.operators.index_query import (
     DRIVER_POSTING_LIMIT,
     block_pairs_expr,
-    buckets_for_queries,
-    decode_blocks_df,
+    buckets_for_terms,
+    decode_block_frame,
     in_literals,
-    load_postings,
     load_stats,
-    load_term_dict,
+    require_impacts,
+    score_batch,
+    search_fused,
+    term_filter,
+    term_major_top,
+    tops_relation,
 )
-from splade_spark.operators.retrieval import query_terms, topk_window
-
-# query relations at or under this row count delegate to the
-# driver-planned fused path (texts collect to ~MBs; the fused planner's
-# per-query work is trivial at this size and its df guard bounds the
-# driver-side metadata)
-FUSED_DELEGATE_LIMIT = 4096
 
 # slack on the block-retain inequality `block_ub >= theta - PRUNE_EPS`.
 # Final scores are rounded to 6dp and ties break by doc_id, so a doc
@@ -68,26 +72,6 @@ FUSED_DELEGATE_LIMIT = 4096
 # (operators/bmp.py).
 PRUNE_EPS = 1.5e-6
 
-# Persisted working-set relations (query-term cache, block metadata,
-# per-query floors) from the LAST search_maxscore relation-path call.
-# They must outlive the call — the returned lazy plan references them —
-# so each call evicts the previous call's set instead, and
-# ``release_maxscore_cache()`` is the explicit end-of-session hook.
-# Unpersisting is always safe: a still-held old plan just recomputes.
-_RELATION_WORKING_SET: list[DataFrame] = []
-
-
-def release_maxscore_cache() -> None:
-    """Unpersist the metadata/floor relations persisted by the most
-    recent ``search_maxscore`` relation-path call (storage-pool hygiene
-    for long-running sessions)."""
-    while _RELATION_WORKING_SET:
-        df = _RELATION_WORKING_SET.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-
 
 def search_maxscore_fused(
     spark: SparkSession,
@@ -100,24 +84,21 @@ def search_maxscore_fused(
     driver_posting_limit: int = DRIVER_POSTING_LIMIT,
     as_local: bool = False,
 ) -> DataFrame:
-    """Minimal-plan Block-Max/MaxScore search for driver-resident
-    queries: the pruning passes run DRIVER-SIDE on metadata-scale data
-    (pyarrow scans of the query terms' dictionary rows, block metadata
-    and the champion/candidate block bytes), so the distributed part
-    is ONE pruned scan -> score kernel -> agg -> top-k — the same
-    two-stage shape as ``search_fused``, minus the pruned blocks'
-    decode work. ``search_maxscore`` (all-DataFrame, ~12 stages) stays
-    the cluster path for query RELATIONS; this is the low-latency path
-    for the reference's own driver-resident query shape
-    (evaluate.py:80-86).
+    """Block-Max/MaxScore search for driver-resident queries. The
+    pruning passes run DRIVER-SIDE on metadata-scale data (pyarrow
+    scans of the query terms' dictionary rows, block metadata and the
+    champion/candidate block bytes); the retained blocks are then
+    scored on the driver or by ONE pruned Spark scan -> score kernel
+    -> agg -> top-k — the same two-stage shape as ``search_fused``,
+    minus the pruned blocks' decode work. This mirrors the reference,
+    where PISA prunes on one node (evaluate.py:80-86).
 
-    Lossless: same floor/prune rules as search_maxscore — a block
-    survives iff total_ub_q - ub_t + q_tf*block_max >= theta, theta =
-    k-th exact candidate score (candidates = top-k by champion
-    partial), so every doc with true score >= theta keeps all its
-    blocks. Scoring a superset of one query's retained blocks (the
-    union across queries) stays lossless: fully-retained docs score
-    exactly, others partially UNDER their true (< theta) score.
+    Lossless: a block survives iff total_ub_q - ub_t + q_tf*block_max
+    >= theta, theta = k-th exact candidate score (candidates = top-k
+    by champion partial), so every doc with true score >= theta keeps
+    all its blocks. Scoring a superset of one query's retained blocks
+    (the union across queries) stays lossless: fully-retained docs
+    score exactly, others partially UNDER their true (< theta) score.
 
     If ANY hit term's estimated block count (from the term_dict
     ``df`` — read in the same metadata-scale dictionary scan that
@@ -126,52 +107,40 @@ def search_maxscore_fused(
     to exhaustive ``search_fused`` BEFORE touching the postings
     dataset, so a stopword-ish term at 10^12 docs (~df/block_size
     metadata rows) can never materialize on the driver. The same
-    guard caps the summed estimate across hit terms at 4x the
+    guard caps the summed estimate across hit terms at 20x the
     per-term limit.
 
-    When the driver work left after pruning — the retained postings
-    of each query's terms, summed over queries (exact from the block
-    metadata's ``n``) — is at most ``driver_posting_limit``, the
-    retained set is scored entirely on the driver (numpy over the
+    Route: when the driver work left after pruning — the retained
+    postings of each query's terms, summed over queries (exact from
+    the block metadata's ``n``) — is at most ``driver_posting_limit``,
+    the retained set is scored entirely on the driver (numpy over the
     already-open pyarrow dataset) and returned as a local relation —
     zero cluster jobs, the analog of PISA answering a query from one
     node once Block-Max has shrunk the work below cluster scale.
-    Results are bit-identical to the distributed path (same kernel
-    arithmetic, same 6dp rounding, same tie rule). ``debug_counts``
-    records the ``route`` taken (``"driver"``, ``"spark"`` or
-    ``"fused_fallback"`` when the df guard trips) and the
-    ``driver_work`` estimate that chose it.
+    Otherwise ONE Spark scan reads only the retained blocks (bucket
+    partition filter AND per-term block_id IN-lists pushed to
+    parquet). Both routes return identical rows (same kernel
+    arithmetic, same 6dp rounding, same tie rule).
+
+    ``debug_counts``, when passed, receives the ``route`` taken
+    (``"driver"``, ``"spark"`` or ``"fused_fallback"`` when the df
+    guard trips), the ``driver_work`` estimate that chose it,
+    ``blocks_total``/``blocks_kept`` and ``retained_pairs``
+    (``{term_id: block_ids}``, the retained block set the answer
+    reads).
 
     ``as_local=True`` returns a pandas DataFrame instead of a Spark
-    one: when the driver fast path answers, the rows ALREADY live on
-    the driver and the createDataFrame -> collect round trip is the
+    one: when the driver route answers, the rows ALREADY live on the
+    driver and the createDataFrame -> collect round trip is the
     dominant serving cost (~0.3 s of py4j/Arrow transfer for a k-row
-    result — measured p50 0.42 s with it, ~0.05 s without). Paths
-    that do run cluster jobs just toPandas() the result, so the value
-    is identical either way.
+    result — measured p50 0.42 s with it, ~0.05 s without). The Spark
+    route just toPandas() the result, so the value is identical
+    either way.
     """
-    from collections import Counter
-
-    import numpy as np
-    import pyarrow.dataset as pads
-
-    from splade_spark.operators.index_query import (
-        buckets_for_terms,
-        decode_block_frame,
-        score_batch,
-        search_fused,
-        term_filter,
-        term_major_top,
-        tops_relation,
-    )
-
     stats = load_stats(index_dir)
     n_buckets = stats["n_buckets"]
     gap_codec = stats.get("gap_codec", "vbyte")
-    from splade_spark.operators.index_query import require_impacts
-
     require_impacts(stats)
-    from splade_spark.functions.tokenize import py_tokenize
 
     qtf: dict[int, Counter] = {
         qid: Counter(py_tokenize(text)) for qid, text in query_rows
@@ -192,13 +161,10 @@ def search_maxscore_fused(
     # scale guard BEFORE any postings access: estimate each hit term's
     # block count from its df (upper bound: full blocks + one partial
     # block per salt group). A term over the limit — or a query set
-    # whose total estimate exceeds 4x the limit — would make the
+    # whose total estimate exceeds 20x the limit — would make the
     # metadata scan below driver-scale-unsafe, so bail to the
     # exhaustive fused plan while still only having read the
     # dictionary rows.
-    from splade_spark.functions.codec import BLOCK_SIZE
-    from splade_spark.operators.index_build import DEFAULT_SALT_UNIT
-
     block_size = int(stats.get("block_size", BLOCK_SIZE))
     salt_unit = int(stats.get("salt_unit", DEFAULT_SALT_UNIT))
     blocks_est = {
@@ -391,9 +357,11 @@ def search_maxscore_fused(
     ret_n = {t: int(by_term[t]["n"].to_numpy()[m].sum()) for t, m in retained.items()}
     driver_work = sum(ret_n.get(t, 0) for rows in q_plan.values() for t, _, _ in rows)
     route = "driver" if driver_work <= driver_posting_limit else "spark"
+    ret_bids = {t: by_term[t]["block_id"].to_numpy()[m] for t, m in retained.items()}
     if debug_counts is not None:
         debug_counts.update(route=route, driver_work=driver_work)
         debug_counts.update(blocks_total=total_blocks, blocks_kept=n_retained)
+        debug_counts["retained_pairs"] = {t: sorted(b.tolist()) for t, b in ret_bids.items()}
 
     q_arrs = {
         qid: (
@@ -414,286 +382,9 @@ def search_maxscore_fused(
         # filter expression; the term semi-restriction is equivalent
         keep_expr = in_literals("term_id", retained)
     else:
-        keep_expr = block_pairs_expr(
-            {t: by_term[t]["block_id"].to_numpy()[m] for t, m in retained.items()}
-        )
+        keep_expr = block_pairs_expr(ret_bids)
     top = term_major_top(
         spark, index_dir, in_literals("bucket", buckets) & keep_expr,
         q_arrs, gap_codec, k, threshold,
     )
     return top.toPandas() if as_local else top
-
-def _literal_block_src(
-    postings: DataFrame,
-    buckets: list[int],
-    pairs_df: DataFrame,
-    fallback: DataFrame,
-    limit: int = 20_000,
-    pairs_sink: tuple[dict, str] | None = None,
-):
-    """Postings restricted to a (term_id, block_id) pair set.
-
-    When the pair set is driver-safe (<= limit rows) it becomes a
-    LITERAL per-term IN-filter on the scan — predicate pushdown skips
-    non-matching parquet row groups, so a 0.2%-retained block set
-    reads ~0.2% of the bytes. A broadcast semi-join cannot do this:
-    it scans every byte column row and filters afterwards, which at
-    10^12 docs means a full-index read per pass. Over the limit the
-    semi-join ``fallback`` is used (correct, full-scan)."""
-    rows = pairs_df.limit(limit + 1).collect()
-    if len(rows) > limit:
-        return fallback
-    by_t: dict[int, list[int]] = {}
-    for r in rows:
-        by_t.setdefault(int(r.term_id), []).append(int(r.block_id))
-    if pairs_sink is not None:
-        # observability only (bench byte accounting): record the literal
-        # pair set this pass fetches; adds no jobs — the collect above
-        # happens regardless
-        pairs_sink[0][pairs_sink[1]] = {t: sorted(bs) for t, bs in by_t.items()}
-    if not by_t:
-        return fallback.filter(F.lit(False))
-    return postings.filter(
-        in_literals("bucket", buckets) & block_pairs_expr(by_t)
-    )
-
-
-def search_maxscore(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOPK_DEFAULT,
-    threshold: float = SCORE_THRESHOLD,
-    debug_counts: dict | None = None,
-    exact_floor: bool | None = None,
-    strategy: str = "auto",
-    debug_pairs: dict | None = None,
-) -> DataFrame:
-    """Block-Max/MaxScore for query RELATIONS.
-
-    ``strategy="auto"`` (default): a small relation (<=
-    ``FUSED_DELEGATE_LIMIT`` rows) collects its texts and delegates to
-    ``search_maxscore_fused`` — the driver-planned pruning passes cost
-    zero cluster jobs and its df guard already bounds driver work, so
-    small batches skip this path's 4-job floor/prune overhead
-    entirely. Large relations run the all-DataFrame plan below, where
-    that fixed overhead amortizes across queries. ``strategy=
-    "relation"`` forces the all-DataFrame plan (tests/benches).
-    All strategies return identical rows (both paths are lossless and
-    share the kernel arithmetic and tie rule).
-
-    The floor pass decodes only the champion term's
-    highest-``block_max`` blocks covering >= k postings per query (a
-    metadata-window selection, so floor decode work is O(k) blocks,
-    not O(champion df) — at 10^12 docs a stopword champion would
-    otherwise decode ~10^10 postings just to seed theta). The
-    selected docs' champion partials are exact single-term lower
-    bounds, so any k of them floor the true k-th score — losslessness
-    never depends on the selection being the true champion top-k.
-
-    ``exact_floor=True``: exact-score those candidate docs via a
-    broadcast range join over covering blocks; theta = k-th exact
-    score. This is the theta that lets OTHER terms' blocks prune — a
-    champion-partial-only floor satisfies theta <= ub_champion, and
-    a non-champion block's UB = total_ub - ub_t + q_tf*block_max >=
-    ub_champion >= theta, so it can never prune.
-
-    ``exact_floor=False`` (cheap-theta): theta = k-th champion
-    partial, skipping the cover/exact pass (~half the stage count).
-    Still lossless, and effective for single-term queries (the
-    champion's own low-max blocks prune), but by the inequality
-    above it cannot prune multi-term queries' non-champion lists.
-
-    ``exact_floor=None`` (default) picks by depth: exact for
-    k <= 100 (the cover NLJ is O(k x query-blocks) and theta
-    tightness is what makes Block-Max pay), cheap beyond (at deep k
-    the k-th score bar is low, pruning is weak in any mode, and the
-    cover pass's candidate set is k-sized — overhead without win).
-    """
-    if strategy == "auto":
-        head = queries.select("qid", "text").limit(FUSED_DELEGATE_LIMIT + 1).collect()
-        if len(head) <= FUSED_DELEGATE_LIMIT:
-            return search_maxscore_fused(
-                spark,
-                index_dir,
-                [(int(r.qid), r.text) for r in head],
-                k=k,
-                threshold=threshold,
-                debug_counts=debug_counts,
-            )
-    if exact_floor is None:
-        exact_floor = k <= 100
-    # evict the PREVIOUS call's persisted working set (see
-    # _RELATION_WORKING_SET): one relation-path working set live at a
-    # time instead of one leaked per call
-    release_maxscore_cache()
-    term_dict = load_term_dict(spark, index_dir)
-    postings = load_postings(spark, index_dir)
-
-    qt = (
-        query_terms(queries)
-        .join(term_dict.select("term", "term_id", "max_impact"), "term")
-        .select(
-            "qid",
-            "term_id",
-            "q_tf",
-            (F.col("q_tf") * F.col("max_impact")).alias("ub"),
-        )
-    )
-    qt = qt.cache()
-    _RELATION_WORKING_SET.append(qt)
-
-    # bucket-literal partition pruning (content-addressed buckets —
-    # derived from query tokens, no postings/term_dict pre-scan),
-    # then per-term semi restriction
-    _stats = load_stats(index_dir)
-    from splade_spark.operators.index_query import require_impacts
-
-    require_impacts(_stats)
-    n_buckets = _stats["n_buckets"]
-    gap_codec = _stats.get("gap_codec", "vbyte")
-    buckets = buckets_for_queries(queries, n_buckets)
-    blocks = postings.filter(in_literals("bucket", buckets)).join(
-        F.broadcast(qt.select("term_id").distinct()), "term_id", "left_semi"
-    )
-    # The pruning passes below (champion selection, cover join, retain
-    # filter, and their driver collects) all run over block METADATA.
-    # Materialize that projection ONCE and persist it: without this,
-    # each pass re-scans the postings parquet (metadata column chunks
-    # plus per-file footers, 4-5x), which at the bench scale costs more
-    # bytes than the exhaustive payload read. The persisted relation is
-    # the query terms' block-summary working set — O(query postings /
-    # block_size) rows, executor-distributed, never driver-resident —
-    # i.e. exactly the metadata a block-max index keeps hot at scale.
-    meta = blocks.select(
-        "term_id", "block_id", "n", "first_doc_id", "last_doc_id", "block_max"
-    ).persist()
-    _RELATION_WORKING_SET.append(meta)
-    # per-(query, block) metadata — no bytes, no decode
-    blocks_meta = meta.drop("n").join(F.broadcast(qt), "term_id")
-
-    # ---- pass 1: champion-term floor ----------------------------------
-    champ_w = Window.partitionBy("qid").orderBy(F.desc("ub"), F.asc("term_id"))
-    champions = (
-        qt.withColumn("rn", F.row_number().over(champ_w)).filter("rn = 1").drop("rn")
-    )
-    champ_keys = F.broadcast(champions.select("qid", "term_id", "q_tf"))
-    # per query keep only the champion blocks with the highest
-    # block_max until their postings cover >= k docs — the metadata
-    # window runs over champion-block rows only, the decode over
-    # ~k/block_size blocks instead of the whole champion posting list
-    champ_meta = meta.select("term_id", "block_id", "n", "block_max").join(
-        champ_keys, "term_id"
-    )
-    cum_w = (
-        Window.partitionBy("qid")
-        .orderBy(F.desc("block_max"), F.asc("block_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sel_pairs = (
-        champ_meta.withColumn("cum_n", F.sum("n").over(cum_w))
-        .filter(F.col("cum_n") - F.col("n") < k)
-        .select("term_id", "block_id")
-        .distinct()
-    )
-    champ_sel = _literal_block_src(
-        postings,
-        buckets,
-        sel_pairs,
-        fallback=blocks.join(
-            F.broadcast(sel_pairs), ["term_id", "block_id"], "left_semi"
-        ),
-        pairs_sink=(debug_pairs, "champion") if debug_pairs is not None else None,
-    )
-    champ_decoded = decode_blocks_df(champ_sel, gap_codec)
-    champ_partials = champ_decoded.join(champ_keys, "term_id").select(
-        "qid", "doc_id", (F.col("q_tf") * F.col("impact")).alias("partial")
-    )
-    kth_w = Window.partitionBy("qid").orderBy(F.desc("partial"), F.asc("doc_id"))
-    if not exact_floor:
-        # theta = k-th largest champion partial among the decoded docs:
-        # each is an exact lower bound of its doc's true score, so
-        # >= k docs truly reach theta
-        floors = (
-            champ_partials.withColumn("rn", F.row_number().over(kth_w))
-            .filter(F.col("rn") == k)
-            .select("qid", F.col("partial").alias("theta"))
-        )
-    else:
-        candidates = (
-            champ_partials.withColumn("rn", F.row_number().over(kth_w))
-            .filter(F.col("rn") <= k)
-            .select("qid", "doc_id")
-        )
-        # exact-score the candidates: decode only blocks whose doc range
-        # covers a candidate doc (broadcast NLJ on the tiny candidate set)
-        cover_pairs = blocks_meta.alias("b").join(
-            F.broadcast(candidates).alias("c"),
-            (F.col("b.qid") == F.col("c.qid"))
-            & (F.col("c.doc_id") >= F.col("b.first_doc_id"))
-            & (F.col("c.doc_id") <= F.col("b.last_doc_id")),
-        )
-        cover_sel = cover_pairs.select("term_id", "block_id").distinct()
-        cover_blocks = _literal_block_src(
-            postings,
-            buckets,
-            cover_sel,
-            fallback=blocks.join(cover_sel, ["term_id", "block_id"], "left_semi"),
-            pairs_sink=(debug_pairs, "cover") if debug_pairs is not None else None,
-        )
-        cand_scores = (
-            decode_blocks_df(cover_blocks, gap_codec)
-            .join(F.broadcast(candidates), "doc_id")
-            .join(F.broadcast(qt.select("qid", "term_id", "q_tf")), ["qid", "term_id"])
-            .groupBy("qid", "doc_id")
-            .agg(F.sum(F.col("q_tf") * F.col("impact")).alias("exact"))
-        )
-        floors = (
-            cand_scores.groupBy("qid")
-            .agg(
-                F.count("*").alias("m"),
-                F.sort_array(F.collect_list("exact"), False).alias("xs"),
-            )
-            .filter(F.col("m") >= k)
-            .select("qid", F.element_at("xs", k).alias("theta"))
-        )
-
-    # ---- pass 2: block prune + exact scoring --------------------------
-    total_ub = qt.groupBy("qid").agg(F.sum("ub").alias("total_ub"))
-    retained_pairs = (
-        blocks_meta.join(F.broadcast(total_ub), "qid")
-        .join(F.broadcast(floors), "qid", "left")
-        .withColumn("theta", F.coalesce(F.col("theta"), F.lit(threshold)))
-        .withColumn(
-            "block_ub",
-            F.col("total_ub") - F.col("ub") + F.col("q_tf") * F.col("block_max"),
-        )
-        # PRUNE_EPS: rounding-tie + float-summation slack, see constant
-        .filter(F.col("block_ub") >= F.col("theta") - F.lit(PRUNE_EPS))
-        .select("qid", "term_id", "block_id", "q_tf")
-    )
-    if debug_counts is not None:
-        debug_counts["blocks_total"] = blocks_meta.count()
-        debug_counts["blocks_kept"] = retained_pairs.count()
-
-    # floors feed BOTH the retained-pair collect below and the final
-    # scoring DAG; persist the (one-row-per-query) relation so the
-    # champion decode chain is not recomputed per action
-    floors = floors.persist()
-    _RELATION_WORKING_SET.append(floors)
-    retained_sel = retained_pairs.select("term_id", "block_id").distinct()
-    retained_blocks = _literal_block_src(
-        postings,
-        buckets,
-        retained_sel,
-        fallback=blocks.join(retained_sel, ["term_id", "block_id"], "left_semi"),
-        pairs_sink=(debug_pairs, "retained") if debug_pairs is not None else None,
-    )
-    scored = (
-        decode_blocks_df(retained_blocks, gap_codec)
-        .join(F.broadcast(retained_pairs), ["term_id", "block_id"])
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum(F.col("q_tf") * F.col("impact")), 6).alias("score"))
-        .filter(F.col("score") > F.lit(threshold))
-    )
-    return topk_window(scored, k)

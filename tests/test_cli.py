@@ -47,14 +47,12 @@ def test_cli_index_and_query(spark, tmp_path, capsys):
     ]
     assert all(len(line.split(" ")) == 6 for line in lines)
 
-    # fused (driver-side pruning) and quantized variants run the same
-    # queries through their own engines
-    for flag in ("--fused", "--quantized"):
-        cli.main(
-            ["query", "--index-dir", idx, "--queries", str(qtsv), "--k", "5", flag]
-        )
-        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert out["rows"] == 10, flag
+    # the quantized variant runs the same queries through its own engine
+    cli.main(
+        ["query", "--index-dir", idx, "--queries", str(qtsv), "--k", "5", "--quantized"]
+    )
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["rows"] == 10
 
     cli.main(["describe", "--index-dir", idx])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

@@ -68,17 +68,22 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"qid", "doc_id", "score", "rank"}
 
 
-def test_maxscore_entry_takes_relation_plan(spark, monkeypatch):
-    """The driver row index_search_maxscore_k1000 exists to cover the
-    all-DataFrame MaxScore plan — it must NOT delegate to the fused
-    planner (which has its own row)."""
+def test_maxscore_entry_takes_spark_route(spark, monkeypatch):
+    """The driver row index_search_maxscore_k1000 exists to cover
+    MaxScore's pruned Spark scan — it must reach term_major_top from
+    search_maxscore_fused (not the driver route, which
+    index_search_maxscore_fused_k1000 covers, nor the df-guard
+    fallback through search_fused)."""
     from splade_spark.operators import maxscore as ms
 
-    def boom(*a, **kw):
-        raise AssertionError(
-            "index_search_maxscore_k1000 delegated to search_maxscore_fused"
-        )
+    calls = []
+    real = ms.term_major_top
 
-    monkeypatch.setattr(ms, "search_maxscore_fused", boom)
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(ms, "term_major_top", spy)
     df = entrymod.queries()["index_search_maxscore_k1000"](spark, SF_SMOKE)
+    assert calls == [1], "index_search_maxscore_k1000 did not run the pruned Spark scan"
     assert df.count() > 0

@@ -15,7 +15,7 @@ import pytest
 
 from splade_spark.operators.index_build import build_index
 from splade_spark.operators.index_query import search
-from splade_spark.operators.maxscore import search_maxscore
+from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.sources.pages import load_documents
 from splade_spark.synth import derive_queries
 
@@ -42,8 +42,9 @@ def test_maxscore_lossless_and_prunes(spark, built):
         .reset_index(drop=True)
     )
     counts: dict = {}
+    qrows = [(int(r.qid), r.text) for r in queries.collect()]
     got = (
-        search_maxscore(spark, built, queries, k=K, debug_counts=counts, strategy="relation")
+        search_maxscore_fused(spark, built, qrows, k=K, debug_counts=counts)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -68,9 +69,10 @@ def test_maxscore_prunes_skewed_corpus(spark, tmp_path):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     index_dir = str(tmp_path / "skew_idx")
     build_index(docs, index_dir, n_segments=1, n_buckets=4, block_size=8, salt_unit=64)
-    qdf = spark.createDataFrame([(1, "alpha beta")], "qid long, text string")
+    qrows = [(1, "alpha beta")]
+    qdf = spark.createDataFrame(qrows, "qid long, text string")
     counts: dict = {}
-    got = search_maxscore(spark, index_dir, qdf, k=1, debug_counts=counts, strategy="relation").toPandas()
+    got = search_maxscore_fused(spark, index_dir, qrows, k=1, debug_counts=counts).toPandas()
     want = search(spark, index_dir, qdf, k=1).toPandas()
     assert got.equals(want)
     assert int(got.doc_id.iloc[0]) == 0
@@ -78,42 +80,20 @@ def test_maxscore_prunes_skewed_corpus(spark, tmp_path):
 
 
 def test_maxscore_single_term_queries(spark, built):
-    docs = load_documents(spark, SF_SMOKE)
-    qdf = spark.createDataFrame(
-        [(1, "the"), (2, "zzznotaterm"), (3, "spark table")],
-        "qid long, text string",
-    )
+    qrows = [(1, "the"), (2, "zzznotaterm"), (3, "spark table")]
+    qdf = spark.createDataFrame(qrows, "qid long, text string")
     want = search(spark, built, qdf, k=K).toPandas()
-    got = search_maxscore(spark, built, qdf, k=K, strategy="relation").toPandas()
+    got = search_maxscore_fused(spark, built, qrows, k=K).toPandas()
     w = want.sort_values(["qid", "rank"]).reset_index(drop=True)
     g = got.sort_values(["qid", "rank"]).reset_index(drop=True)
     assert g.equals(w)
     assert set(g.qid) <= {1, 3}  # OOV query empty
 
 
-def test_auto_strategy_delegates_and_matches_relation_path(spark, built):
-    """A small query relation under strategy='auto' delegates to the
-    driver-planned fused path; rows must equal the forced all-DataFrame
-    plan exactly (both lossless, same kernel arithmetic and tie rule)."""
-    docs = load_documents(spark, SF_SMOKE)
-    queries = derive_queries(docs)
-    auto = (
-        search_maxscore(spark, built, queries, k=K)
-        .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    )
-    rel = (
-        search_maxscore(spark, built, queries, k=K, strategy="relation")
-        .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    )
-    assert auto.equals(rel)
-
-
 def test_fused_as_local_identity(spark, built):
     """as_local=True returns the same relation as pandas — including
     the empty (all-OOV) shape — at ~zero Spark-materialization cost."""
     import pandas as pd
-
-    from splade_spark.operators.maxscore import search_maxscore_fused
 
     docs = load_documents(spark, SF_SMOKE)
     queries = derive_queries(docs)

@@ -19,7 +19,6 @@ from splade_spark.operators.index_build import build_index
 from splade_spark.operators.index_query import search
 from splade_spark.operators.maxscore import (
     DRIVER_POSTING_LIMIT,
-    search_maxscore,
     search_maxscore_fused,
 )
 
@@ -52,47 +51,32 @@ def skewed_index(spark, tmp_path_factory):
     return idx
 
 
-def test_pruning_fires_and_stays_lossless(spark, skewed_index):
-    queries = spark.createDataFrame([(1, "rare common")], "qid long, text string")
-    counts: dict = {}
-    pruned = search_maxscore(
-        spark, skewed_index, queries, k=10, debug_counts=counts, strategy="relation"
-    ).collect()
-    assert counts["blocks_total"] > 50, counts
-    kept_frac = counts["blocks_kept"] / counts["blocks_total"]
-    assert kept_frac < 0.5, counts
-
-    exhaustive = search(spark, skewed_index, queries, k=10).collect()
-    assert [(r.qid, r.doc_id, r.rank) for r in sorted(pruned, key=lambda r: r.rank)] == [
-        (r.qid, r.doc_id, r.rank) for r in sorted(exhaustive, key=lambda r: r.rank)
-    ]
-    # scores exact, not just ranks
-    assert {(r.doc_id, r.score) for r in pruned} == {
-        (r.doc_id, r.score) for r in exhaustive
-    }
-
-
 def test_fused_maxscore_matches_and_prunes(spark, skewed_index):
-    from splade_spark.operators.maxscore import search_maxscore_fused
-
-    queries = spark.createDataFrame([(1, "rare common")], "qid long, text string")
-    exhaustive = search(spark, skewed_index, queries, k=10).collect()
-    # driver fast path (default) AND the distributed pruned-scan branch
-    # (forced with driver_posting_limit=0) must both match exactly
-    for limit in (DRIVER_POSTING_LIMIT, 0):
-        counts: dict = {}
-        fused = search_maxscore_fused(
-            spark,
-            skewed_index,
-            [(1, "rare common")],
-            k=10,
-            debug_counts=counts,
-            driver_posting_limit=limit,
-        ).collect()
-        assert counts["blocks_kept"] / counts["blocks_total"] < 0.5, counts
-        assert {(r.doc_id, r.score, r.rank) for r in fused} == {
-            (r.doc_id, r.score, r.rank) for r in exhaustive
-        }, limit
+    """Pruning FIRES (< half the blocks kept) and stays exact on both
+    routes, for the two-term query and for a single-term query (the
+    common term's low-dl docs concentrate its high impacts in few
+    blocks; the rest prune against the floor)."""
+    for qtext in ("rare common", "common"):
+        queries = spark.createDataFrame([(1, qtext)], "qid long, text string")
+        exhaustive = search(spark, skewed_index, queries, k=10).collect()
+        # driver fast path (default) AND the distributed pruned-scan
+        # branch (forced with driver_posting_limit=0) must both match
+        for limit in (DRIVER_POSTING_LIMIT, 0):
+            counts: dict = {}
+            fused = search_maxscore_fused(
+                spark,
+                skewed_index,
+                [(1, qtext)],
+                k=10,
+                debug_counts=counts,
+                driver_posting_limit=limit,
+            ).collect()
+            assert counts["blocks_total"] > 50, counts
+            kept_frac = counts["blocks_kept"] / counts["blocks_total"]
+            assert kept_frac < 0.5, counts
+            assert {(r.doc_id, r.score, r.rank) for r in fused} == {
+                (r.doc_id, r.score, r.rank) for r in exhaustive
+            }, (qtext, limit)
 
 
 def _scattered_docs(spark):
@@ -132,8 +116,6 @@ def test_fused_prunes_with_nonmonotone_champion_order(spark, scattered_index):
     unsorted candidate array would silently break the searchsorted
     exact-scoring pass (under-accumulated candidate scores -> loose
     theta -> ~no pruning). Assert pruning still FIRES and is exact."""
-    from splade_spark.operators.maxscore import search_maxscore_fused
-
     queries = [(1, "rare common")]
     counts: dict = {}
     fused = search_maxscore_fused(
@@ -194,35 +176,6 @@ def test_fused_guard_falls_back_before_postings_metadata(
     assert any(p.rstrip("/").endswith("term_dict") for p in opened)
 
 
-def test_cheap_theta_mode_lossless_and_prunes_single_term(spark, skewed_index):
-    """exact_floor=False: lossless on multi-term queries (weaker theta
-    only weakens pruning), and still prunes a single-term query's own
-    low-block_max blocks (theta = k-th champion partial)."""
-    from splade_spark.operators.maxscore import search_maxscore
-
-    multi = spark.createDataFrame([(1, "rare common")], "qid long, text string")
-    want = search(spark, skewed_index, multi, k=10).collect()
-    got = search_maxscore(
-        spark, skewed_index, multi, k=10, exact_floor=False, strategy="relation"
-    ).collect()
-    assert {(r.doc_id, r.score, r.rank) for r in got} == {
-        (r.doc_id, r.score, r.rank) for r in want
-    }
-
-    single = spark.createDataFrame([(2, "common")], "qid long, text string")
-    counts: dict = {}
-    got1 = search_maxscore(
-        spark, skewed_index, single, k=10, exact_floor=False, debug_counts=counts, strategy="relation"
-    ).collect()
-    want1 = search(spark, skewed_index, single, k=10).collect()
-    assert {(r.doc_id, r.score, r.rank) for r in got1} == {
-        (r.doc_id, r.score, r.rank) for r in want1
-    }
-    # the common term's low-dl docs concentrate its high impacts in few
-    # blocks; the rest prune against the champion-partial floor
-    assert counts["blocks_kept"] / counts["blocks_total"] < 0.5, counts
-
-
 def test_uniform_candidates_knife_edge_lossless(spark, tmp_path_factory):
     """Identically-scored top candidates put theta EXACTLY at the best
     block UB: theta (per-doc sum of decoded impacts) and total_ub (sum
@@ -230,9 +183,7 @@ def test_uniform_candidates_knife_edge_lossless(spark, tmp_path_factory):
     a strict `block_ub >= theta` can land ULPs short and retain ZERO
     blocks — returning an empty top-k (caught live by the prune
     bench's ramp fixture at 6M docs: retained=0). PRUNE_EPS slack must
-    keep this lossless on both MaxScore paths."""
-    from splade_spark.operators.maxscore import search_maxscore_fused
-
+    keep this lossless on both MaxScore routes."""
     idx = str(tmp_path_factory.mktemp("knife_idx"))
     n_terms = 5
     cand = " ".join(f"t{j}" for j in range(n_terms))
@@ -256,14 +207,11 @@ def test_uniform_candidates_knife_edge_lossless(spark, tmp_path_factory):
         for r in search(spark, idx, queries, k=10).collect()
     }
     assert len(want) >= 10
-    got_rel = search_maxscore(
-        spark, idx, queries, k=10, strategy="relation"
-    ).collect()
-    assert {(r.doc_id, r.score, r.rank) for r in got_rel} == want
-    got_fused = search_maxscore_fused(
-        spark, idx, [(1, cand)], k=10
-    ).collect()
-    assert {(r.doc_id, r.score, r.rank) for r in got_fused} == want
+    for limit in (DRIVER_POSTING_LIMIT, 0):
+        got = search_maxscore_fused(
+            spark, idx, [(1, cand)], k=10, driver_posting_limit=limit
+        ).collect()
+        assert {(r.doc_id, r.score, r.rank) for r in got} == want, limit
 
 
 def test_prune_eps_covers_summation_order():
