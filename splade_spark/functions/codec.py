@@ -11,39 +11,47 @@ inference_SPLADE.py:19); the per-block max is the Block-Max metadata
 PISA computes internally, made explicit here for DataFrame-side
 BMW/MaxScore pruning.
 
-All kernels are vectorized numpy (no per-value Python in encode hot
-path) — they run inside Arrow-batched pandas UDFs / applyInPandas.
+All kernels are vectorized numpy with no per-value or per-block
+Python: ``encode_blocks`` cuts every posting run of an Arrow batch into
+blocks at once (finalize's ``mapInArrow`` encoder), and the per-run
+encoders below are thin wrappers over it.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from splade_spark import DOC_SCALE
 
 BLOCK_SIZE = 128
 
 _THRESHOLDS = [1 << (7 * k) for k in range(1, 9)]
+_POW2 = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
 
-def vbyte_encode(values: np.ndarray) -> bytes:
-    """Vectorized VByte (7-bit groups, MSB = continuation)."""
-    a = np.asarray(values, dtype=np.uint64)
-    if a.size == 0:
-        return b""
+def _vbyte_pack(a: np.ndarray, starts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """VByte (7-bit groups, MSB = continuation) of a non-empty uint64
+    array; returns (bytes, byte offsets of the blocks starting at
+    ``starts``, then the end). No byte holds two values, so each block's
+    slice is its own VByte stream."""
     nbytes = np.ones(a.shape, dtype=np.int64)
     for t in _THRESHOLDS:
         nbytes += a >= t
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    offsets = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    max_b = int(nbytes.max())
-    for k in range(max_b):
+    offsets = np.cumsum(nbytes) - nbytes
+    out = np.zeros(int(offsets[-1] + nbytes[-1]), dtype=np.uint8)
+    for k in range(int(nbytes.max())):
         mask = nbytes > k
         byte = ((a[mask] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
         cont = (nbytes[mask] > k + 1).astype(np.uint8) << 7
         out[offsets[mask] + k] = byte | cont
-    return out.tobytes()
+    return out, np.append(offsets[starts], out.size)
+
+
+def vbyte_encode(values: np.ndarray) -> bytes:
+    """VByte bytes of one value run."""
+    a = np.asarray(values, dtype=np.uint64)
+    return _vbyte_pack(a, np.zeros(1, dtype=np.int64))[0].tobytes() if a.size else b""
 
 
 def vbyte_decode(data: bytes, n: int) -> np.ndarray:
@@ -71,20 +79,38 @@ def vbyte_decode(data: bytes, n: int) -> np.ndarray:
     return np.add.reduceat(shifted, starts)
 
 
+def _bitpack_pack(a: np.ndarray, starts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Fixed-width bit-packing (FOR-style) of every block at once: each
+    block is one header byte = bits per value (the block's max bit
+    length, at least 1), then its values' low bits packed LSB-first and
+    padded to a whole byte. Returns (bytes, block byte offsets plus the
+    end). The per-BLOCK width rides the doc-gap/tf distribution: a dense
+    posting block with gaps < 16 costs 4 bits/posting vs VByte's 8 —
+    the 'bit-packed blocks' layout of the north star, selectable per
+    index (gap_codec='bitpack')."""
+    ns = np.diff(np.append(starts, a.size))
+    width = (np.maximum.reduceat(a, starts)[:, None] >= _POW2).sum(axis=1)
+    width = np.maximum(width, 1)
+    sizes = 1 + (ns * width + 7) // 8
+    offsets = np.concatenate(([0], np.cumsum(sizes)))
+    bits = np.zeros(int(offsets[-1]) * 8, dtype=np.uint8)
+    blk = np.repeat(np.arange(starts.size), ns)
+    pos = np.arange(a.size) - np.repeat(starts, ns)
+    for w in np.unique(width):
+        sel = np.flatnonzero(width[blk] == w)
+        shifts = np.arange(w, dtype=np.uint64)
+        at = (offsets[blk[sel]] * 8 + 8 + pos[sel] * w)[:, None] + np.arange(w)
+        bits[at] = (a[sel, None] >> shifts) & np.uint64(1)
+    out = np.packbits(bits, bitorder="little")
+    out[offsets[:-1]] = width
+    return out, offsets
+
+
 def bitpack_encode(values: np.ndarray) -> bytes:
-    """Fixed-width bit-packing (FOR-style): one header byte = bits per
-    value (the block's max bit length), then the values' low bits
-    packed LSB-first. The per-BLOCK width rides the doc-gap/tf
-    distribution: a dense posting block with gaps < 16 costs 4
-    bits/posting vs VByte's 8 — the 'bit-packed blocks' layout of the
-    north star, selectable per index (gap_codec='bitpack')."""
+    """Bit-packed bytes of one value run; an empty run is a lone
+    zero-width header."""
     a = np.asarray(values, dtype=np.uint64)
-    if a.size == 0:
-        return b"\x00"
-    w = max(1, int(a.max()).bit_length())
-    shifts = np.arange(w, dtype=np.uint64)
-    bits = ((a[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
-    return bytes([w]) + np.packbits(bits.ravel(), bitorder="little").tobytes()
+    return _bitpack_pack(a, np.zeros(1, dtype=np.int64))[0].tobytes() if a.size else b"\x00"
 
 
 def bitpack_decode(data: bytes, n: int) -> np.ndarray:
@@ -103,6 +129,7 @@ GAP_CODECS = {
     "vbyte": (vbyte_encode, vbyte_decode),
     "bitpack": (bitpack_encode, bitpack_decode),
 }
+_PACKERS = {"vbyte": _vbyte_pack, "bitpack": _bitpack_pack}
 
 
 def quantize(impacts: np.ndarray, scale: int = DOC_SCALE) -> np.ndarray:
@@ -110,6 +137,64 @@ def quantize(impacts: np.ndarray, scale: int = DOC_SCALE) -> np.ndarray:
     return np.clip(np.rint(np.asarray(impacts, dtype=np.float64) * scale), 0, 255).astype(
         np.uint8
     )
+
+
+def _binary(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    buffers = [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)]
+    return pa.BinaryArray.from_buffers(pa.binary(), offsets.size - 1, buffers)
+
+
+def encode_blocks(
+    run_starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    impacts: np.ndarray,
+    block_id_base: np.ndarray,
+    block_size: int = BLOCK_SIZE,
+    gap_codec: str = "vbyte",
+    store_impacts: bool = True,
+) -> tuple[np.ndarray, dict]:
+    """Encode many concatenated posting runs in one vectorized pass.
+
+    Run r starts at ``run_starts[r]`` and must be sorted by doc_id; a
+    block starts every ``block_size`` postings of a run, with
+    ``block_id`` = ``block_id_base[r]`` + its seq in the run and a first
+    gap of 0 (the gap from ``first_doc_id``). ``gap_codec`` selects the
+    doc-gap/tf byte layout (GAP_CODECS). ``store_impacts=False`` drops
+    the float64 impact payload (8 bytes/posting — the dominant
+    footprint) and keeps only the uint8 quantized impacts, exactly what
+    the reference's PISA export carries (index2pisa.py:42-48); such an
+    index serves the quantized scoring path only.
+
+    Returns (the posting index where each block starts, the Arrow
+    columns of schema.POSTINGS from ``block_id`` to ``block_max``)."""
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    impacts = np.ascontiguousarray(impacts, dtype=np.float64)
+    run_len = np.diff(np.append(run_starts, doc_ids.size))
+    pos = np.arange(doc_ids.size) - np.repeat(run_starts, run_len)
+    starts = np.flatnonzero(pos % block_size == 0)
+    ends = np.append(starts[1:], doc_ids.size)
+    run = np.repeat(np.arange(run_starts.size), run_len)[starts]
+    gaps = np.diff(doc_ids, prepend=doc_ids[:1])
+    gaps[starts] = 0
+    pack = _PACKERS[gap_codec]
+    offsets = np.append(starts, doc_ids.size)
+    cols = {
+        "block_id": pa.array(
+            np.asarray(block_id_base, dtype=np.int64)[run] + pos[starts] // block_size
+        ),
+        "first_doc_id": pa.array(doc_ids[starts]),
+        "last_doc_id": pa.array(doc_ids[ends - 1]),
+        "n": pa.array((ends - starts).astype(np.int32)),
+        "doc_gap_bytes": _binary(*pack(gaps.astype(np.uint64), starts)),
+        "tf_bytes": _binary(*pack(np.asarray(tfs, dtype=np.uint64), starts)),
+        "impact_bytes": _binary(impacts.view(np.uint8), offsets * 8)
+        if store_impacts
+        else _binary(impacts[:0].view(np.uint8), offsets * 0),
+        "quant_bytes": _binary(quantize(impacts), offsets),
+        "block_max": pa.array(np.maximum.reduceat(impacts, starts)),
+    }
+    return starts, cols
 
 
 def encode_posting_blocks(
@@ -121,50 +206,20 @@ def encode_posting_blocks(
     gap_codec: str = "vbyte",
     store_impacts: bool = True,
 ):
-    """Split one (sorted-by-doc_id) posting run into encoded blocks.
+    """Split one posting run into encoded blocks (``encode_blocks`` over
+    a single run, after a stable sort by doc_id).
 
-    Yields dict rows matching schema.POSTINGS block columns.
-    ``gap_codec`` selects the doc-gap/tf byte layout (GAP_CODECS).
-    ``store_impacts=False`` drops the float64 impact payload (8
-    bytes/posting — the dominant footprint) and keeps only the uint8
-    quantized impacts, exactly what the reference's PISA export
-    carries (index2pisa.py:42-48); such an index serves the quantized
-    scoring path only.
-    """
-    enc, _ = GAP_CODECS[gap_codec]
+    Yields dict rows matching schema.POSTINGS block columns."""
     order = np.argsort(doc_ids, kind="stable")
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)[order]
-    tfs = np.asarray(tfs, dtype=np.int64)[order]
-    impacts = np.asarray(impacts, dtype=np.float64)[order]
-    for i, start in enumerate(range(0, len(doc_ids), block_size)):
-        d = doc_ids[start : start + block_size]
-        t = tfs[start : start + block_size]
-        w = impacts[start : start + block_size]
-        gaps = np.empty_like(d)
-        gaps[0] = 0  # first stored as gap from first_doc_id (itself)
-        gaps[1:] = np.diff(d)
-        yield {
-            "block_id": block_id_base + i,
-            "first_doc_id": int(d[0]),
-            "last_doc_id": int(d[-1]),
-            "n": int(len(d)),
-            "doc_gap_bytes": enc(gaps.astype(np.uint64)),
-            "tf_bytes": enc(t.astype(np.uint64)),
-            "impact_bytes": w.tobytes() if store_impacts else b"",
-            "quant_bytes": quantize(w).tobytes(),
-            "block_max": float(w.max()),
-        }
-
-
-def decode_block(
-    first_doc_id: int, n: int, doc_gap_bytes: bytes, impact_bytes: bytes
-) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_ids int64[n], impacts float64[n])."""
-    gaps = vbyte_decode(doc_gap_bytes, n).astype(np.int64)
-    doc_ids = first_doc_id + np.cumsum(gaps)
-    impacts = np.frombuffer(impact_bytes, dtype=np.float64)
-    return doc_ids, impacts
-
-
-def decode_tfs(tf_bytes: bytes, n: int) -> np.ndarray:
-    return vbyte_decode(tf_bytes, n).astype(np.int64)
+    if order.size == 0:
+        return
+    _, cols = encode_blocks(
+        np.zeros(1, dtype=np.int64),
+        *(np.asarray(a)[order] for a in (doc_ids, tfs, impacts)),
+        [block_id_base],
+        block_size,
+        gap_codec,
+        store_impacts,
+    )
+    for row in zip(*(c.to_pylist() for c in cols.values())):
+        yield dict(zip(cols, row))

@@ -544,3 +544,53 @@ def test_block_id_beyond_int32(spark, tmp_path):
     assert len(got) == len(want) > 0
     assert (got.doc_id.values == want.doc_id.values).all()
     assert (abs(got.score.values - want.score.values) < 1e-9).all()
+
+
+@pytest.fixture(scope="module")
+def smoke_segments(spark, tmp_path_factory):
+    segs = str(tmp_path_factory.mktemp("segs"))
+    build_segments(load_documents(spark, SF_SMOKE), segs, n_segments=1)
+    return segs
+
+
+@pytest.mark.parametrize("gap_codec,store_impacts", [("vbyte", True), ("bitpack", False)])
+def test_encoder_carries_runs_across_arrow_batches(
+    spark, smoke_segments, tmp_path, gap_codec, store_impacts
+):
+    """The block encoder sees each partition as a stream of Arrow
+    batches; a (term_id, salt) run cut by a batch boundary is carried
+    into the next batch. 97-row batches split most runs of this fixture
+    (salt_unit 256, hot terms far past 97 postings), and the postings
+    must equal the default-batch build's on every column."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def finalize(name):
+        idx = str(tmp_path / name)
+        shutil.copytree(smoke_segments, idx)
+        finalize_index(spark, idx, n_buckets=8, block_size=16, salt_unit=256,
+                       gap_codec=gap_codec, store_impacts=store_impacts)
+        return (
+            pads.dataset(os.path.join(idx, "postings"), partitioning="hive")
+            .to_table()
+            .sort_by([("term_id", "ascending"), ("block_id", "ascending")])
+        )
+
+    default = finalize("default")
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "97")
+    try:
+        small = finalize("small")
+    finally:
+        spark.conf.set(conf, before)
+    assert small.equals(default)
+    per_run = (
+        default.append_column("salt", pc.shift_right(default["block_id"], 24))
+        .group_by(["term_id", "salt"])
+        .aggregate([("n", "sum")])
+    )
+    assert max(per_run["n_sum"].to_pylist()) > 97  # runs straddle batches
