@@ -128,12 +128,10 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from splade_spark.functions.tokenize import py_tokenize
     from splade_spark.operators import index_build
     from splade_spark.operators.index_build import build_index
     from splade_spark.operators.index_query import (
-        buckets_for_terms,
-        load_stats,
+        prepare_queries,
         search,
         search_fused,
     )
@@ -212,7 +210,6 @@ def main() -> None:
     qtext = "rare " + " ".join(f"t{j}" for j in range(n_terms))
     qrows = [(1, qtext)]
     queries = spark.createDataFrame(qrows, "qid long, text string")
-    n_buckets = load_stats(idx)["n_buckets"]
 
     def timed(fn):
         best = float("inf")
@@ -227,11 +224,11 @@ def main() -> None:
 
     def accounted(rows, counts: dict) -> dict:
         """Replay the retained pass's literal pair set over the
-        accounting build's footers."""
-        terms = [t for _, text in rows for t in py_tokenize(text)]
+        accounting build's footers, in the bucket directories the
+        engine pushes down for these rows."""
         return rowgroup_accounting(
             os.path.join(idx_acct, "postings"),
-            buckets_for_terms(terms, n_buckets),
+            prepare_queries(idx_acct, rows).buckets,
             {"retained": counts["retained_pairs"]},
         )
 

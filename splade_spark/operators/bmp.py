@@ -32,8 +32,10 @@ Search (driver-planned, the fused-path shape):
        set-at-a-time instead of block-at-a-time, which is the batch
        shape Spark/numpy want.
 
-Scale guards mirror ``search_maxscore_fused``: per-term bmp rows are
-bounded by df/doc_block_size read from the term dictionary BEFORE any
+Queries are resolved by ``index_query.prepare_queries``, the prep step
+shared with ``search_fused`` and ``search_maxscore_fused``. Scale
+guards mirror ``search_maxscore_fused``: per-term bmp rows are bounded
+by df/doc_block_size from that dictionary read, BEFORE any
 bmp/postings access; over-limit queries fall back to ``search_fused``.
 """
 
@@ -197,7 +199,9 @@ def search_bmp(
     debug_counts: dict | None = None,
     quantized: bool = False,
 ) -> DataFrame:
-    """Block-at-a-time BMP search for driver-resident queries.
+    """Block-at-a-time BMP search for driver-resident queries, resolved
+    by ``prepare_queries`` (the prep step shared with ``search_fused``
+    and ``search_maxscore_fused``).
 
     Lossless: stops only when the running k-th EXACT score >= the best
     unevaluated doc-block's UB (each UB bounds every member doc's
@@ -206,39 +210,34 @@ def search_bmp(
 
     Falls back to exhaustive ``search_fused`` BEFORE touching the bmp
     or postings datasets when any hit term's bmp row estimate
-    (min(df, n_docs/doc_block_size)) exceeds ``term_block_limit`` —
-    the same dictionary-scan-only guard discipline as
-    ``search_maxscore_fused``.
+    (min(df, n_docs/doc_block_size), df from ``prepare_queries``)
+    exceeds ``term_block_limit`` — the same dictionary-scan-only guard
+    discipline as ``search_maxscore_fused``.
 
     ``quantized=True`` runs the PISA/BMP integer arithmetic: x50-clip
-    query weights, uint8 doc impacts from quant_bytes, integer score
-    ``sum(q_w * d_w)`` with an EXACT integer certificate (no rounding
-    slop) — matches ``search_quantized`` row-for-row and is the only
-    path on a ``store_impacts=False`` index (its fallback is
+    query weights (min(q_tf * 50, 255)), uint8 doc impacts from
+    quant_bytes, integer score ``sum(q_w * d_w)`` with an EXACT
+    integer certificate (no rounding slop) — matches
+    ``search_quantized`` row-for-row and is the only path on a
+    ``store_impacts=False`` index (its fallback is
     ``search_quantized``). Returns score long instead of double.
     """
     import json
-    from collections import Counter
 
     import numpy as np
     import pyarrow.dataset as pads
 
-    from splade_spark.functions.tokenize import py_tokenize
     from splade_spark.operators.index_query import (
-        buckets_for_terms,
         decode_blocks_vectorized,
         decode_doc_ids_vectorized,
-        load_stats,
+        prepare_queries,
         require_impacts,
         search_fused,
-        term_filter,
     )
 
-    stats = load_stats(index_dir)
+    prep = prepare_queries(index_dir, query_rows)
     if not quantized:
-        require_impacts(stats)
-    gap_codec = stats.get("gap_codec", "vbyte")
-    n_docs = int(stats["n_docs"])
+        require_impacts(prep.stats)
 
     def exhaustive_fallback():
         if quantized:
@@ -258,22 +257,8 @@ def search_bmp(
     with open(meta_path) as f:
         doc_block_size = int(json.load(f)["doc_block_size"])
 
-    qtf: dict[int, Counter] = {
-        qid: Counter(py_tokenize(text)) for qid, text in query_rows
-    }
-    all_terms = sorted({t for c in qtf.values() for t in c})
-    dict_tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
-        columns=["term", "term_id", "df"],
-        filter=term_filter(all_terms),
-    )
-    tid_of = dict(
-        zip(dict_tbl.column("term").to_pylist(), dict_tbl.column("term_id").to_pylist())
-    )
-    dfs = dict(
-        zip(dict_tbl.column("term_id").to_pylist(), dict_tbl.column("df").to_pylist())
-    )
-    max_blocks = n_docs // doc_block_size + 1
-    if any(min(df, max_blocks) > term_block_limit for df in dfs.values()):
+    max_blocks = int(prep.stats["n_docs"]) // doc_block_size + 1
+    if any(min(df, max_blocks) > term_block_limit for df in prep.df.values()):
         return exhaustive_fallback()
 
     out_schema = (
@@ -281,37 +266,24 @@ def search_bmp(
         if quantized
         else "qid long, doc_id long, score double, rank int"
     )
-    q_terms: dict[int, dict[int, float]] = {}
-    for qid, c in qtf.items():
-        if quantized:
-            # x50-clip-255 integer query weights (inference_q_SPLADE.py:13,60)
-            t = {
-                tid_of[w]: float(min(int(tf) * 50, 255))
-                for w, tf in c.items()
-                if w in tid_of
-            }
-        else:
-            t = {tid_of[w]: float(tf) for w, tf in c.items() if w in tid_of}
-        t = {tid: w for tid, w in t.items() if w > 0}
-        if t:
-            q_terms[qid] = t
+    # qid -> (term_ids ascending, query weights); quantized weights are
+    # x50-clip-255 integers (inference_q_SPLADE.py:13,60)
+    q_terms = {
+        qid: (tids, np.minimum(q_tf * 50, 255) if quantized else q_tf)
+        for qid, (tids, q_tf) in prep.q_arrs.items()
+    }
     if not q_terms:
         return spark.createDataFrame([], out_schema)
-    hit_terms = sorted({t for d in q_terms.values() for t in d})
 
     # bucket partition-dir pruning for the driver-side metadata and
     # payload fetches (same pushdown the Spark plans get from
     # in_literals("bucket", ...)): both the bmp block-max table and the
     # postings table are hive-partitioned by bucket, so a q-term query
     # touches <= q of the n_buckets directories
-    bucket_flt = pads.field("bucket").isin(
-        buckets_for_terms(
-            [t for t in all_terms if t in tid_of], int(stats["n_buckets"])
-        )
-    )
+    bucket_flt = pads.field("bucket").isin(prep.buckets)
     bmp_tbl = pads.dataset(bmp_dir, partitioning="hive").to_table(
         columns=["term_id", "doc_block", "ub"],
-        filter=bucket_flt & pads.field("term_id").isin(hit_terms),
+        filter=bucket_flt & pads.field("term_id").isin(prep.hit_terms),
     )
     b_tid = bmp_tbl.column("term_id").to_numpy()
     b_blk = bmp_tbl.column("doc_block").to_numpy()
@@ -324,14 +296,13 @@ def search_bmp(
     # ---- per-query UB ordering over doc blocks ----------------------
     state: dict[int, dict] = {}
     total_blocks = 0
-    for qid, tids_w in q_terms.items():
+    for qid, (tids, qw) in q_terms.items():
         # per-doc_block UB = sum q_tf * ub over the query's terms
-        m = np.isin(b_tid, list(tids_w))
+        m = np.isin(b_tid, tids)
         if not m.any():
             continue
         blk = b_blk[m]
-        qw_arr = np.array([tids_w[int(t)] for t in b_tid[m]])
-        ubs = b_ub[m] * qw_arr
+        ubs = b_ub[m] * qw[np.searchsorted(tids, b_tid[m])]
         uniq_blk, inv = np.unique(blk, return_inverse=True)
         blk_ub = np.bincount(inv, weights=ubs)
         order = np.argsort(-blk_ub, kind="stable")
@@ -377,9 +348,9 @@ def search_bmp(
             # (each merge only re-admits the postings of the swallowed
             # gap), so the pushed filter expression stays bounded.
             runs = _block_runs(all_blocks, max_ranges=_MAX_FETCH_RANGES)
-            round_terms = sorted(
-                {t for qid in need for t in q_terms[qid]}
-            )
+            round_terms = np.unique(
+                np.concatenate([q_terms[qid][0] for qid in need])
+            ).tolist()
             payload = "quant_bytes" if quantized else "impact_bytes"
             range_pred = None
             for blo, bhi in runs:
@@ -404,7 +375,7 @@ def search_bmp(
                         tbl.column("first_doc_id").to_numpy().astype(np.int64),
                         ns,
                         tbl.column("doc_gap_bytes").to_pylist(),
-                        gap_codec,
+                        prep.gap_codec,
                     )
                     impacts = np.frombuffer(
                         b"".join(tbl.column("quant_bytes").to_pylist()),
@@ -416,7 +387,7 @@ def search_bmp(
                         ns,
                         tbl.column("doc_gap_bytes").to_pylist(),
                         tbl.column("impact_bytes").to_pylist(),
-                        gap_codec,
+                        prep.gap_codec,
                     )
                 tid_rep = np.repeat(
                     tbl.column("term_id").to_numpy().astype(np.int64), ns
@@ -426,16 +397,12 @@ def search_bmp(
                 doc_ids = np.zeros(0, dtype=np.int64)
         for qid in sorted(need):
             st = state[qid]
-            tids_w = q_terms[qid]
+            tids, w = q_terms[qid]
             blocks = need[qid]
             if len(doc_ids):
-                qw = np.zeros(max(tids_w) + 1)
-                for tt, ww in tids_w.items():
-                    qw[tt] = ww
-                sel = (
-                    np.isin(blk_of, blocks)
-                    & (tid_rep <= max(tids_w))
-                )
+                qw = np.zeros(int(tids[-1]) + 1)
+                qw[tids] = w
+                sel = np.isin(blk_of, blocks) & (tid_rep <= tids[-1])
                 sel &= qw[np.where(sel, tid_rep, 0)] > 0
                 if sel.any():
                     d = doc_ids[sel]

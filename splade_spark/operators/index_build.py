@@ -296,7 +296,7 @@ def finalize_index(
     # bucket is CONTENT-ADDRESSED — pmod(md5(term), n_buckets) — so the
     # query side derives its partition-prune literals from raw query
     # tokens in pure Python with zero pre-query Spark actions
-    # (index_query.buckets_for_terms). Computed HERE on the vocab-sized
+    # (index_query.prepare_queries). Computed HERE on the vocab-sized
     # dict (not per posting row — that would be |postings| md5s).
     #
     # id assignment is PER-BUCKET row_number + bucket base offset, NOT

@@ -4,8 +4,15 @@ Reference lifecycle (task/evaluator.py:161-243): load the index, walk
 each query term's posting list into a dense per-doc accumulator, then
 a partial top-k.
 
-``search_fused`` (driver-resident queries) answers a batch by one of
-three routes. One rule picks them, from dictionary metadata alone:
+``prepare_queries`` is the one query-prepare step of the three
+driver-resident entry points (``search_fused`` here,
+``maxscore.search_maxscore_fused``, ``bmp.search_bmp``): it tokenizes
+the ``(qid, text)`` rows, reads the query terms' term_dict rows once,
+and returns the per-query (term_id, q_tf) arrays, the per-term df and
+max_impact, and the bucket-prune literals.
+
+``search_fused`` answers a batch by one of three routes. One rule
+picks them, from dictionary metadata alone:
 ``candidate_pairs`` = Σ over queries of the df of each query term, the
 postings the batch's scoring visits.
 
@@ -26,16 +33,19 @@ postings the batch's scoring visits.
 ``strategy="term"|"doc"`` pins a Spark route. Every route rounds to
 6 dp, applies the threshold, then ranks by (-score, doc_id), and all
 three return identical rows. ``search`` and ``search_quantized`` take
-a query RELATION: term_ids by join with term_dict, a bucket + term_id
-pruned postings scan, an Arrow-batched block decode, a hash-aggregate
-per (qid, doc_id), then the window top-k.
+a query RELATION instead: term_ids by join with term_dict, bucket
+literals from one action over the relation, a bucket + term_id pruned
+postings scan, an Arrow-batched block decode, a hash-aggregate per
+(qid, doc_id), then the window top-k.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -61,15 +71,6 @@ def require_impacts(stats: dict) -> None:
             "index was built quantized-only (store_impacts=False); "
             "float-impact search is unavailable — use search_quantized"
         )
-
-
-def buckets_for_terms(terms: list[str], n_buckets: int) -> list[int]:
-    """Partition-prune literals from raw query tokens — pure Python
-    (bucket is content-addressed: pmod(md5(term), n_buckets)), so a
-    single-query search issues NO Spark action before its main job."""
-    from splade_spark.functions.hashing import py_md5_int
-
-    return sorted({py_md5_int(t) % n_buckets for t in terms})
 
 
 def buckets_for_queries(queries: DataFrame, n_buckets: int) -> list[int]:
@@ -123,14 +124,69 @@ def load_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(index_dir, "term_dict"))
 
 
-def term_filter(terms: list[str]):
-    """pyarrow filter selecting the term_dict rows of ``terms``. The
-    value set is typed, so an empty batch filters to no rows instead
-    of failing on an untyped (null) set."""
+class PreparedQueries(NamedTuple):
+    """A driver-resident query batch resolved against the term
+    dictionary (``prepare_queries``)."""
+
+    stats: dict
+    gap_codec: str
+    # qid -> (term_ids int32 ascending, q_tf float64); queries with no
+    # known term are absent
+    q_arrs: dict[int, tuple[np.ndarray, np.ndarray]]
+    hit_terms: list[int]
+    df: dict[int, int]
+    max_impact: dict[int, float]
+    buckets: list[int]
+
+
+def prepare_queries(index_dir: str, query_rows: list[tuple[int, str]]) -> PreparedQueries:
+    """The one query-prepare step of ``search_fused``,
+    ``search_maxscore_fused`` and ``search_bmp``: tokenize each
+    ``(qid, text)`` row, resolve every distinct term with ONE pyarrow
+    read of its term_dict row (term_id, df, max_impact), and derive the
+    bucket-prune literals of the known terms (bucket is
+    content-addressed: pmod(md5(term), n_buckets)).
+
+    Reads stats.json and term_dict only, so a caller's df guard can
+    still fall back before any postings or bmp dataset is opened. A
+    repeated qid raises ValueError: its rows would otherwise have to
+    be merged or dropped without the caller seeing it."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    return pads.field("term").isin(pa.array(terms, type=pa.string()))
+    from splade_spark.functions.hashing import py_md5_int
+    from splade_spark.functions.tokenize import py_tokenize
+
+    stats = load_stats(index_dir)
+    qtf: dict[int, Counter] = {}
+    for qid, text in query_rows:
+        if qid in qtf:
+            raise ValueError(f"duplicate qid {qid!r} in query_rows; every query needs its own qid")
+        qtf[qid] = Counter(py_tokenize(text))
+    all_terms = sorted({t for c in qtf.values() for t in c})
+    # a typed value set: an empty batch filters to no rows instead of
+    # failing on an untyped (null) set
+    tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
+        columns=["term", "term_id", "df", "max_impact"],
+        filter=pads.field("term").isin(pa.array(all_terms, type=pa.string())),
+    )
+    terms, tids = tbl.column("term").to_pylist(), tbl.column("term_id").to_pylist()
+    tid_of = dict(zip(terms, tids))
+    q_arrs = {}
+    for qid, c in qtf.items():
+        pairs = sorted((tid_of[t], float(w)) for t, w in c.items() if t in tid_of)
+        if pairs:
+            q_t, q_w = zip(*pairs)
+            q_arrs[qid] = (np.array(q_t, dtype=np.int32), np.array(q_w, dtype=np.float64))
+    return PreparedQueries(
+        stats=stats,
+        gap_codec=stats.get("gap_codec", "vbyte"),
+        q_arrs=q_arrs,
+        hit_terms=sorted(tids),
+        df=dict(zip(tids, tbl.column("df").to_pylist())),
+        max_impact=dict(zip(tids, tbl.column("max_impact").to_pylist())),
+        buckets=sorted({py_md5_int(t) % stats["n_buckets"] for t in terms}),
+    )
 
 
 def load_postings(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -862,9 +918,11 @@ def search_fused(
     own query-loading shape, evaluate.py:80-86) -> (qid, doc_id, score,
     rank).
 
-    One rule picks the route from the term dictionary alone (no
-    postings access): ``candidate_pairs``, the df of every query term
-    summed over queries, is exactly the driver's scoring work.
+    ``prepare_queries`` resolves the batch, and one rule picks the
+    route from its term dictionary rows alone (no postings access):
+    ``candidate_pairs``, the df of every query term summed over
+    queries, is exactly the driver's scoring work. A repeated qid
+    raises ValueError.
 
     * ``"driver"``: candidate_pairs <= DRIVER_POSTING_LIMIT. pyarrow
       reads the bucket + term_id pruned blocks once, decodes them, and
@@ -884,42 +942,12 @@ def search_fused(
     pandas: the driver route skips the relation round trip, Spark
     routes collect with ``toPandas()``.
     """
-    from collections import Counter
-
     import pyarrow.dataset as pads
 
-    from splade_spark.functions.tokenize import py_tokenize
-
-    stats = load_stats(index_dir)
-    require_impacts(stats)
-    n_buckets = stats["n_buckets"]
-    gap_codec = stats.get("gap_codec", "vbyte")
-    qtf: dict[int, Counter] = {
-        qid: Counter(py_tokenize(text)) for qid, text in query_rows
-    }
-    all_terms = sorted({t for c in qtf.values() for t in c})
-    dset = pads.dataset(os.path.join(index_dir, "term_dict"))
-    tbl = dset.to_table(
-        columns=["term", "term_id", "df"], filter=term_filter(all_terms)
-    )
-    tid_of = dict(zip(tbl.column("term").to_pylist(), tbl.column("term_id").to_pylist()))
-    df_of = dict(zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()))
-
-    q_arrs: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for qid, c in qtf.items():
-        pairs = sorted((tid_of[t], float(w)) for t, w in c.items() if t in tid_of)
-        if pairs:
-            q_arrs[qid] = (
-                np.array([p[0] for p in pairs], dtype=np.int32),
-                np.array([p[1] for p in pairs], dtype=np.float64),
-            )
-    hit_terms = sorted({int(t) for tids, _ in q_arrs.values() for t in tids})
-    buckets = buckets_for_terms(
-        [t for t in all_terms if t in tid_of], n_buckets
-    )
-    candidate_pairs = sum(
-        df_of.get(int(t), 0) for tids, _ in q_arrs.values() for t in tids
-    )
+    prep = prepare_queries(index_dir, query_rows)
+    require_impacts(prep.stats)
+    q_arrs, hit_terms, buckets = prep.q_arrs, prep.hit_terms, prep.buckets
+    candidate_pairs = sum(prep.df[int(t)] for tids, _ in q_arrs.values() for t in tids)
     # doc-major's output is bounded by n_parts x n_queries x k while
     # term-major's score shuffle carries ~candidate_pairs rows; go
     # doc-major when the collapse is worth its extra exchange (see the
@@ -928,7 +956,7 @@ def search_fused(
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
     emit_bound = n_parts * max(len(q_arrs), 1) * k
     guarded_width, _ = _guarded_shard_geometry(
-        int(stats["n_docs"]), n_parts, len(hit_terms)
+        int(prep.stats["n_docs"]), n_parts, len(hit_terms)
     )
     if not q_arrs or (strategy == "auto" and candidate_pairs <= DRIVER_POSTING_LIMIT):
         route = "driver"
@@ -943,7 +971,7 @@ def search_fused(
     if debug_counts is not None:
         debug_counts.update(
             route=route, driver_work=candidate_pairs,
-            postings_read=sum(df_of.get(t, 0) for t in hit_terms),
+            postings_read=sum(prep.df.values()),
         )
 
     if route == "driver":
@@ -956,19 +984,19 @@ def search_fused(
                 filter=pads.field("bucket").isin(buckets)
                 & pads.field("term_id").isin(hit_terms),
             ).to_pandas().sort_values("term_id", kind="stable")
-            decoded = decode_block_frame(blocks, gap_codec)
+            decoded = decode_block_frame(blocks, prep.gap_codec)
             del blocks  # the encoded bytes are dead once decoded
             tops = score_batch(q_arrs, *decoded, k, threshold)
         return tops_relation(spark, tops, as_local)
     if route == "doc":
         top = _search_fused_docmajor(
             spark, index_dir, q_arrs, buckets, hit_terms, k, threshold,
-            gap_codec, int(stats["n_docs"]),
+            prep.gap_codec, int(prep.stats["n_docs"]),
         )
     else:
         top = term_major_top(
             spark, index_dir, in_literals("bucket", buckets) & in_literals("term_id", hit_terms),
-            q_arrs, gap_codec, k, threshold,
+            q_arrs, prep.gap_codec, k, threshold,
         )
     return top.toPandas() if as_local else top
 
@@ -979,46 +1007,19 @@ def search(
     queries: DataFrame,
     k: int = TOPK_DEFAULT,
     threshold: float = SCORE_THRESHOLD,
-    postings: DataFrame | None = None,
-    query_texts: list[str] | None = None,
 ) -> DataFrame:
-    """(qid, doc_id, score, rank) from the compressed index.
-
-    ``query_texts``: pass the raw texts when driver-resident (the
-    reference's own query-loading shape, evaluate.py:80-86) and the
-    bucket-prune literals are derived in pure Python — the search
-    runs as ONE Spark job chain with no preparatory actions."""
-    if query_texts is not None:
-        # guard the contract query_texts makes: a mismatched list would
-        # silently drop bucket-prune literals (missing postings, wrong
-        # scores) and could truncate the top-k via the single-query fast
-        # path. The count is one job over the tiny query relation.
-        n_q = queries.count()
-        if n_q != len(query_texts):
-            raise ValueError(
-                f"query_texts has {len(query_texts)} entries but the "
-                f"queries relation has {n_q} rows — pass the texts of "
-                "exactly those queries (or None to derive buckets from "
-                "the relation)"
-            )
+    """(qid, doc_id, score, rank) from the compressed index for a
+    query relation (plan in the module docstring)."""
     term_dict = load_term_dict(spark, index_dir)
     qt = (
         query_terms(queries)
         .join(term_dict.select("term", "term_id"), "term")
         .select("qid", "term_id", "q_tf")
     )
-    if postings is None:
-        postings = load_postings(spark, index_dir)
+    postings = load_postings(spark, index_dir)
     stats = load_stats(index_dir)
     require_impacts(stats)
-    n_buckets = stats["n_buckets"]
-    if query_texts is not None:
-        from splade_spark.functions.tokenize import py_tokenize
-
-        toks = [t for txt in query_texts for t in py_tokenize(txt)]
-        buckets = buckets_for_terms(toks, n_buckets)
-    else:
-        buckets = buckets_for_queries(queries, n_buckets)
+    buckets = buckets_for_queries(queries, stats["n_buckets"])
     pruned = postings.filter(F.col("bucket").isin(buckets)).join(
         F.broadcast(qt.select("term_id").distinct()), "term_id", "left_semi"
     )
@@ -1029,12 +1030,4 @@ def search(
         .agg(F.round(F.sum(F.col("q_tf") * F.col("impact")), 6).alias("score"))
         .filter(F.col("score") > F.lit(threshold))
     )
-    if query_texts is not None and len(query_texts) == 1:
-        # single-query fast path: global orderBy+limit compiles to
-        # TakeOrderedAndProject (per-partition partial top-k + driver
-        # merge) instead of a one-partition window — measured p50
-        # 6.5s -> 4.0s, p99 11.2s -> 6.7s on a 4M-doc index. The rank
-        # window then runs over just k rows.
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return topk_window(top, k)
     return topk_window(scored, k)

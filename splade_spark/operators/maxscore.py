@@ -3,11 +3,12 @@
 The reference delegates this to the external PISA engine (binary
 format produced at pisa_inference/index2pisa.py:59-74; PISA runs
 Block-Max WAND / MaxScore on it, pisa_inference/README.md) on one
-node. ``search_maxscore_fused`` is the one implementation here: both
-pruning passes run on the driver over metadata-scale pyarrow reads,
-then the retained blocks are scored on the driver or by one pruned
-Spark scan. Callers holding a query relation collect its
-``(qid, text)`` rows first.
+node. ``search_maxscore_fused`` is the one implementation here: it
+resolves the batch with ``index_query.prepare_queries`` (the prep step
+shared with ``search_fused`` and ``search_bmp``), both pruning passes
+run on the driver over metadata-scale pyarrow reads, then the retained
+blocks are scored on the driver or by one pruned Spark scan. Callers
+holding a query relation collect its ``(qid, text)`` rows first.
 
 Two-pass plan (SURVEY.md §4), per query:
 
@@ -32,7 +33,6 @@ Pass 2 (prune + exact): a block b of term t upper-bounds every
 from __future__ import annotations
 
 import os
-from collections import Counter
 
 import numpy as np
 import pyarrow.dataset as pads
@@ -40,19 +40,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from splade_spark import SCORE_THRESHOLD, TOPK_DEFAULT
 from splade_spark.functions.codec import BLOCK_SIZE
-from splade_spark.functions.tokenize import py_tokenize
 from splade_spark.operators.index_build import DEFAULT_SALT_UNIT
 from splade_spark.operators.index_query import (
     DRIVER_POSTING_LIMIT,
     block_pairs_expr,
-    buckets_for_terms,
     decode_block_frame,
     in_literals,
-    load_stats,
+    prepare_queries,
     require_impacts,
     score_batch,
     search_fused,
-    term_filter,
     term_major_top,
     tops_relation,
 )
@@ -100,8 +97,8 @@ def search_maxscore_fused(
     (the union across queries) stays lossless: fully-retained docs
     score exactly, others partially UNDER their true (< theta) score.
 
-    If ANY hit term's estimated block count (from the term_dict
-    ``df`` — read in the same metadata-scale dictionary scan that
+    If ANY hit term's estimated block count (from the ``df`` that
+    ``prepare_queries`` reads in the same dictionary scan that
     resolves term_ids) exceeds ``champion_block_limit``, the
     driver-side passes would stop being metadata-scale — fall back
     to exhaustive ``search_fused`` BEFORE touching the postings
@@ -137,27 +134,9 @@ def search_maxscore_fused(
     route just toPandas() the result, so the value is identical
     either way.
     """
-    stats = load_stats(index_dir)
-    n_buckets = stats["n_buckets"]
-    gap_codec = stats.get("gap_codec", "vbyte")
-    require_impacts(stats)
-
-    qtf: dict[int, Counter] = {
-        qid: Counter(py_tokenize(text)) for qid, text in query_rows
-    }
-    all_terms = sorted({t for c in qtf.values() for t in c})
-    dict_tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
-        columns=["term", "term_id", "max_impact", "df"],
-        filter=term_filter(all_terms),
-    )
-    tinfo = {
-        t: (int(tid), float(mi))
-        for t, tid, mi in zip(
-            dict_tbl.column("term").to_pylist(),
-            dict_tbl.column("term_id").to_pylist(),
-            dict_tbl.column("max_impact").to_pylist(),
-        )
-    }
+    prep = prepare_queries(index_dir, query_rows)
+    require_impacts(prep.stats)
+    gap_codec, buckets = prep.gap_codec, prep.buckets
     # scale guard BEFORE any postings access: estimate each hit term's
     # block count from its df (upper bound: full blocks + one partial
     # block per salt group). A term over the limit — or a query set
@@ -165,14 +144,9 @@ def search_maxscore_fused(
     # metadata scan below driver-scale-unsafe, so bail to the
     # exhaustive fused plan while still only having read the
     # dictionary rows.
-    block_size = int(stats.get("block_size", BLOCK_SIZE))
-    salt_unit = int(stats.get("salt_unit", DEFAULT_SALT_UNIT))
-    blocks_est = {
-        t: df // block_size + df // salt_unit + 2
-        for t, df in zip(
-            dict_tbl.column("term").to_pylist(), dict_tbl.column("df").to_pylist()
-        )
-    }
+    block_size = int(prep.stats.get("block_size", BLOCK_SIZE))
+    salt_unit = int(prep.stats.get("salt_unit", DEFAULT_SALT_UNIT))
+    blocks_est = [df // block_size + df // salt_unit + 2 for df in prep.df.values()]
     # summed cap: 20x the per-term limit = ~1M block-metadata rows,
     # ~40 MB as Arrow — still metadata-scale on any driver. (The
     # per-term cap is the skew guard: one stopword at 10^12 docs is
@@ -180,29 +154,22 @@ def search_maxscore_fused(
     # was so conservative that an ordinary 11-term query over a 6M-doc
     # corpus fell back to exhaustive scoring while its true retained
     # set was 11 blocks.)
-    if blocks_est and (
-        max(blocks_est.values()) > champion_block_limit
-        or sum(blocks_est.values()) > 20 * champion_block_limit
+    if (
+        max(blocks_est, default=0) > champion_block_limit
+        or sum(blocks_est) > 20 * champion_block_limit
     ):
         if debug_counts is not None:
             debug_counts["route"] = "fused_fallback"
         return search_fused(spark, index_dir, query_rows, k, threshold, as_local=as_local)
-    # per query: [(term_id, q_tf, ub)], champion, total_ub
-    q_plan: dict[int, list[tuple[int, float, float]]] = {}
-    for qid, c in qtf.items():
-        rows = [
-            (tinfo[t][0], float(w), float(w) * tinfo[t][1])
-            for t, w in c.items()
-            if t in tinfo
-        ]
-        if rows:
-            q_plan[qid] = sorted(rows)
+    # per query: [(term_id, q_tf, ub)] in term_id order
+    q_plan = {
+        qid: [(t, w, w * prep.max_impact[t]) for t, w in zip(tids.tolist(), ws.tolist())]
+        for qid, (tids, ws) in prep.q_arrs.items()
+    }
     if not q_plan:
         if debug_counts is not None:
             debug_counts.update(route="driver", driver_work=0)
         return tops_relation(spark, as_local=as_local)
-    hit_terms = sorted({t for rows in q_plan.values() for t, _, _ in rows})
-    buckets = buckets_for_terms([t for t in all_terms if t in tinfo], n_buckets)
 
     post_ds = pads.dataset(
         os.path.join(index_dir, "postings"), partitioning="hive"
@@ -214,7 +181,7 @@ def search_maxscore_fused(
     bucket_flt = pads.field("bucket").isin(buckets)
     meta = post_ds.to_table(
         columns=["term_id", "block_id", "first_doc_id", "last_doc_id", "n", "block_max"],
-        filter=bucket_flt & pads.field("term_id").isin(hit_terms),
+        filter=bucket_flt & pads.field("term_id").isin(prep.hit_terms),
     ).to_pandas()
     # block sets travel as packed int64 (term_id << 32) | rank keys and
     # membership is one np.isin, not a per-row tuple-set probe. The low
@@ -363,17 +330,10 @@ def search_maxscore_fused(
         debug_counts.update(blocks_total=total_blocks, blocks_kept=n_retained)
         debug_counts["retained_pairs"] = {t: sorted(b.tolist()) for t, b in ret_bids.items()}
 
-    q_arrs = {
-        qid: (
-            np.array([t for t, _, _ in rows], dtype=np.int32),
-            np.array([w for _, w, _ in rows], dtype=np.float64),
-        )
-        for qid, rows in q_plan.items()
-    }
     # ---- driver path: retained work under the limit, zero jobs -----
     if route == "driver":
         ret = fetch_decode([by_term[t]["key"].to_numpy()[m] for t, m in retained.items()])
-        return tops_relation(spark, score_batch(q_arrs, *ret, k, threshold), as_local)
+        return tops_relation(spark, score_batch(prep.q_arrs, *ret, k, threshold), as_local)
 
     # ---- distributed: ONE pruned scan -> kernel -> agg -> top-k -----
     if n_retained >= sum(len(tm) for tm in by_term.values()):
@@ -385,6 +345,6 @@ def search_maxscore_fused(
         keep_expr = block_pairs_expr(ret_bids)
     top = term_major_top(
         spark, index_dir, in_literals("bucket", buckets) & keep_expr,
-        q_arrs, gap_codec, k, threshold,
+        prep.q_arrs, gap_codec, k, threshold,
     )
     return top.toPandas() if as_local else top

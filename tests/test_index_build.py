@@ -136,28 +136,6 @@ def test_finalize_resumes_per_step(spark, tmp_path):
     assert got == want
 
 
-def test_single_query_fast_path_matches_batch(spark, built):
-    """query_texts=[one text] takes the TakeOrdered path; results must
-    equal the batch (window) path row-for-row."""
-    from splade_spark.operators.index_query import search
-    from splade_spark.sources.pages import load_documents
-    from splade_spark.synth import derive_queries
-
-    index_dir = built
-    row = (
-        derive_queries(load_documents(spark, "/root/testdata/sf0.001"))
-        .orderBy("qid")
-        .limit(1)
-        .collect()[0]
-    )
-    qdf = spark.createDataFrame([(row.qid, row.text)], "qid long, text string")
-    fast = search(spark, index_dir, qdf, k=10, query_texts=[row.text]).collect()
-    slow = search(spark, index_dir, qdf, k=10).collect()
-    key = lambda r: (r.qid, r.rank, r.doc_id, r.score)
-    assert sorted(map(key, fast)) == sorted(map(key, slow))
-    assert len(fast) > 0
-
-
 def test_search_fused_matches_search(spark, built):
     """The fused Arrow kernel (decode + q_tf multiply + per-doc partial
     agg in one mapInPandas) must equal the join+agg path exactly —

@@ -1,8 +1,9 @@
 """Cross-route equivalence: ``search_fused``'s three routes (driver,
 term-major, doc-major), ``search_maxscore_fused``'s driver route (same
-batch scorer) and the numpy oracle return identical (qid, doc_id,
-score, rank) on small seeded corpora, so any route can be re-routed or
-deleted safely.
+batch scorer), float ``search_bmp`` and the numpy oracle return
+identical (qid, doc_id, score, rank) on small seeded corpora, and
+quantized ``search_bmp`` returns ``search_quantized``'s rows, so any
+route can be re-routed or deleted safely.
 
 The corpora carry the shapes where routes could drift apart: duplicate
 documents (exact score ties, including at the k-th cut), duplicate
@@ -15,13 +16,16 @@ import numpy as np
 import pytest
 
 from splade_spark.operators import index_query
+from splade_spark.operators.bmp import build_bmp_index, search_bmp
 from splade_spark.operators.index_build import append_index, build_index
-from splade_spark.operators.index_query import search_fused
+from splade_spark.operators.index_query import search_fused, search_quantized
 from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.oracle import OracleIndex
 
 VOCAB = 14
 KS = (1, 10, 1000)
+# doc ids are spread over 2^30 values, so a BMP doc block holds ~10 docs
+BMP_DOC_BLOCK = 1 << 26
 
 
 def _texts(rng: np.random.Generator, n: int) -> list[str]:
@@ -62,6 +66,8 @@ def _build(spark, path, seed, gap_codec, first_id, append):
     )
     if extra:
         append_index(spark.createDataFrame(extra, "doc_id long, text string"), path)
+    for quantized in (False, True):
+        build_bmp_index(spark, path, doc_block_size=BMP_DOC_BLOCK, quantized=quantized)
     return path, OracleIndex(docs), _queries(rng)
 
 
@@ -116,6 +122,23 @@ def test_routes_match_oracle(spark, corpus, k):
         assert len(full) > 1 and full[0][1] == full[1][1]
 
 
+def test_bmp_matches_oracle(spark, corpus):
+    """Float BMP returns the oracle's rows and quantized BMP returns
+    ``search_quantized``'s rows at every k. BMP's stop certificate
+    depends on k; the quantized reference runs once, since its top-k
+    is the rank <= k prefix of its top-1000."""
+    path, oracle, qrows = corpus
+    qdf = spark.createDataFrame(qrows, "qid long, text string")
+    quant = _rows(search_quantized(spark, path, qdf, k=max(KS)))
+    for k in KS:
+        counts: dict = {}
+        got = search_bmp(spark, path, qrows, k=k, debug_counts=counts)
+        assert _rows(got) == _oracle_rows(oracle, qrows, k), k
+        assert counts["doc_blocks_evaluated"] > 0  # the BMP loop ran, no fallback
+        got = search_bmp(spark, path, qrows, k=k, quantized=True)
+        assert _rows(got) == [r for r in quant if r[3] <= k], k
+
+
 def test_empty_and_oov_batches(spark, corpus):
     path, _, _ = corpus
     for qrows in ([], [(7, "zzzz"), (8, "qqqq qqqq")]):
@@ -125,6 +148,23 @@ def test_empty_and_oov_batches(spark, corpus):
         for strategy in ("term", "doc"):
             assert _rows(search_fused(spark, path, qrows, k=10, strategy=strategy)) == []
         assert _rows(search_maxscore_fused(spark, path, qrows, k=10, as_local=True)) == []
+        for quantized in (False, True):
+            assert _rows(search_bmp(spark, path, qrows, k=10, quantized=quantized)) == []
+
+
+def test_repeated_qid_raises(spark, corpus):
+    """A qid on two rows is an error on every driver-resident entry
+    point, not a silent merge or drop of one row's terms."""
+    path, _, _ = corpus
+    qrows = [(1, "w0"), (1, "w3")]
+    for run in (
+        lambda: search_fused(spark, path, qrows, k=10),
+        lambda: search_maxscore_fused(spark, path, qrows, k=10, as_local=True),
+        lambda: search_bmp(spark, path, qrows, k=10),
+        lambda: search_bmp(spark, path, qrows, k=10, quantized=True),
+    ):
+        with pytest.raises(ValueError, match="duplicate qid 1"):
+            run()
 
 
 def test_squeezed_budget_scores_in_chunks(spark, corpus, monkeypatch):
