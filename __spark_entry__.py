@@ -76,12 +76,14 @@ def _materialized_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_index_search_k1000(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-index search (decode + score) at k=1000; lossless
-    vs the logical path, so it shares the BM25 SQL twin."""
-    from splade_spark.operators.index_query import search
+    """Compressed-index search at k=1000 on search_fused's term-major
+    Spark route (pruned scan -> Arrow score kernel -> one shuffle of
+    per-(qid, doc) partials -> top-k), which index_search_fused_k1000
+    answers on the driver. Exhaustive, so it shares the BM25 SQL twin."""
+    from splade_spark.operators.index_query import search_fused
 
     idx = _materialized_index(spark, sf_dir)
-    return search(spark, idx, derive_queries(load_documents(spark, sf_dir)), k=1000)
+    return search_fused(spark, idx, _driver_query_rows(spark, sf_dir), k=1000, strategy="term")
 
 
 def q_index_search_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,9 +93,11 @@ def q_index_search_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted_index.py:23-46 ``force_new``), then search the appended
     index. The appended index is IDENTICAL to a full build over the
     union (finalize is a pure function of the segment set), so this
-    shares the BM25 SQL twin over the whole corpus."""
+    shares the BM25 SQL twin over the whole corpus. It searches on
+    search_fused's doc-major Spark route (one exchange of the decoded
+    postings by doc range, shard-local scoring of every query)."""
     from splade_spark.operators.index_build import append_index, build_index
-    from splade_spark.operators.index_query import search
+    from splade_spark.operators.index_query import search_fused
 
     key = f"{sf_dir}::appended"
     if key not in _INDEX_CACHE:
@@ -104,11 +108,8 @@ def q_index_search_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_index(docs.filter(F.col("doc_id") % 2 == 0), idx, n_segments=4)
         append_index(docs.filter(F.col("doc_id") % 2 == 1), idx, n_segments=2)
         _INDEX_CACHE[key] = idx
-    return search(
-        spark,
-        _INDEX_CACHE[key],
-        derive_queries(load_documents(spark, sf_dir)),
-        k=1000,
+    return search_fused(
+        spark, _INDEX_CACHE[key], _driver_query_rows(spark, sf_dir), k=1000, strategy="doc"
     )
 
 
@@ -427,13 +428,12 @@ def _materialized_qindex(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_index_search_quantized(spark, sf_dir):
-    """Builds a quantized-only index and searches it end-to-end."""
-    from splade_spark.operators.index_query import search_quantized
+    """Builds a quantized-only index and searches it end-to-end with
+    search_fused's integer scoring (quantized=True)."""
+    from splade_spark.operators.index_query import search_fused
 
     idx = _materialized_qindex(spark, sf_dir)
-    return search_quantized(
-        spark, idx, derive_queries(load_documents(spark, sf_dir)), k=1000
-    )
+    return search_fused(spark, idx, _driver_query_rows(spark, sf_dir), k=1000, quantized=True)
 
 
 def q_index_search_bmp_quantized(spark, sf_dir):
@@ -441,8 +441,8 @@ def q_index_search_bmp_quantized(spark, sf_dir):
     maxima, exact integer certificate) over the SAME quantized-only
     (store_impacts=False) index as index_search_quantized — the layout
     the reference's external BMP engine consumes (bmp_inference/
-    exports). Matches search_quantized row-for-row, so it shares the
-    quantized SQL twin."""
+    exports). Matches search_fused(quantized=True) row-for-row, so it
+    shares the quantized SQL twin."""
     from splade_spark.operators.bmp import build_bmp_index, search_bmp
 
     idx = _materialized_qindex(spark, sf_dir)

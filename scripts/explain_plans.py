@@ -44,7 +44,7 @@ def main() -> None:
     import __spark_entry__ as m
 
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import search
+    from splade_spark.operators.index_query import search_fused
     from splade_spark.sources.pages import load_documents
     from splade_spark.synth import derive_queries
     import tempfile
@@ -67,18 +67,6 @@ def main() -> None:
     docs = load_documents(spark, SF_DIR).select("doc_id", "text")
     build_index(docs, idx_dir, n_segments=2)
     qs = derive_queries(load_documents(spark, SF_DIR)).limit(8)
-    sections.append((
-        "compressed-index search (bucket-pruned postings scan → Arrow decode → join → agg → top-k)",
-        formatted(search(spark, idx_dir, qs)),
-        "What to check: the postings scan carries PartitionFilters on `bucket` "
-        "(bucket-literal pruning — only query-term buckets are read) plus a "
-        "left-semi broadcast join on term_id; block decode is a single "
-        "mapInArrow over the pruned blocks (Arrow batches, no per-row Python); "
-        "everything after decode is JVM join + hash agg.",
-    ))
-
-    from splade_spark.operators.index_query import search_fused
-
     qr = [(int(r.qid), r.text) for r in qs.limit(2).collect()]
     sections.append((
         "search_fused strategy='term' (driver-resident queries: doubly-pruned scan → one Arrow kernel → one shuffle → top-k)",
@@ -113,20 +101,20 @@ def main() -> None:
         "as one Spark exchange. Measured (4M-doc replicated corpus, 12-query "
         "batch, local[8]): term-major 50s → doc-major 6-13s; dense single "
         "query 5s → 1.5s. `strategy=\"auto\"` picks doc-major from dictionary "
-        "metadata only, when estimated candidate pairs exceed 8× the emission "
-        "bound (parts × queries × k) and 2M rows.",
+        "metadata only: past DRIVER_POSTING_LIMIT, when candidate pairs exceed "
+        "DOC_MAJOR_FACTOR × the emission bound (parts × queries × k).",
     ))
 
-    from splade_spark.operators.index_query import search_quantized
     from splade_spark.operators.maxscore import search_maxscore_fused
 
     sections.append((
-        "search_quantized (integer scoring on uint8 quant_bytes)",
-        formatted(search_quantized(spark, idx_dir, qs)),
-        "What to check: same doubly-pruned scan shape as search, but the "
-        "decode kernel reads quant_bytes (uint8, 4x fewer bytes/posting than "
-        "float64 impacts) and the aggregate is an integer sum — PISA's "
-        "scoring arithmetic, hash-exact across engines.",
+        "search_fused quantized=True strategy='term' (integer scoring on uint8 quant_bytes)",
+        formatted(search_fused(spark, idx_dir, qr, strategy="term", quantized=True)),
+        "What to check: the same doubly-pruned scan and kernel as the float "
+        "term route, but ReadSchema carries quant_bytes (uint8, 8x fewer "
+        "payload bytes per posting than float64 impact_bytes) and the final "
+        "Project casts the integer sum to a bigint score — PISA's scoring "
+        "arithmetic, hash-exact across engines.",
     ))
 
     sections.append((

@@ -58,8 +58,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# columns each scan projects (keep in sync with index_query._BLOCK_COLS
-# and the block-metadata read in maxscore.search_maxscore_fused)
+# columns each scan projects (keep in sync with the block payload and
+# block-metadata reads in maxscore.search_maxscore_fused)
 PAYLOAD_COLS = ["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"]
 META_COLS = ["term_id", "block_id", "n", "first_doc_id", "last_doc_id", "block_max"]
 
@@ -130,11 +130,7 @@ def main() -> None:
 
     from splade_spark.operators import index_build
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import (
-        prepare_queries,
-        search,
-        search_fused,
-    )
+    from splade_spark.operators.index_query import prepare_queries, search_fused
     from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.session import get_spark
 
@@ -209,7 +205,6 @@ def main() -> None:
 
     qtext = "rare " + " ".join(f"t{j}" for j in range(n_terms))
     qrows = [(1, qtext)]
-    queries = spark.createDataFrame(qrows, "qid long, text string")
 
     def timed(fn):
         best = float("inf")
@@ -253,14 +248,16 @@ def main() -> None:
     # losslessness asserted for BOTH queries (this one caught the
     # uniform-candidate knife edge: retained=0 at 6M docs before the
     # PRUNE_EPS slack)
-    q2 = spark.createDataFrame(q2rows, "qid long, text string")
-    r2_ex = search(spark, idx, q2, k=10).collect()
+    r2_ex = search_fused(spark, idx, q2rows, k=10).collect()
     assert pairs(r2_pruned) == pairs(r2_ex), (
         "blockmax query pruned result diverged from exhaustive"
     )
     acct2 = accounted(q2rows, counts2)
 
-    t_ex, r_ex = timed(lambda: search(spark, idx, queries, k=10).collect())
+    # exhaustive reference on a Spark route: the term-major plan
+    t_ex, r_ex = timed(
+        lambda: search_fused(spark, idx, qrows, k=10, strategy="term").collect()
+    )
     t_msf, r_msf = timed(
         lambda: search_maxscore_fused(spark, idx, qrows, k=10).collect()
     )

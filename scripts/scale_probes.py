@@ -114,12 +114,11 @@ def probe_bmp4m(spark):
 
 
 def probe_quantized4m(spark):
-    from splade_spark.operators.index_query import search_quantized
+    from splade_spark.operators.index_query import search_fused
 
     idx, _ = _build(spark, 4_000_000)
-    qdf = spark.createDataFrame(_QROWS, "qid long, text string")
     t0 = time.time()
-    n = search_quantized(spark, idx, qdf, k=100).count()
+    n = search_fused(spark, idx, _QROWS, k=100, quantized=True).count()
     assert n == 200
     return {"search_s": round(time.time() - t0, 2)}
 

@@ -41,7 +41,7 @@ spark = get_spark(app=f"scaling-{{cores}}", cores=cores)
 from splade_spark.sources.pages import load_documents
 from splade_spark.operators.index_build import build_index
 from splade_spark.operators import index_query
-from splade_spark.operators.index_query import search, search_fused
+from splade_spark.operators.index_query import search_fused
 from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.synth import derive_queries
 

@@ -439,7 +439,7 @@ def main() -> None:
             "",
             "The float64 impact payload exists for hash-exact float scoring",
             "parity; production indexes that score on quantized impacts",
-            "(`search_quantized`, the PISA arithmetic) drop it with",
+            "(`search_fused(quantized=True)`, the PISA arithmetic) drop it with",
             "`store_impacts=False` for ~2.2x smaller postings.",
             "",
         ]

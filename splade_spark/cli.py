@@ -139,7 +139,7 @@ def cmd_index(args) -> None:
 
 
 def cmd_query(args) -> None:
-    from splade_spark.operators.index_query import search, search_quantized
+    from splade_spark.operators.index_query import search_fused
     from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.sources.pages import read_tsv_queries
     from splade_spark.sources.sinks import write_trec_run
@@ -150,25 +150,25 @@ def cmd_query(args) -> None:
     else:
         queries = spark.read.parquet(args.queries)
     t0 = time.time()
+    qrows = [(r.qid, r.text) for r in queries.collect()]
     if args.bmp:
         from splade_spark.operators.bmp import build_bmp_index, search_bmp
 
         # no-op if committed; --quantized selects the uint8 layout
         # (the only one available on a store_impacts=False index)
         build_bmp_index(spark, args.index_dir, quantized=args.quantized)
-        qrows = [(r.qid, r.text) for r in queries.collect()]
         run = search_bmp(
             spark, args.index_dir, qrows, k=args.k, quantized=args.quantized
         )
-    elif args.quantized:
-        run = search_quantized(spark, args.index_dir, queries, k=args.k)
-    elif args.prune:
+    elif args.prune and not args.quantized:
         # both MaxScore passes on the driver, then a driver answer or
         # one pruned cluster scan
-        qrows = [(r.qid, r.text) for r in queries.collect()]
         run = search_maxscore_fused(spark, args.index_dir, qrows, k=args.k)
     else:
-        run = search(spark, args.index_dir, queries, k=args.k)
+        # MaxScore scores floats only: --quantized takes precedence
+        run = search_fused(
+            spark, args.index_dir, qrows, k=args.k, quantized=args.quantized
+        )
     if args.remap:
         import os
 

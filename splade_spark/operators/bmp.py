@@ -218,9 +218,8 @@ def search_bmp(
     query weights (min(q_tf * 50, 255)), uint8 doc impacts from
     quant_bytes, integer score ``sum(q_w * d_w)`` with an EXACT
     integer certificate (no rounding slop) — matches
-    ``search_quantized`` row-for-row and is the only path on a
-    ``store_impacts=False`` index (its fallback is
-    ``search_quantized``). Returns score long instead of double.
+    ``search_fused(quantized=True)`` row-for-row, which is also its
+    fallback. Returns score long instead of double.
     """
     import json
 
@@ -228,11 +227,16 @@ def search_bmp(
     import pyarrow.dataset as pads
 
     from splade_spark.operators.index_query import (
-        decode_blocks_vectorized,
-        decode_doc_ids_vectorized,
+        block_cols,
+        decode_block_frame,
+        empty_tops,
+        payload_for,
         prepare_queries,
+        query_weights,
+        rank_top,
         require_impacts,
         search_fused,
+        tops_relation,
     )
 
     prep = prepare_queries(index_dir, query_rows)
@@ -240,12 +244,7 @@ def search_bmp(
         require_impacts(prep.stats)
 
     def exhaustive_fallback():
-        if quantized:
-            from splade_spark.operators.index_query import search_quantized
-
-            qdf = spark.createDataFrame(query_rows, "qid long, text string")
-            return search_quantized(spark, index_dir, qdf, k=k)
-        return search_fused(spark, index_dir, query_rows, k, threshold)
+        return search_fused(spark, index_dir, query_rows, k, threshold, quantized=quantized)
 
     # an index whose BMP table was never built (or was invalidated by
     # an append's postings rewrite) answers exhaustively, same routing
@@ -261,19 +260,10 @@ def search_bmp(
     if any(min(df, max_blocks) > term_block_limit for df in prep.df.values()):
         return exhaustive_fallback()
 
-    out_schema = (
-        "qid long, doc_id long, score long, rank int"
-        if quantized
-        else "qid long, doc_id long, score double, rank int"
-    )
-    # qid -> (term_ids ascending, query weights); quantized weights are
-    # x50-clip-255 integers (inference_q_SPLADE.py:13,60)
-    q_terms = {
-        qid: (tids, np.minimum(q_tf * 50, 255) if quantized else q_tf)
-        for qid, (tids, q_tf) in prep.q_arrs.items()
-    }
+    # qid -> (term_ids ascending, query weights)
+    q_terms = query_weights(prep.q_arrs, quantized)
     if not q_terms:
-        return spark.createDataFrame([], out_schema)
+        return tops_relation(spark, empty_tops(quantized))
 
     # bucket partition-dir pruning for the driver-side metadata and
     # payload fetches (same pushdown the Spark plans get from
@@ -325,7 +315,6 @@ def search_bmp(
     # certificate. A query that misses twice jumps straight to full
     # evaluation — the geometric ladder only pays when the UB ordering
     # is actually selective.
-    eval_blocks = 0
     fetched_rows = 0
     fetched_postings = 0
     fetch_ranges = 0
@@ -351,7 +340,7 @@ def search_bmp(
             round_terms = np.unique(
                 np.concatenate([q_terms[qid][0] for qid in need])
             ).tolist()
-            payload = "quant_bytes" if quantized else "impact_bytes"
+            payload = payload_for(quantized)
             range_pred = None
             for blo, bhi in runs:
                 p = (
@@ -360,7 +349,7 @@ def search_bmp(
                 ) & (pads.field("last_doc_id") >= int(blo) * doc_block_size)
                 range_pred = p if range_pred is None else (range_pred | p)
             tbl = post_ds.to_table(
-                columns=["term_id", "first_doc_id", "n", "doc_gap_bytes", payload],
+                columns=block_cols(payload),
                 filter=bucket_flt
                 & pads.field("term_id").isin(round_terms)
                 & range_pred,
@@ -368,33 +357,10 @@ def search_bmp(
             fetched_rows += tbl.num_rows
             fetched_postings += int(tbl.column("n").to_numpy().sum())
             fetch_ranges += len(runs)
-            if tbl.num_rows:
-                ns = tbl.column("n").to_numpy().astype(np.int64)
-                if quantized:
-                    doc_ids = decode_doc_ids_vectorized(
-                        tbl.column("first_doc_id").to_numpy().astype(np.int64),
-                        ns,
-                        tbl.column("doc_gap_bytes").to_pylist(),
-                        prep.gap_codec,
-                    )
-                    impacts = np.frombuffer(
-                        b"".join(tbl.column("quant_bytes").to_pylist()),
-                        dtype=np.uint8,
-                    ).astype(np.float64)
-                else:
-                    doc_ids, impacts = decode_blocks_vectorized(
-                        tbl.column("first_doc_id").to_numpy().astype(np.int64),
-                        ns,
-                        tbl.column("doc_gap_bytes").to_pylist(),
-                        tbl.column("impact_bytes").to_pylist(),
-                        prep.gap_codec,
-                    )
-                tid_rep = np.repeat(
-                    tbl.column("term_id").to_numpy().astype(np.int64), ns
-                )
-                blk_of = doc_ids // doc_block_size
-            else:
-                doc_ids = np.zeros(0, dtype=np.int64)
+            tid_rep, doc_ids, impacts = decode_block_frame(
+                tbl.to_pandas(), prep.gap_codec, payload
+            )
+            blk_of = doc_ids // doc_block_size
         for qid in sorted(need):
             st = state[qid]
             tids, w = q_terms[qid]
@@ -435,20 +401,13 @@ def search_bmp(
             st["misses"] += 1
             st["m"] = len(st["order"]) if st["misses"] >= 2 else st["m"] * 2
 
-    out_rows = []
-    for qid, st in state.items():
-        eval_blocks += st["done"]
-        keep = st["s"] > (0 if quantized else threshold)
-        vals = (
-            st["s"][keep].astype(np.int64).tolist()
-            if quantized
-            else st["s"][keep].tolist()
-        )
-        ranked = sorted(
-            zip(st["d"][keep].tolist(), vals),
-            key=lambda p: (-p[1], p[0]),
-        )[:k]
-        out_rows += [(qid, doc, s, r + 1) for r, (doc, s) in enumerate(ranked)]
+    # one (-score, doc_id) ranking of every query's exact scores
+    eval_blocks = sum(st["done"] for st in state.values())
+    q = np.repeat(np.array(list(state), dtype=np.int64), [len(st["d"]) for st in state.values()])
+    d = np.concatenate([st["d"] for st in state.values()] + [np.zeros(0, dtype=np.int64)])
+    s = np.concatenate([st["s"] for st in state.values()] + [np.zeros(0)])
+    keep = s > (0 if quantized else threshold)
+    q, d, s, rank = rank_top(q[keep], d[keep], s[keep], k)
 
     if debug_counts is not None:
         debug_counts["doc_blocks_total"] = total_blocks
@@ -456,4 +415,4 @@ def search_bmp(
         debug_counts["postings_block_rows_fetched"] = fetched_rows
         debug_counts["postings_fetched"] = fetched_postings
         debug_counts["fetch_ranges"] = fetch_ranges
-    return spark.createDataFrame(out_rows, out_schema)
+    return tops_relation(spark, (q, d, s.astype(np.int64) if quantized else s, rank))

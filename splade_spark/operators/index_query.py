@@ -32,11 +32,11 @@ postings the batch's scoring visits.
 
 ``strategy="term"|"doc"`` pins a Spark route. Every route rounds to
 6 dp, applies the threshold, then ranks by (-score, doc_id), and all
-three return identical rows. ``search`` and ``search_quantized`` take
-a query RELATION instead: term_ids by join with term_dict, bucket
-literals from one action over the relation, a bucket + term_id pruned
-postings scan, an Arrow-batched block decode, a hash-aggregate per
-(qid, doc_id), then the window top-k.
+three return identical rows. ``quantized=True`` runs the same routes
+over the uint8 ``quant_bytes`` payload with x50-clip-255 integer query
+weights (``query_weights``): PISA's integer ``sum(q_w * d_w)``, scores
+``long``, kept when ``> 0``. The payload column names its decode dtype
+in ``PAYLOAD_DTYPES``, the one place every decode looks it up.
 """
 
 from __future__ import annotations
@@ -52,9 +52,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from splade_spark import SCORE_THRESHOLD, TOPK_DEFAULT
+from splade_spark import QUERY_SCALE, SCORE_THRESHOLD, TOPK_DEFAULT
 from splade_spark.functions.codec import vbyte_decode
-from splade_spark.operators.retrieval import query_terms, topk_window
+from splade_spark.operators.retrieval import topk_window
 
 
 def load_stats(index_dir: str) -> dict:
@@ -64,29 +64,13 @@ def load_stats(index_dir: str) -> dict:
 
 def require_impacts(stats: dict) -> None:
     """Float-scoring paths need the float64 impact payload; a
-    quantized-only index (store_impacts=False) serves search_quantized
+    quantized-only index (store_impacts=False) serves quantized scoring
     only — fail loudly instead of scoring empty byte columns."""
     if not stats.get("store_impacts", True):
         raise ValueError(
             "index was built quantized-only (store_impacts=False); "
-            "float-impact search is unavailable — use search_quantized"
+            "float-impact search is unavailable — use quantized=True"
         )
-
-
-def buckets_for_queries(queries: DataFrame, n_buckets: int) -> list[int]:
-    """Bucket literals when query texts are not driver-resident: one
-    cheap action over the (tiny) query relation — no postings scan,
-    no term_dict join."""
-    from splade_spark.functions.hashing import md5_int
-    from splade_spark.functions.tokenize import tokens_col
-
-    rows = (
-        queries.select(F.explode(tokens_col("text")).alias("term"))
-        .select(F.pmod(md5_int(F.col("term")), F.lit(n_buckets)).alias("b"))
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r.b) for r in rows)
 
 
 def in_literals(col: str, vals) -> "F.Column":
@@ -118,10 +102,6 @@ def block_pairs_expr(by_term: dict) -> "F.Column":
     if not parts:
         return F.lit(False)
     return F.expr(" OR ".join(parts))
-
-
-def load_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, "term_dict"))
 
 
 class PreparedQueries(NamedTuple):
@@ -226,38 +206,69 @@ def decode_doc_ids_vectorized(
     return g
 
 
+# decode dtype of each posting-block payload column: the float64 BM25
+# impacts of float scoring, or the uint8 quantized impacts (the PISA
+# interchange payload, index2pisa.py:42-48) of quantized scoring
+PAYLOAD_DTYPES = {"impact_bytes": np.float64, "quant_bytes": np.uint8}
+
+
+def payload_for(quantized: bool) -> str:
+    return "quant_bytes" if quantized else "impact_bytes"
+
+
+def block_cols(payload: str = "impact_bytes") -> list[str]:
+    """Posting-block columns a score decode reads."""
+    return ["term_id", "first_doc_id", "n", "doc_gap_bytes", payload]
+
+
+def query_weights(q_arrs: dict, quantized: bool) -> dict:
+    """``prepare_queries``' {qid: (term_ids, q_tf)} with the scoring's
+    query weights: q_tf for float scoring; for quantized scoring the
+    reference's x50-clip-255 integer weights, min(q_tf * QUERY_SCALE,
+    255) (inference_q_SPLADE.py:13,60). Query weights are integer term
+    frequencies, so no truncation is needed."""
+    if not quantized:
+        return q_arrs
+    return {
+        qid: (tids, np.minimum(q_tf * QUERY_SCALE, 255))
+        for qid, (tids, q_tf) in q_arrs.items()
+    }
+
+
 def decode_blocks_vectorized(
     first_ids: np.ndarray,
     ns: np.ndarray,
     gap_bytes: list,
-    impact_bytes: list,
+    payload_bytes: list,
     gap_codec: str = "vbyte",
+    payload: str = "impact_bytes",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(doc_ids, float64 impacts) across many blocks at once."""
+    """(doc_ids, impacts) across many blocks at once; impacts have the
+    payload's PAYLOAD_DTYPES dtype."""
     doc_ids = decode_doc_ids_vectorized(first_ids, ns, gap_bytes, gap_codec)
-    impacts = np.frombuffer(b"".join(impact_bytes), dtype=np.float64)
+    impacts = np.frombuffer(b"".join(payload_bytes), dtype=PAYLOAD_DTYPES[payload])
     return doc_ids, impacts
 
 
 def decode_block_frame(
-    pdf: pd.DataFrame, gap_codec: str = "vbyte"
+    pdf: pd.DataFrame, gap_codec: str = "vbyte", payload: str = "impact_bytes"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(term_ids, doc_ids, impacts), one entry per posting, of a pandas
-    frame of posting blocks (term_id, first_doc_id, n, doc_gap_bytes,
-    impact_bytes)."""
+    frame of posting blocks (``block_cols(payload)``)."""
     ns = pdf["n"].to_numpy(dtype=np.int64)
     doc_ids, impacts = decode_blocks_vectorized(
         pdf["first_doc_id"].to_numpy(dtype=np.int64),
         ns,
         list(pdf["doc_gap_bytes"]),
-        list(pdf["impact_bytes"]),
+        list(pdf[payload]),
         gap_codec,
+        payload,
     )
     return np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), ns), doc_ids, impacts
 
 
 DECODED_SCHEMA = "term_id int, block_id long, doc_id long, impact double"
-_BLOCK_COLS = ["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"]
+_BLOCK_COLS = ["block_id", *block_cols()]
 
 
 def _make_decode_postings(gap_codec: str):
@@ -293,32 +304,20 @@ def decode_blocks_df(blocks: DataFrame, gap_codec: str = "vbyte") -> DataFrame:
     )
 
 
-_BLOCK_COLS_Q = ["term_id", "first_doc_id", "n", "doc_gap_bytes", "quant_bytes"]
-
-
 def _make_decode_postings_quant(gap_codec: str):
-    """Arrow-batch decode of the uint8 quantized impacts (the PISA
-    interchange payload, index2pisa.py:42-48) -> (term_id, doc_id, d_w)."""
+    """Arrow-batch decode of the uint8 quantized impacts ->
+    (term_id, doc_id, d_w)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ns = pdf["n"].to_numpy(dtype=np.int64)
-            doc_ids = decode_doc_ids_vectorized(
-                pdf["first_doc_id"].to_numpy(dtype=np.int64),
-                ns,
-                list(pdf["doc_gap_bytes"]),
-                gap_codec,
-            )
-            d_w = np.frombuffer(b"".join(pdf["quant_bytes"]), dtype=np.uint8).astype(
-                np.int32
-            )
+            tids, doc_ids, d_w = decode_block_frame(pdf, gap_codec, "quant_bytes")
             yield pd.DataFrame(
                 {
-                    "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int32), ns),
+                    "term_id": tids.astype(np.int32),
                     "doc_id": doc_ids,
-                    "d_w": d_w,
+                    "d_w": d_w.astype(np.int32),
                 }
             )
 
@@ -326,50 +325,13 @@ def _make_decode_postings_quant(gap_codec: str):
 
 
 def decode_blocks_quant_df(blocks: DataFrame, gap_codec: str = "vbyte") -> DataFrame:
-    return blocks.select(*_BLOCK_COLS_Q).mapInPandas(
+    return blocks.select(*block_cols("quant_bytes")).mapInPandas(
         _make_decode_postings_quant(gap_codec),
         schema="term_id int, doc_id long, d_w int",
     )
 
 
-def search_quantized(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOPK_DEFAULT,
-) -> DataFrame:
-    """(qid, doc_id, score long, rank): PISA-parity quantized search —
-    integer ``sum(q_w * d_w)`` over the index's stored uint8
-    quant_bytes (codec.quantize rint convention) and x50-clipped query
-    weights (inference_q_SPLADE.py:13,60). Same doubly-pruned scan
-    shape as ``search``; the decode kernel reads quant_bytes instead
-    of float64 impact_bytes (4x fewer bytes per posting)."""
-    from splade_spark.operators.retrieval import quantized_query_terms
-
-    term_dict = load_term_dict(spark, index_dir)
-    qtq = (
-        quantized_query_terms(queries)
-        .join(term_dict.select("term", "term_id"), "term")
-        .select("qid", "term_id", "q_w")
-    )
-    postings = load_postings(spark, index_dir)
-    stats = load_stats(index_dir)
-    n_buckets = stats["n_buckets"]
-    buckets = buckets_for_queries(queries, n_buckets)
-    pruned = postings.filter(F.col("bucket").isin(buckets)).join(
-        F.broadcast(qtq.select("term_id").distinct()), "term_id", "left_semi"
-    )
-    decoded = decode_blocks_quant_df(pruned, stats.get("gap_codec", "vbyte"))
-    scored = (
-        decoded.join(F.broadcast(qtq), "term_id")
-        .groupBy("qid", "doc_id")
-        .agg(F.sum(F.col("q_w") * F.col("d_w")).cast("long").alias("score"))
-        .filter(F.col("score") > 0)
-    )
-    return topk_window(scored, k)
-
-
-def make_score_kernel(q_arrs: dict, gap_codec: str = "vbyte"):
+def make_score_kernel(q_arrs: dict, gap_codec: str = "vbyte", payload: str = "impact_bytes"):
     """Build the Arrow scoring kernel shared by search_fused and
     search_maxscore_fused: gap-decode a batch of blocks once, then
     fan partial products out PER TERM to only the queries containing
@@ -387,7 +349,7 @@ def make_score_kernel(q_arrs: dict, gap_codec: str = "vbyte"):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            tid_arr, doc_ids, impacts = decode_block_frame(pdf, gap_codec)
+            tid_arr, doc_ids, impacts = decode_block_frame(pdf, gap_codec, payload)
             order = np.argsort(tid_arr, kind="stable")
             sorted_tids = tid_arr[order]
             uniq_t, starts = np.unique(sorted_tids, return_index=True)
@@ -469,10 +431,11 @@ def _guarded_shard_geometry(
     return shard_width, n_shards
 
 
-def _docmajor_pack_kernel(shard_width: int, gap_codec: str):
+def _docmajor_pack_kernel(shard_width: int, gap_codec: str, payload: str):
     """Pass 1: decode pruned posting blocks and pack each (doc_shard,
     term) group into ONE binary row — int32 in-shard doc offsets +
-    float64 impacts. The doc-range exchange then moves thousands of
+    impacts in the payload's dtype (float64, or uint8 when quantized).
+    The doc-range exchange then moves thousands of
     blob rows instead of ~|postings| narrow rows: shuffle BYTES stay
     O(pruned postings) while the per-row JVM (de)serialization cost —
     measured dominant at ~100M rows — collapses with the row count."""
@@ -490,8 +453,9 @@ def _docmajor_pack_kernel(shard_width: int, gap_codec: str):
                 .astype(np.int64),
                 ns,
                 tbl.column("doc_gap_bytes").to_pylist(),
-                tbl.column("impact_bytes").to_pylist(),
+                tbl.column(payload).to_pylist(),
                 gap_codec,
+                payload,
             )
             tid_rep = np.repeat(
                 tbl.column("term_id").to_numpy(zero_copy_only=False).astype(np.int64),
@@ -533,7 +497,9 @@ def _docmajor_pack_kernel(shard_width: int, gap_codec: str):
     return kernel
 
 
-def _docmajor_score_kernel(q_arrs: dict, k: int, threshold: float, shard_width: int):
+def _docmajor_score_kernel(
+    q_arrs: dict, k: int, threshold: float, shard_width: int, payload: str
+):
     """Pass 2: per-doc-shard scoring. Every query is broadcast
     (closure) to every shard; a shard holds ALL hit-term postings for
     its doc range, so scores are FINAL locally — the reference's dense
@@ -568,7 +534,7 @@ def _docmajor_score_kernel(q_arrs: dict, k: int, threshold: float, shard_width: 
             acc_rows: dict[int, np.ndarray] = {}
             for r in rows.tolist():
                 o = np.frombuffer(offs[r], dtype=np.int32)
-                v = np.frombuffer(vals[r], dtype=np.float64)
+                v = np.frombuffer(vals[r], dtype=PAYLOAD_DTYPES[payload])
                 row = np.bincount(o, weights=v, minlength=shard_width)
                 t = int(tid[r])
                 prev = acc_rows.get(t)
@@ -637,6 +603,7 @@ def _search_fused_docmajor(
     threshold: float,
     gap_codec: str,
     n_docs: int,
+    payload: str,
 ) -> DataFrame:
     """Doc-major batch plan: pruned scan -> Arrow block decode ->
     ONE exchange of the decoded postings hashed on contiguous doc
@@ -659,15 +626,13 @@ def _search_fused_docmajor(
     shard_width, _n_shards = _guarded_shard_geometry(
         n_docs, n_parts, len(hit_terms)
     )
-    packed = pruned.select(
-        "term_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"
-    ).mapInArrow(
-        _docmajor_pack_kernel(shard_width, gap_codec),
+    packed = pruned.select(*block_cols(payload)).mapInArrow(
+        _docmajor_pack_kernel(shard_width, gap_codec, payload),
         schema="shard long, term_id int, offs binary, vals binary",
     )
     sharded = packed.repartition(n_parts, "shard")
     shard_top = sharded.mapInArrow(
-        _docmajor_score_kernel(q_arrs, k, threshold, shard_width),
+        _docmajor_score_kernel(q_arrs, k, threshold, shard_width, payload),
         schema="qid long, doc_id long, score double",
     )
     return topk_window(shard_top, k)
@@ -681,13 +646,15 @@ def term_major_top(
     gap_codec: str,
     k: int,
     threshold: float,
+    payload: str = "impact_bytes",
 ) -> DataFrame:
     """Term-major Spark plan over the postings blocks ``keep`` selects
     (literal pushdowns): Arrow kernel (decode, q_tf multiply, per-doc
     partial bincount — output rows ~= candidate docs, not postings) ->
     one shuffle -> final agg -> top-k."""
-    partials = load_postings(spark, index_dir).filter(keep).select(*_BLOCK_COLS).mapInPandas(
-        make_score_kernel(q_arrs, gap_codec),
+    blocks = load_postings(spark, index_dir).filter(keep).select(*block_cols(payload))
+    partials = blocks.mapInPandas(
+        make_score_kernel(q_arrs, gap_codec, payload),
         schema="qid long, doc_id long, partial double",
     )
     scored = (
@@ -764,19 +731,39 @@ DRIVER_ACC_BUDGET_BYTES = 64 << 20
 # sum alone (this constant at 0), 8/8 pairs, sparse-only IQR 14.5.
 _DENSE_CELLS_PER_POSTING = 4
 
-TOPS_SCHEMA = "qid long, doc_id long, score double, rank int"
 _TOPS_TYPES = {"qid": np.int64, "doc_id": np.int64, "score": np.float64, "rank": np.int32}
+
+
+def empty_tops(quantized: bool = False) -> tuple:
+    """Zero-row (qid, doc_id, score, rank) columns; quantized scores
+    are int64."""
+    types = {**_TOPS_TYPES, "score": np.int64} if quantized else _TOPS_TYPES
+    return tuple(np.zeros(0, dtype=t) for t in types.values())
 
 
 def tops_relation(spark: SparkSession, cols=(), as_local: bool = False):
     """(qid, doc_id, score, rank) numpy columns (empty by default) ->
     pandas when ``as_local``, else a Spark relation built from the
-    columns, so it travels as Arrow batches, not per-row tuples."""
+    columns, so it travels as Arrow batches, not per-row tuples. An
+    int64 score column (quantized scoring) gives ``score long``."""
     pdf = pd.DataFrame({
-        name: np.asarray(cols[i] if cols else [], dtype=t)
-        for i, (name, t) in enumerate(_TOPS_TYPES.items())
+        name: np.asarray(c, dtype=None if name == "score" else t)
+        for (name, t), c in zip(_TOPS_TYPES.items(), cols or empty_tops())
     })
-    return pdf if as_local else spark.createDataFrame(pdf, TOPS_SCHEMA)
+    if as_local:
+        return pdf
+    score_type = "long" if pdf["score"].dtype == np.int64 else "double"
+    return spark.createDataFrame(pdf, f"qid long, doc_id long, score {score_type}, rank int")
+
+
+def rank_top(q: np.ndarray, d: np.ndarray, s: np.ndarray, k: int) -> tuple:
+    """(q, d, s, rank) of the rows ranked by (q, -s, d), rank 1-based
+    within each q, cut at rank <= k."""
+    o = np.lexsort((d, -s, q))
+    q, d, s = q[o], d[o], s[o]
+    rank = np.arange(1, len(q) + 1) - np.searchsorted(q, q)
+    top = rank <= k
+    return q[top], d[top], s[top], rank[top].astype(np.int32)
 
 
 def _query_chunks(cost: np.ndarray, budget: int) -> list[int]:
@@ -891,16 +878,10 @@ def score_batch(
             cut = np.partition(score[a:b], b - a - k)[b - a - k]
             keep[a:b] = score[a:b] >= cut
         q_loc, d_loc = np.divmod(key[keep], n_u)
-        score = score[keep]
-        o = np.lexsort((d_loc, -score, q_loc))
-        q_loc, d_loc, score = q_loc[o], d_loc[o], score[o]
-        rank = np.arange(1, len(q_loc) + 1) - np.searchsorted(q_loc, q_loc)
-        top = rank <= k
-        out.append(
-            (qids[qa + q_loc[top]], uniq_doc[d_loc[top]], score[top], rank[top].astype(np.int32))
-        )
+        q_loc, d_loc, score, rank = rank_top(q_loc, d_loc, score[keep], k)
+        out.append((qids[qa + q_loc], uniq_doc[d_loc], score, rank))
     if not out:
-        return tuple(np.zeros(0, dtype=t) for t in _TOPS_TYPES.values())
+        return empty_tops()
     return tuple(np.concatenate(c) for c in zip(*out))
 
 
@@ -913,6 +894,7 @@ def search_fused(
     strategy: str = "auto",
     debug_counts: dict | None = None,
     as_local: bool = False,
+    quantized: bool = False,
 ):
     """Exhaustive top-k for driver-resident queries (the reference's
     own query-loading shape, evaluate.py:80-86) -> (qid, doc_id, score,
@@ -941,12 +923,23 @@ def search_fused(
     distinct postings the driver decodes). ``as_local=True`` returns
     pandas: the driver route skips the relation round trip, Spark
     routes collect with ``toPandas()``.
+
+    ``quantized=True`` scores PISA's integer ``sum(q_w * d_w)`` on every
+    route: uint8 ``quant_bytes`` impacts, ``query_weights``' x50-clip
+    query weights, ``score long`` kept when ``> 0`` (``threshold`` is
+    for float scores). It is the only scoring a ``store_impacts=False``
+    index serves.
     """
     import pyarrow.dataset as pads
 
     prep = prepare_queries(index_dir, query_rows)
-    require_impacts(prep.stats)
-    q_arrs, hit_terms, buckets = prep.q_arrs, prep.hit_terms, prep.buckets
+    if quantized:
+        threshold = 0
+    else:
+        require_impacts(prep.stats)
+    payload = payload_for(quantized)
+    q_arrs = query_weights(prep.q_arrs, quantized)
+    hit_terms, buckets = prep.hit_terms, prep.buckets
     candidate_pairs = sum(prep.df[int(t)] for tids, _ in q_arrs.values() for t in tids)
     # doc-major's output is bounded by n_parts x n_queries x k while
     # term-major's score shuffle carries ~candidate_pairs rows; go
@@ -975,59 +968,32 @@ def search_fused(
         )
 
     if route == "driver":
-        tops = ()
+        tops = empty_tops()
         if q_arrs:
             blocks = pads.dataset(
                 os.path.join(index_dir, "postings"), partitioning="hive"
             ).to_table(
-                columns=["term_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"],
+                columns=block_cols(payload),
                 filter=pads.field("bucket").isin(buckets)
                 & pads.field("term_id").isin(hit_terms),
             ).to_pandas().sort_values("term_id", kind="stable")
-            decoded = decode_block_frame(blocks, prep.gap_codec)
+            decoded = decode_block_frame(blocks, prep.gap_codec, payload)
             del blocks  # the encoded bytes are dead once decoded
             tops = score_batch(q_arrs, *decoded, k, threshold)
+        if quantized:
+            tops = (*tops[:2], tops[2].astype(np.int64), tops[3])
         return tops_relation(spark, tops, as_local)
     if route == "doc":
         top = _search_fused_docmajor(
             spark, index_dir, q_arrs, buckets, hit_terms, k, threshold,
-            prep.gap_codec, int(prep.stats["n_docs"]),
+            prep.gap_codec, int(prep.stats["n_docs"]), payload,
         )
     else:
         top = term_major_top(
             spark, index_dir, in_literals("bucket", buckets) & in_literals("term_id", hit_terms),
-            q_arrs, prep.gap_codec, k, threshold,
+            q_arrs, prep.gap_codec, k, threshold, payload,
         )
+    if quantized:
+        top = top.withColumn("score", F.col("score").cast("long"))
     return top.toPandas() if as_local else top
 
-
-def search(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOPK_DEFAULT,
-    threshold: float = SCORE_THRESHOLD,
-) -> DataFrame:
-    """(qid, doc_id, score, rank) from the compressed index for a
-    query relation (plan in the module docstring)."""
-    term_dict = load_term_dict(spark, index_dir)
-    qt = (
-        query_terms(queries)
-        .join(term_dict.select("term", "term_id"), "term")
-        .select("qid", "term_id", "q_tf")
-    )
-    postings = load_postings(spark, index_dir)
-    stats = load_stats(index_dir)
-    require_impacts(stats)
-    buckets = buckets_for_queries(queries, stats["n_buckets"])
-    pruned = postings.filter(F.col("bucket").isin(buckets)).join(
-        F.broadcast(qt.select("term_id").distinct()), "term_id", "left_semi"
-    )
-    decoded = decode_blocks_df(pruned, stats.get("gap_codec", "vbyte"))
-    scored = (
-        decoded.join(F.broadcast(qt), "term_id")
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum(F.col("q_tf") * F.col("impact")), 6).alias("score"))
-        .filter(F.col("score") > F.lit(threshold))
-    )
-    return topk_window(scored, k)

@@ -21,7 +21,7 @@ from collections import Counter
 
 import numpy as np
 
-from splade_spark import B, K1, SCORE_THRESHOLD, TOKEN_SPLIT_RE
+from splade_spark import B, DOC_SCALE, K1, QUERY_SCALE, SCORE_THRESHOLD, TOKEN_SPLIT_RE
 
 _SPLIT = re.compile(TOKEN_SPLIT_RE)
 
@@ -73,6 +73,23 @@ class OracleIndex:
         cand = np.nonzero(rounded > threshold)[0]
         ranked = sorted(
             ((self.doc_ids[i], float(rounded[i])) for i in cand),
+            key=lambda p: (-p[1], p[0]),
+        )
+        return ranked[:k]
+
+    def score_query_quantized(self, text: str, k: int) -> list[tuple[int, int]]:
+        """[(doc_id, int_score)] ranked by (-score, doc_id), len<=k: the
+        integer ``sum(q_w * d_w)`` PISA runs on the exported index —
+        rint-quantized doc impacts (index2pisa.py:42-48) and x50-clip-255
+        query weights (inference_q_SPLADE.py:13,60) — scores > 0."""
+        scores = np.zeros(self.n, dtype=np.int64)
+        for term, q_tf in Counter(tokenize(text)).items():
+            if term in self.postings:
+                ids, ws = self.postings[term]
+                d_w = np.clip(np.rint(ws * DOC_SCALE), 0, 255).astype(np.int64)
+                np.add.at(scores, ids, min(q_tf * QUERY_SCALE, 255) * d_w)
+        ranked = sorted(
+            ((self.doc_ids[i], int(scores[i])) for i in np.nonzero(scores > 0)[0]),
             key=lambda p: (-p[1], p[0]),
         )
         return ranked[:k]

@@ -942,7 +942,7 @@ FROM qterms
 
 def quantized_run_sql(k: int, doc_scale: int = 100, q_scale: int = 50) -> str:
     """Quantized-arithmetic run twin (engine.bm25_run_quantized /
-    index_query.search_quantized): integer sum(q_w * d_w). The doc
+    index_query.search_fused(quantized=True)): integer sum(q_w * d_w). The doc
     side uses round() (= codec.quantize's rint except at exact .5
     ties, which BM25 impacts never hit in float64)."""
     return (

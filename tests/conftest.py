@@ -41,3 +41,9 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
 @pytest.fixture(scope="session")
 def duck_smoke():
     return duck_con(SF_SMOKE)
+
+
+def query_rows(queries) -> list[tuple[int, str]]:
+    """(qid, text) rows of a query relation: the driver-resident batch
+    the search entry points take."""
+    return [(int(r.qid), r.text) for r in queries.collect()]

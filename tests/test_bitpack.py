@@ -29,7 +29,7 @@ def test_bitpack_round_trip(vals):
 def test_bitpack_index_matches_vbyte(spark, tmp_path):
     from splade_spark.engine import bm25_run
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import search, search_fused
+    from splade_spark.operators.index_query import search_fused
     from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.sources.pages import load_documents
     from splade_spark.synth import derive_queries
@@ -48,7 +48,6 @@ def test_bitpack_index_matches_vbyte(spark, tmp_path):
     assert json.load(open(idx + "/stats.json"))["gap_codec"] == "bitpack"
 
     for label, run in [
-        ("search", search(spark, idx, queries, k=10)),
         ("fused", search_fused(spark, idx, qrows, k=10)),
         ("maxscore_fused", search_maxscore_fused(spark, idx, qrows, k=10)),
     ]:
@@ -63,12 +62,12 @@ def test_quantized_only_index(spark, tmp_path):
     import pytest
 
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import search, search_quantized
+    from splade_spark.operators.index_query import search_fused
     from splade_spark.sources.pages import load_documents
     from splade_spark.synth import derive_queries
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
-    queries = derive_queries(docs)
+    qrows = [(int(r.qid), r.text) for r in derive_queries(docs).collect()]
 
     full_idx = str(tmp_path / "full")
     build_index(docs, full_idx, n_segments=2, n_buckets=8)
@@ -80,16 +79,16 @@ def test_quantized_only_index(spark, tmp_path):
 
     want = sorted(
         (r.qid, r.rank, r.doc_id, r.score)
-        for r in search_quantized(spark, full_idx, queries, k=10).collect()
+        for r in search_fused(spark, full_idx, qrows, k=10, quantized=True).collect()
     )
     got = sorted(
         (r.qid, r.rank, r.doc_id, r.score)
-        for r in search_quantized(spark, qonly_idx, queries, k=10).collect()
+        for r in search_fused(spark, qonly_idx, qrows, k=10, quantized=True).collect()
     )
     assert got == want
 
-    with pytest.raises(ValueError, match="quantized-only"):
-        search(spark, qonly_idx, queries, k=10)
+    with pytest.raises(ValueError, match="quantized-only.*use quantized=True"):
+        search_fused(spark, qonly_idx, qrows, k=10)
 
 
 def test_bitpack_smaller_on_dense_gaps(spark, tmp_path):

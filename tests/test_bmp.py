@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from splade_spark.operators.bmp import build_bmp_index, search_bmp
 from splade_spark.operators.index_build import build_index
-from splade_spark.operators.index_query import search
+from splade_spark.operators.index_query import search_fused
 from splade_spark.sources.pages import load_documents
 from splade_spark.synth import derive_queries
 
@@ -33,7 +33,7 @@ def test_bmp_matches_exhaustive(spark, built):
     docs = load_documents(spark, SF_SMOKE)
     qrows = [(int(r.qid), r.text) for r in derive_queries(docs).orderBy("qid").collect()]
     want = (
-        search(spark, built, derive_queries(docs), k=K)
+        search_fused(spark, built, qrows, k=K)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
@@ -61,8 +61,7 @@ def test_bmp_skips_doc_blocks_on_skewed_corpus(spark, tmp_path):
     build_bmp_index(spark, idx, doc_block_size=64)
     counts: dict = {}
     got = search_bmp(spark, idx, [(1, "alpha beta")], k=1, debug_counts=counts).toPandas()
-    qdf = spark.createDataFrame([(1, "alpha beta")], "qid long, text string")
-    want = search(spark, idx, qdf, k=1).toPandas()
+    want = search_fused(spark, idx, [(1, "alpha beta")], k=1).toPandas()
     assert got.equals(want)
     assert int(got.doc_id.iloc[0]) == 0
     assert counts["doc_blocks_evaluated"] < counts["doc_blocks_total"] / 2, counts
@@ -113,10 +112,7 @@ def test_bmp_scattered_blocks_fetch_tight(spark, tmp_path, monkeypatch):
     wide: dict = {}
     monkeypatch.setattr(bmp_mod, "_MAX_FETCH_RANGES", 1)
     old = search_bmp(spark, idx, qrows, k=k, debug_counts=wide).toPandas()
-    want = (
-        search(spark, idx, spark.createDataFrame(qrows, "qid long, text string"), k=k)
-        .toPandas()
-    )
+    want = search_fused(spark, idx, qrows, k=k).toPandas()
     cols = ["qid", "doc_id", "score", "rank"]
     key = ["qid", "rank"]
     assert got[cols].sort_values(key).reset_index(drop=True).equals(
@@ -135,30 +131,20 @@ def test_bmp_guard_falls_back_to_fused(spark, built):
     docs = load_documents(spark, SF_SMOKE)
     qrows = [(int(r.qid), r.text) for r in derive_queries(docs).orderBy("qid").collect()][:3]
     got = search_bmp(spark, built, qrows, k=K, term_block_limit=0).toPandas()
-    want = (
-        search(
-            spark,
-            built,
-            spark.createDataFrame(qrows, "qid long, text string"),
-            k=K,
-        )
-        .toPandas()
-    )
+    want = search_fused(spark, built, qrows, k=K).toPandas()
     cols = ["qid", "doc_id", "score", "rank"]
     a = got[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
     b = want[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
     assert a.equals(b)
 
 
-def test_bmp_quantized_matches_search_quantized(spark, built, tmp_path):
+def test_bmp_quantized_matches_fused_quantized(spark, built, tmp_path):
     """Quantized BMP (integer arithmetic, exact certificate) must match
-    search_quantized row-for-row — including on a store_impacts=False
-    index, where it is the only BMP layout available."""
-    from splade_spark.operators.index_query import search_quantized
-
+    search_fused(quantized=True) row-for-row — including on a
+    store_impacts=False index, where it is the only BMP layout
+    available."""
     docs = load_documents(spark, SF_SMOKE)
-    queries = derive_queries(docs)
-    qrows = [(int(r.qid), r.text) for r in queries.orderBy("qid").collect()]
+    qrows = [(int(r.qid), r.text) for r in derive_queries(docs).orderBy("qid").collect()]
 
     qidx = str(tmp_path / "bmpq_idx")
     build_index(
@@ -168,7 +154,7 @@ def test_bmp_quantized_matches_search_quantized(spark, built, tmp_path):
     for idx in (built, qidx):
         build_bmp_index(spark, idx, doc_block_size=64, quantized=True)
         want = (
-            search_quantized(spark, idx, queries, k=K)
+            search_fused(spark, idx, qrows, k=K, quantized=True)
             .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
         )
         got = (
@@ -189,10 +175,7 @@ def test_bmp_missing_table_falls_back(spark, tmp_path):
     qrows = [(int(r.qid), r.text) for r in derive_queries(docs).orderBy("qid").collect()][:3]
     counts: dict = {}
     got = search_bmp(spark, idx, qrows, k=K, debug_counts=counts).toPandas()
-    want = (
-        search(spark, idx, spark.createDataFrame(qrows, "qid long, text string"), k=K)
-        .toPandas()
-    )
+    want = search_fused(spark, idx, qrows, k=K).toPandas()
     cols = ["qid", "doc_id", "score", "rank"]
     a = got[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
     b = want[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
@@ -222,10 +205,7 @@ def test_bmp_block_size_change_rebuilds(spark, tmp_path):
     qrows = [(int(r.qid), r.text) for r in derive_queries(docs).orderBy("qid").collect()][:3]
     counts: dict = {}
     got = search_bmp(spark, idx, qrows, k=K, debug_counts=counts).toPandas()
-    want = (
-        search(spark, idx, spark.createDataFrame(qrows, "qid long, text string"), k=K)
-        .toPandas()
-    )
+    want = search_fused(spark, idx, qrows, k=K).toPandas()
     cols = ["qid", "doc_id", "score", "rank"]
     assert got[cols].sort_values(["qid", "rank"]).reset_index(drop=True).equals(
         want[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
@@ -250,10 +230,7 @@ def test_bmp_commit_without_metadata_rebuilds(spark, tmp_path):
     assert _os.path.exists(meta)
     qrows = [(1, "the data")]
     got = search_bmp(spark, idx, qrows, k=K).toPandas()
-    want = (
-        search(spark, idx, spark.createDataFrame(qrows, "qid long, text string"), k=K)
-        .toPandas()
-    )
+    want = search_fused(spark, idx, qrows, k=K).toPandas()
     cols = ["qid", "doc_id", "score", "rank"]
     assert got[cols].reset_index(drop=True).equals(want[cols].reset_index(drop=True))
 
@@ -280,10 +257,9 @@ def test_append_invalidates_bmp(spark, tmp_path):
     assert not _os.path.isdir(_os.path.join(idx, "bmp"))
     assert not _os.path.isdir(_os.path.join(idx, "bmp_q"))
 
-    queries = derive_queries(docs)
-    qrows = [(int(r.qid), r.text) for r in queries.orderBy("qid").collect()]
+    qrows = [(int(r.qid), r.text) for r in derive_queries(docs).orderBy("qid").collect()]
     want = (
-        search(spark, idx, queries, k=K)
+        search_fused(spark, idx, qrows, k=K)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     counts: dict = {}

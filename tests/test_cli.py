@@ -47,6 +47,16 @@ def test_cli_index_and_query(spark, tmp_path, capsys):
     ]
     assert all(len(line.split(" ")) == 6 for line in lines)
 
+    # plain `query` (exhaustive search_fused) writes --prune's lines:
+    # MaxScore pruning is lossless
+    plain_dir = str(tmp_path / "run_plain")
+    cli.main(
+        ["query", "--index-dir", idx, "--queries", str(qtsv), "--k", "5", "--out", plain_dir]
+    )
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["rows"] == 10
+    assert sorted(spark.read.text(plain_dir).toPandas().value) == sorted(lines)
+
     # the quantized variant runs the same queries through its own engine
     cli.main(
         ["query", "--index-dir", idx, "--queries", str(qtsv), "--k", "5", "--quantized"]

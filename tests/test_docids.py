@@ -38,7 +38,7 @@ def test_reassigned_corpus_indexes_and_searches(spark, tmp_path):
     """The intended pipeline: reassign -> index on new ids -> search;
     results remap to original ids through the (new, orig) dimension."""
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import search
+    from splade_spark.operators.index_query import search_fused
     from splade_spark.synth import derive_queries
 
     docs = load_documents(spark, SF_SMOKE)
@@ -50,8 +50,8 @@ def test_reassigned_corpus_indexes_and_searches(spark, tmp_path):
         n_segments=2,
         n_buckets=8,
     )
-    queries = derive_queries(docs)
-    run = search(spark, idx, queries, k=10)
+    queries = [(int(r.qid), r.text) for r in derive_queries(docs).collect()]
+    run = search_fused(spark, idx, queries, k=10)
     remapped = run.join(
         re.select(F.col("new_doc_id").alias("doc_id"), F.col("doc_id").alias("orig")),
         "doc_id",
@@ -61,7 +61,7 @@ def test_reassigned_corpus_indexes_and_searches(spark, tmp_path):
     build_index(docs.select("doc_id", "text"), idx0, n_segments=2, n_buckets=8)
     want = {
         (r.qid, r.doc_id, r.score)
-        for r in search(spark, idx0, queries, k=10).collect()
+        for r in search_fused(spark, idx0, queries, k=10).collect()
     }
     got = {(r.qid, r.orig, r.score) for r in remapped.collect()}
     assert got == want

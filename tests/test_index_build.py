@@ -15,12 +15,12 @@ from splade_spark.operators.index_build import (
     build_segments,
     finalize_index,
 )
-from splade_spark.operators.index_query import search
+from splade_spark.operators.index_query import search_fused
 from splade_spark.plans.snapshots import Manifest
 from splade_spark.sources.pages import load_documents
 from splade_spark.synth import derive_queries
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, query_rows
 
 K = 10
 
@@ -36,7 +36,7 @@ def built(spark, tmp_path_factory):
 
 def test_index_search_matches_logical(spark, built):
     docs = load_documents(spark, SF_SMOKE)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     want = (
         bm25_run(docs, k=K)
         .toPandas()
@@ -44,7 +44,7 @@ def test_index_search_matches_logical(spark, built):
         .reset_index(drop=True)
     )
     got = (
-        search(spark, built, queries, k=K)
+        search_fused(spark, built, queries, k=K)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -130,31 +130,21 @@ def test_finalize_resumes_per_step(spark, tmp_path):
     man2 = Manifest.load(index_dir)
     assert {"stats", "term_dict", "postings", "index"} <= man2.committed("finalize")
     # resumed index answers queries identically to the logical path
-    queries = derive_queries(docs)
-    got = search(spark, index_dir, queries, k=K).count()
+    queries = query_rows(derive_queries(docs))
+    got = search_fused(spark, index_dir, queries, k=K).count()
     want = bm25_run(docs, k=K).count()
     assert got == want
 
 
-def test_search_fused_matches_search(spark, built):
-    """The fused Arrow kernel (decode + q_tf multiply + per-doc partial
-    agg in one mapInPandas) must equal the join+agg path exactly —
-    scores are 6dp-rounded in both, so partial-sum order differences
-    cannot surface."""
-    from splade_spark.operators.index_query import search, search_fused
-    from splade_spark.sources.pages import load_documents
-    from splade_spark.synth import derive_queries
-
-    index_dir = built
-    qrows = (
-        derive_queries(load_documents(spark, "/root/testdata/sf0.001"))
-        .orderBy("qid")
-        .limit(4)
-        .collect()
-    )
-    qdf = spark.createDataFrame([(r.qid, r.text) for r in qrows], "qid long, text string")
-    base = search(spark, index_dir, qdf, k=10).collect()
-    fused = search_fused(spark, index_dir, [(r.qid, r.text) for r in qrows], k=10).collect()
+def test_search_fused_driver_matches_doc_route(spark, built):
+    """The driver route (one numpy batch scorer) must equal the
+    doc-major Spark plan (doc-range exchange + shard-local scoring) on
+    a multi-block, multi-salt index — scores are 6dp-rounded in both,
+    so partial-sum order differences cannot surface."""
+    queries = derive_queries(load_documents(spark, SF_SMOKE))
+    qrows = query_rows(queries.orderBy("qid").limit(4))
+    base = search_fused(spark, built, qrows, k=10, strategy="doc").collect()
+    fused = search_fused(spark, built, qrows, k=10).collect()
     key = lambda r: (r.qid, r.rank, r.doc_id, round(r.score, 6))
     assert sorted(map(key, fused)) == sorted(map(key, base))
     assert len(fused) > 0
@@ -192,7 +182,7 @@ def test_finalize_recovers_from_term_dict_swap_crash(spark, tmp_path, monkeypatc
     finalize_index(spark, idx, n_buckets=4)
     assert os.path.exists(os.path.join(idx, "term_dict"))
     assert not os.path.exists(os.path.join(idx, "term_dict") + "_bak")
-    got = search(spark, idx, derive_queries(docs), k=5)
+    got = search_fused(spark, idx, query_rows(derive_queries(docs)), k=5)
     assert got.count() > 0
 
 
@@ -215,13 +205,13 @@ def test_append_index_equals_full_rebuild(spark, tmp_path):
     build_index(part_a, inc_idx, n_segments=2, n_buckets=8)
     append_index(part_b, inc_idx, n_segments=2)
 
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     want = (
-        search(spark, full_idx, queries, k=10)
+        search_fused(spark, full_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
-        search(spark, inc_idx, queries, k=10)
+        search_fused(spark, inc_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)
@@ -281,13 +271,13 @@ def test_append_resumes_with_same_epoch(spark, tmp_path, monkeypatch):
 
     full_idx = str(tmp_path / "resume_full_idx")
     build_index(docs, full_idx, n_segments=2, n_buckets=8)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     want = (
-        search(spark, full_idx, queries, k=10)
+        search_fused(spark, full_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)
@@ -339,13 +329,13 @@ def test_append_resumes_through_finalize_crash(spark, tmp_path, monkeypatch):
 
     full_idx = str(tmp_path / "rf_full_idx")
     build_index(docs, full_idx, n_segments=2, n_buckets=8)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     want = (
-        search(spark, full_idx, queries, k=10)
+        search_fused(spark, full_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)
@@ -411,7 +401,7 @@ def test_exact_placement_machinery_matches_bypass(spark, tmp_path, monkeypatch):
     from splade_spark.synth import derive_queries
 
     docs = load_documents(spark, SF_SMOKE)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
 
     idx_a = str(tmp_path / "idx_bypass")
     build_index(docs, idx_a, n_segments=2, n_buckets=8, block_size=16, salt_unit=64)
@@ -420,8 +410,8 @@ def test_exact_placement_machinery_matches_bypass(spark, tmp_path, monkeypatch):
     idx_b = str(tmp_path / "idx_machinery")
     build_index(docs, idx_b, n_segments=2, n_buckets=8, block_size=16, salt_unit=64)
 
-    a = search(spark, idx_a, queries, k=K).toPandas().sort_values(["qid", "rank"])
-    b = search(spark, idx_b, queries, k=K).toPandas().sort_values(["qid", "rank"])
+    a = search_fused(spark, idx_a, queries, k=K).toPandas().sort_values(["qid", "rank"])
+    b = search_fused(spark, idx_b, queries, k=K).toPandas().sort_values(["qid", "rank"])
     assert (a.qid.values == b.qid.values).all()
     assert (a.doc_id.values == b.doc_id.values).all()
     assert (abs(a.score.values - b.score.values) < 1e-9).all()
@@ -463,8 +453,8 @@ def test_packed_key_overflow_falls_back_to_range_partitioner(
     idx = str(tmp_path / "idx_overflow")
     build_index(docs, idx, n_segments=2, n_buckets=8, block_size=16, salt_unit=64)
 
-    queries = derive_queries(docs)
-    got = search(spark, idx, queries, k=K).toPandas().sort_values(["qid", "rank"])
+    queries = query_rows(derive_queries(docs))
+    got = search_fused(spark, idx, queries, k=K).toPandas().sort_values(["qid", "rank"])
     want = (
         bm25_run(docs, k=K).toPandas().sort_values(["qid", "rank"])
     )
@@ -504,11 +494,10 @@ def test_block_id_beyond_int32(spark, tmp_path):
     assert dict(post.dtypes)["block_id"] == "bigint"
     assert post.agg({"block_id": "max"}).collect()[0][0] > (1 << 31)
 
-    queries = spark.createDataFrame(
-        [(0, "hot w3"), (1, "hot w42")], "qid long, text string"
-    )
+    qrows = [(0, "hot w3"), (1, "hot w42")]
+    queries = spark.createDataFrame(qrows, "qid long, text string")
     got = (
-        search(spark, idx, queries, k=K)
+        search_fused(spark, idx, qrows, k=K)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)

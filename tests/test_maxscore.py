@@ -14,7 +14,7 @@ from __future__ import annotations
 import pytest
 
 from splade_spark.operators.index_build import build_index
-from splade_spark.operators.index_query import search
+from splade_spark.operators.index_query import search_fused
 from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.sources.pages import load_documents
 from splade_spark.synth import derive_queries
@@ -34,15 +34,14 @@ def built(spark, tmp_path_factory):
 
 def test_maxscore_lossless_and_prunes(spark, built):
     docs = load_documents(spark, SF_SMOKE)
-    queries = derive_queries(docs)
+    qrows = [(int(r.qid), r.text) for r in derive_queries(docs).collect()]
     want = (
-        search(spark, built, queries, k=K)
+        search_fused(spark, built, qrows, k=K)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
     counts: dict = {}
-    qrows = [(int(r.qid), r.text) for r in queries.collect()]
     got = (
         search_maxscore_fused(spark, built, qrows, k=K, debug_counts=counts)
         .toPandas()
@@ -70,10 +69,9 @@ def test_maxscore_prunes_skewed_corpus(spark, tmp_path):
     index_dir = str(tmp_path / "skew_idx")
     build_index(docs, index_dir, n_segments=1, n_buckets=4, block_size=8, salt_unit=64)
     qrows = [(1, "alpha beta")]
-    qdf = spark.createDataFrame(qrows, "qid long, text string")
     counts: dict = {}
     got = search_maxscore_fused(spark, index_dir, qrows, k=1, debug_counts=counts).toPandas()
-    want = search(spark, index_dir, qdf, k=1).toPandas()
+    want = search_fused(spark, index_dir, qrows, k=1).toPandas()
     assert got.equals(want)
     assert int(got.doc_id.iloc[0]) == 0
     assert counts["blocks_kept"] < counts["blocks_total"] / 2, counts
@@ -81,8 +79,7 @@ def test_maxscore_prunes_skewed_corpus(spark, tmp_path):
 
 def test_maxscore_single_term_queries(spark, built):
     qrows = [(1, "the"), (2, "zzznotaterm"), (3, "spark table")]
-    qdf = spark.createDataFrame(qrows, "qid long, text string")
-    want = search(spark, built, qdf, k=K).toPandas()
+    want = search_fused(spark, built, qrows, k=K).toPandas()
     got = search_maxscore_fused(spark, built, qrows, k=K).toPandas()
     w = want.sort_values(["qid", "rank"]).reset_index(drop=True)
     g = got.sort_values(["qid", "rank"]).reset_index(drop=True)

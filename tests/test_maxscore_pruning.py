@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from splade_spark.operators.index_build import build_index
-from splade_spark.operators.index_query import search
+from splade_spark.operators.index_query import search_fused
 from splade_spark.operators.maxscore import (
     DRIVER_POSTING_LIMIT,
     search_maxscore_fused,
@@ -57,8 +57,7 @@ def test_fused_maxscore_matches_and_prunes(spark, skewed_index):
     common term's low-dl docs concentrate its high impacts in few
     blocks; the rest prune against the floor)."""
     for qtext in ("rare common", "common"):
-        queries = spark.createDataFrame([(1, qtext)], "qid long, text string")
-        exhaustive = search(spark, skewed_index, queries, k=10).collect()
+        exhaustive = search_fused(spark, skewed_index, [(1, qtext)], k=10).collect()
         # driver fast path (default) AND the distributed pruned-scan
         # branch (forced with driver_posting_limit=0) must both match
         for limit in (DRIVER_POSTING_LIMIT, 0):
@@ -124,8 +123,7 @@ def test_fused_prunes_with_nonmonotone_champion_order(spark, scattered_index):
     assert counts["blocks_total"] > 50, counts
     assert counts["blocks_kept"] / counts["blocks_total"] < 0.5, counts
 
-    qdf = spark.createDataFrame(queries, "qid long, text string")
-    exhaustive = search(spark, scattered_index, qdf, k=10).collect()
+    exhaustive = search_fused(spark, scattered_index, queries, k=10).collect()
     assert {(r.doc_id, r.score, r.rank) for r in fused} == {
         (r.doc_id, r.score, r.rank) for r in exhaustive
     }
@@ -168,8 +166,7 @@ def test_fused_guard_falls_back_before_postings_metadata(
     ).collect()
     assert counts["route"] == "fused_fallback", counts
     # fell back through the exhaustive fused path and still answered
-    qdf = spark.createDataFrame(queries, "qid long, text string")
-    exhaustive = search(spark, skewed_index, qdf, k=10).collect()
+    exhaustive = search_fused(spark, skewed_index, queries, k=10).collect()
     assert {(r.doc_id, r.score, r.rank) for r in got} == {
         (r.doc_id, r.score, r.rank) for r in exhaustive
     }
@@ -201,10 +198,9 @@ def test_uniform_candidates_knife_edge_lossless(spark, tmp_path_factory):
         ).alias("text"),
     )
     build_index(docs, idx, n_segments=2)
-    queries = spark.createDataFrame([(1, cand)], "qid long, text string")
     want = {
         (r.doc_id, r.score, r.rank)
-        for r in search(spark, idx, queries, k=10).collect()
+        for r in search_fused(spark, idx, [(1, cand)], k=10).collect()
     }
     assert len(want) >= 10
     for limit in (DRIVER_POSTING_LIMIT, 0):
@@ -269,12 +265,11 @@ def test_driver_and_spark_routes_identical_on_dense_queries(spark, zipf_index, k
     """A head-term query keeps far more than 256 blocks but little
     driver work, so the default limit answers it on the driver. Driver
     route, forced Spark route (driver_posting_limit=0) and exhaustive
-    search return identical (qid, doc_id, score, rank) on this shape,
+    search_fused return identical (qid, doc_id, score, rank) on this shape,
     for one query and a 3-query call."""
     singles_work = 0
     for qs in [HEAD_QUERIES[:1], HEAD_QUERIES[1:2], HEAD_QUERIES[2:], HEAD_QUERIES]:
-        qdf = spark.createDataFrame(qs, "qid long, text string")
-        want = _rows(search(spark, zipf_index, qdf, k=k).collect())
+        want = _rows(search_fused(spark, zipf_index, qs, k=k).collect())
         assert len(want) == len(qs) * k
         by_route = {}
         for limit in (DRIVER_POSTING_LIMIT, 0):
@@ -309,9 +304,7 @@ def test_fused_driver_path_block_ids_beyond_32_bits(spark, tmp_path_factory):
     post = spark.read.parquet(f"{idx}/postings")
     assert post.agg({"block_id": "max"}).collect()[0][0] > (1 << 32)
     qs = [(1, "hot w3"), (2, "hot")]
-    want = _rows(
-        search(spark, idx, spark.createDataFrame(qs, "qid long, text string"), k=100).collect()
-    )
+    want = _rows(search_fused(spark, idx, qs, k=100).collect())
     for limit in (DRIVER_POSTING_LIMIT, 0):
         got = search_maxscore_fused(spark, idx, qs, k=100, driver_posting_limit=limit)
         assert _rows(got.collect()) == want, limit

@@ -1,9 +1,10 @@
 """Property-based rank identity: random tiny corpora (duplicate texts
 => exact score ties; tiny vocab => hot terms; tiny block/salt sizes =>
 multi-block multi-salt encodes) through the FULL compressed path
-(build_index -> search / search_fused) must match the numpy oracle
-that replicates the reference scorer (task/evaluator.py:152-180),
-rank-for-rank under the pinned (-score, doc_id) tie rule."""
+(build_index -> search_fused and the pruned routes) must match the
+numpy oracle that replicates the reference scorer
+(task/evaluator.py:152-180), rank-for-rank under the pinned
+(-score, doc_id) tie rule."""
 
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ from hypothesis import strategies as st
 
 from splade_spark.operators.bmp import build_bmp_index, search_bmp
 from splade_spark.operators.index_build import build_index
-from splade_spark.operators.index_query import search, search_fused
+from splade_spark.operators.index_query import search_fused
 from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.oracle import OracleIndex
 
@@ -57,7 +58,6 @@ def test_compressed_paths_match_oracle(spark, corpus, qtexts, gap_codec):
     )
 
     qrows = [(100 + i, t) for i, t in enumerate(qtexts)]
-    qdf = spark.createDataFrame(qrows, "qid long, text string")
 
     want = {qid: oracle.score_query(text, K) for qid, text in qrows}
 
@@ -66,7 +66,6 @@ def test_compressed_paths_match_oracle(spark, corpus, qtexts, gap_codec):
     build_bmp_index(spark, index_dir, doc_block_size=8)
 
     for label, run in [
-        ("search", search(spark, index_dir, qdf, k=K)),
         ("fused", search_fused(spark, index_dir, qrows, k=K)),
         ("maxscore_fused", search_maxscore_fused(spark, index_dir, qrows, k=K)),
         ("bmp", search_bmp(spark, index_dir, qrows, k=K)),

@@ -1,8 +1,9 @@
 """Property-based identity for the QUANTIZED scoring path: random tiny
-corpora through build_index -> search_quantized must match a numpy
-oracle computing integer sum(q_w * d_w) over rint-quantized impacts —
-the arithmetic PISA runs on the reference's exported index
-(index2pisa.py:42-48 + inference_q_SPLADE.py:13,60).
+corpora through build_index -> search_fused(quantized=True) must match
+the numpy oracle's integer sum(q_w * d_w) over rint-quantized impacts
+(``OracleIndex.score_query_quantized``) — the arithmetic PISA runs on
+the reference's exported index (index2pisa.py:42-48 +
+inference_q_SPLADE.py:13,60).
 
 Integer scores make this check EXACT (no float rounding tolerance):
 any disagreement in quantization, decode, or accumulation is a hard
@@ -12,16 +13,13 @@ mismatch.
 from __future__ import annotations
 
 import tempfile
-from collections import Counter
 
-import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from splade_spark import DOC_SCALE, QUERY_SCALE
 from splade_spark.operators.index_build import build_index
-from splade_spark.operators.index_query import search_quantized
-from splade_spark.oracle import OracleIndex, tokenize
+from splade_spark.operators.index_query import search_fused
+from splade_spark.oracle import OracleIndex
 
 WORDS = ["aa", "bb", "cc", "dd", "ee", "ff"]
 doc_text = st.lists(st.sampled_from(WORDS), min_size=1, max_size=12).map(" ".join)
@@ -33,22 +31,6 @@ query_st = st.lists(st.sampled_from(WORDS + ["zz"]), min_size=1, max_size=4).map
 )
 
 K = 5
-
-
-def quantized_oracle(oracle: OracleIndex, text: str, k: int):
-    """[(doc_id, int_score)] by (-score, doc_id), scores > 0."""
-    acc: Counter = Counter()
-    for term, q_tf in Counter(tokenize(text)).items():
-        q_w = min(q_tf * QUERY_SCALE, 255)
-        if term in oracle.postings:
-            pos, ws = oracle.postings[term]
-            d_w = np.clip(np.rint(ws * DOC_SCALE), 0, 255).astype(np.int64)
-            for p, w in zip(pos, d_w):
-                acc[oracle.doc_ids[p]] += q_w * int(w)
-    ranked = sorted(
-        ((d, s) for d, s in acc.items() if s > 0), key=lambda p: (-p[1], p[0])
-    )
-    return ranked[:k]
 
 
 @settings(
@@ -64,11 +46,10 @@ def test_quantized_search_matches_integer_oracle(spark, corpus, qtexts):
     build_index(docs, index_dir, n_segments=2, n_buckets=4, block_size=4, salt_unit=8)
 
     qrows = [(100 + i, t) for i, t in enumerate(qtexts)]
-    qdf = spark.createDataFrame(qrows, "qid long, text string")
-    run = search_quantized(spark, index_dir, qdf, k=K).collect()
+    run = search_fused(spark, index_dir, qrows, k=K, quantized=True).collect()
 
     got: dict[int, list[tuple[int, int]]] = {qid: [] for qid, _ in qrows}
     for r in sorted(run, key=lambda r: (r.qid, r.rank)):
-        got[int(r.qid)].append((int(r.doc_id), int(r.score)))
+        got[int(r.qid)].append((int(r.doc_id), r.score))
     for qid, text in qrows:
-        assert got[qid] == quantized_oracle(oracle, text, K), (qid, text)
+        assert got[qid] == oracle.score_query_quantized(text, K), (qid, text)

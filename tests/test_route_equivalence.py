@@ -1,9 +1,10 @@
 """Cross-route equivalence: ``search_fused``'s three routes (driver,
 term-major, doc-major), ``search_maxscore_fused``'s driver route (same
 batch scorer), float ``search_bmp`` and the numpy oracle return
-identical (qid, doc_id, score, rank) on small seeded corpora, and
-quantized ``search_bmp`` returns ``search_quantized``'s rows, so any
-route can be re-routed or deleted safely.
+identical (qid, doc_id, score, rank) on small seeded corpora; with
+``quantized=True`` the three ``search_fused`` routes, quantized
+``search_bmp`` and the integer oracle do too, so any route can be
+re-routed or deleted safely.
 
 The corpora carry the shapes where routes could drift apart: duplicate
 documents (exact score ties, including at the k-th cut), duplicate
@@ -18,7 +19,7 @@ import pytest
 from splade_spark.operators import index_query
 from splade_spark.operators.bmp import build_bmp_index, search_bmp
 from splade_spark.operators.index_build import append_index, build_index
-from splade_spark.operators.index_query import search_fused, search_quantized
+from splade_spark.operators.index_query import search_fused
 from splade_spark.operators.maxscore import search_maxscore_fused
 from splade_spark.oracle import OracleIndex
 
@@ -92,25 +93,32 @@ def _rows(got) -> list[tuple]:
     )
 
 
-def _oracle_rows(oracle, qrows, k) -> list[tuple]:
+def _oracle_rows(oracle, qrows, k, quantized=False) -> list[tuple]:
+    score = oracle.score_query_quantized if quantized else oracle.score_query
     return sorted(
         (qid, d, s, r)
         for qid, text in qrows
-        for r, (d, s) in enumerate(oracle.score_query(text, k), start=1)
+        for r, (d, s) in enumerate(score(text, k), start=1)
     )
 
 
 @pytest.mark.parametrize("k", KS)
 def test_routes_match_oracle(spark, corpus, k):
     path, oracle, qrows = corpus
+    for quantized in (False, True):
+        want = _oracle_rows(oracle, qrows, k, quantized)
+        assert want
+        by_route = {}
+        for strategy in ("auto", "term", "doc"):
+            counts: dict = {}
+            got = search_fused(
+                spark, path, qrows, k=k, strategy=strategy, debug_counts=counts,
+                quantized=quantized,
+            )
+            assert dict(got.dtypes)["score"] == ("bigint" if quantized else "double")
+            by_route[counts["route"]] = _rows(got)
+        assert by_route == {"driver": want, "term": want, "doc": want}, quantized
     want = _oracle_rows(oracle, qrows, k)
-    assert want
-    by_route = {}
-    for strategy in ("auto", "term", "doc"):
-        counts: dict = {}
-        got = search_fused(spark, path, qrows, k=k, strategy=strategy, debug_counts=counts)
-        by_route[counts["route"]] = _rows(got)
-    assert by_route == {"driver": want, "term": want, "doc": want}
     # the MaxScore driver route shares the batch scorer
     counts = {}
     got = search_maxscore_fused(spark, path, qrows, k=k, debug_counts=counts, as_local=True)
@@ -124,12 +132,11 @@ def test_routes_match_oracle(spark, corpus, k):
 
 def test_bmp_matches_oracle(spark, corpus):
     """Float BMP returns the oracle's rows and quantized BMP returns
-    ``search_quantized``'s rows at every k. BMP's stop certificate
-    depends on k; the quantized reference runs once, since its top-k
-    is the rank <= k prefix of its top-1000."""
+    ``search_fused(quantized=True)``'s rows at every k. BMP's stop
+    certificate depends on k; the quantized reference runs once, since
+    its top-k is the rank <= k prefix of its top-1000."""
     path, oracle, qrows = corpus
-    qdf = spark.createDataFrame(qrows, "qid long, text string")
-    quant = _rows(search_quantized(spark, path, qdf, k=max(KS)))
+    quant = _rows(search_fused(spark, path, qrows, k=max(KS), quantized=True))
     for k in KS:
         counts: dict = {}
         got = search_bmp(spark, path, qrows, k=k, debug_counts=counts)
@@ -145,8 +152,10 @@ def test_empty_and_oov_batches(spark, corpus):
         counts: dict = {}
         assert _rows(search_fused(spark, path, qrows, k=10, debug_counts=counts)) == []
         assert counts == {"route": "driver", "driver_work": 0, "postings_read": 0}
-        for strategy in ("term", "doc"):
+        for strategy in ("auto", "term", "doc"):
             assert _rows(search_fused(spark, path, qrows, k=10, strategy=strategy)) == []
+            got = search_fused(spark, path, qrows, k=10, strategy=strategy, quantized=True)
+            assert _rows(got) == [] and dict(got.dtypes)["score"] == "bigint"
         assert _rows(search_maxscore_fused(spark, path, qrows, k=10, as_local=True)) == []
         for quantized in (False, True):
             assert _rows(search_bmp(spark, path, qrows, k=10, quantized=quantized)) == []

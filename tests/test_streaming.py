@@ -7,7 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 from splade_spark.operators.index_build import build_index, finalize_index
-from splade_spark.operators.index_query import search
+from splade_spark.operators.index_query import search_fused
 from splade_spark.sources.pages import documents_to_pages, load_documents
 from splade_spark.streaming.incremental import (
     ingest_stats_stream,
@@ -15,7 +15,7 @@ from splade_spark.streaming.incremental import (
 )
 from splade_spark.synth import derive_queries
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, query_rows
 
 
 def test_stream_build_matches_batch(spark, tmp_path):
@@ -39,15 +39,15 @@ def test_stream_build_matches_batch(spark, tmp_path):
     batch_idx = str(tmp_path / "batch_idx")
     build_index(docs, batch_idx, n_segments=2, n_buckets=8)
 
-    queries = derive_queries(load_documents(spark, SF_SMOKE))
+    queries = query_rows(derive_queries(load_documents(spark, SF_SMOKE)))
     a = (
-        search(spark, stream_idx, queries, k=10)
+        search_fused(spark, stream_idx, queries, k=10)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
     )
     b = (
-        search(spark, batch_idx, queries, k=10)
+        search_fused(spark, batch_idx, queries, k=10)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -82,7 +82,6 @@ def test_stream_append_extends_finalized_index(spark, tmp_path):
     stream_append drain must equal a full rebuild over the union, and
     a drain with no new files is a no-op that leaves it intact."""
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import search
     from splade_spark.sources.pages import load_documents
     from splade_spark.streaming.incremental import stream_append
     from splade_spark.synth import derive_queries
@@ -103,13 +102,13 @@ def test_stream_append_extends_finalized_index(spark, tmp_path):
 
     full_idx = str(tmp_path / "stream_full_idx")
     build_index(docs, full_idx, n_segments=2, n_buckets=8)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     want = (
-        search(spark, full_idx, queries, k=10)
+        search_fused(spark, full_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)
@@ -117,7 +116,7 @@ def test_stream_append_extends_finalized_index(spark, tmp_path):
     # nothing new -> no-op, index still answers identically
     assert stream_append(spark, inbox, idx) == 0
     again = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert again.equals(want)
@@ -167,13 +166,13 @@ def test_stream_append_repairs_crashed_drain_with_new_files(spark, tmp_path, mon
 
     full_idx = str(tmp_path / "crash_full_idx")
     build_index(docs, full_idx, n_segments=2, n_buckets=8)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     want = (
-        search(spark, full_idx, queries, k=10)
+        search_fused(spark, full_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)
@@ -186,7 +185,6 @@ def test_stream_append_defers_small_drains_then_flushes(spark, tmp_path):
     (min_drain_frac=0) folds the whole backlog into one finalize that
     equals a full rebuild over the union."""
     from splade_spark.operators.index_build import build_index
-    from splade_spark.operators.index_query import search
     from splade_spark.sources.pages import load_documents
     from splade_spark.streaming.incremental import stream_append
     from splade_spark.synth import derive_queries
@@ -199,9 +197,9 @@ def test_stream_append_defers_small_drains_then_flushes(spark, tmp_path):
 
     idx = str(tmp_path / "defer_idx")
     build_index(part_a, idx, n_segments=2, n_buckets=8)
-    queries = derive_queries(docs)
+    queries = query_rows(derive_queries(docs))
     before = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
 
@@ -212,7 +210,7 @@ def test_stream_append_defers_small_drains_then_flushes(spark, tmp_path):
     n = stream_append(spark, inbox, idx, min_drain_frac=0.9)
     assert n > 0
     deferred = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert deferred.equals(before)  # still serving the old snapshot
@@ -222,11 +220,11 @@ def test_stream_append_defers_small_drains_then_flushes(spark, tmp_path):
     full_idx = str(tmp_path / "defer_full_idx")
     build_index(docs, full_idx, n_segments=2, n_buckets=8)
     want = (
-        search(spark, full_idx, queries, k=10)
+        search_fused(spark, full_idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     got = (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     assert got.equals(want)
@@ -234,7 +232,7 @@ def test_stream_append_defers_small_drains_then_flushes(spark, tmp_path):
     # and a repeat call stays a covered no-op
     assert stream_append(spark, inbox, idx, min_drain_frac=0.9) == 0
     assert (
-        search(spark, idx, queries, k=10)
+        search_fused(spark, idx, queries, k=10)
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     ).equals(want)
 
